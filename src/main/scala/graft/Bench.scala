@@ -324,9 +324,8 @@ object Bench {
         p
       } else "BENCH_LOCAL.json"
     }
-    try java.nio.file.Files.write(
+    java.nio.file.Files.write(
       java.nio.file.Paths.get(outFile), (fullJson + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
     // compact stdout line: slowest 25 keys only (the rest are sub-second
     // scheduling-floor keys), headline fields last; ~900 chars total so the
     // whole line survives inside the tail window alongside sbt's epilogue
@@ -341,9 +340,8 @@ object Bench {
     // sweeps only — a partial BENCH_ONLY run must not masquerade as one.
     if (only.isEmpty) {
       val compactAll = s"""{"full":"$outFile","queries":$qs,"errors":$errs,"n_contended":${contended.size},"n_unstable":${unstable.size},"n_regressed":${regressed.size},"n_collect_violations":${collectViolations.size},"contended_run":$runContended,"sf":"$sfDir","n_queries":${ok.size},"n_errors":$nErrors,"per_key_mean":${r3(if (ok.nonEmpty) total / ok.size else 0.0)},"unit":"sec","metric":"total","value":${r3(total)}}"""
-      try java.nio.file.Files.write(
+      java.nio.file.Files.write(
         java.nio.file.Paths.get("BENCH_COMPACT.json"), (compactAll + "\n").getBytes("UTF-8"))
-      catch { case _: Throwable => () }
     }
     if (collectViolations.nonEmpty)
       System.err.println(s"[bench] COLLECT-AUDIT VIOLATIONS (> $collectCap rows to the driver): ${collectViolations.mkString(", ")}")

@@ -27,20 +27,19 @@ object Bfs {
   /** General engine: `edges` (src, dst) directed; the source is the
     * minimum src id (derived in-plan — no driver collect). Returns
     * (id, depth) for every node within `iters` hops. */
-  def run(edgesIn: DataFrame, iters: Int = maxDepth,
-          cp: Checkpointer = Checkpointer.Local): DataFrame = {
-    val edges = cp(edgesIn.select(col("src"), col("dst")))
-    var visited = cp(edges.agg(min(col("src")).as("id"))
+  def run(edgesIn: DataFrame, iters: Int = maxDepth): DataFrame = {
+    val edges = Checkpointer(edgesIn.select(col("src"), col("dst")))
+    var visited = Checkpointer(edges.agg(min(col("src")).as("id"))
       .select(col("id"), lit(0).as("depth")))
     var frontier = visited.select(col("id"))
     for (k <- 1 to iters) {
-      val next = cp(edges
+      val next = Checkpointer(edges
         .join(frontier.withColumnRenamed("id", "src"), Seq("src"))
         .select(col("dst").as("id")).distinct()
         .join(visited.select(col("id")), Seq("id"), "left_anti"))
       // r16: `visited` stays a LAZY union of the already-checkpointed
-      // layer frames — materializing the union per round (the old
-      // cp(grown)) re-wrote the whole visited set every round, an
+      // layer frames — materializing the union per round (checkpointing
+      // the grown set) re-wrote the whole visited set every round, an
       // O(|V|) copy per hop that the anti-join and final output read
       // just as well from the layer blocks (every union leaf is its
       // own checkpoint root, so no recompute lurks and the plan stays

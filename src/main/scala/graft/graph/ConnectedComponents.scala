@@ -21,11 +21,11 @@ import graft.plans.Checkpointer
   * of anything unbounded, no driver-side data beyond the one-row
   * convergence probe. Per-round state is lineage-truncated through a
   * [[Checkpointer]] so plans don't grow with iterations (the standard
-  * Spark iterative-algorithm shape; GraphX/GraphFrames do the same) —
-  * pass [[Checkpointer.Reliable]] on clusters where executor loss is
-  * routine. For adversarial graphs with large diameters, use
-  * [[runStar]] (large-star/small-star, O(log n) rounds); for dedup
-  * graphs min-propagation converges faster in practice.
+  * Spark iterative-algorithm shape; GraphX/GraphFrames do the same),
+  * reliable wherever the session has a checkpoint directory set. For
+  * adversarial graphs with large diameters, use [[runStar]]
+  * (large-star/small-star, O(log n) rounds); for dedup graphs
+  * min-propagation converges faster in practice.
   */
 object ConnectedComponents {
 
@@ -43,17 +43,16 @@ object ConnectedComponents {
     * worse than two short materialized rounds. One hop per
     * materialization wins.
     */
-  def run(edgesIn: DataFrame, nodes: DataFrame, maxIter: Int = 30,
-          cp: Checkpointer = Checkpointer.Local): DataFrame = {
-    val edges = cp(edgesIn.select(col("src"), col("dst"))
+  def run(edgesIn: DataFrame, nodes: DataFrame, maxIter: Int = 30): DataFrame = {
+    val edges = Checkpointer(edgesIn.select(col("src"), col("dst"))
       .union(edgesIn.select(col("dst").as("src"), col("src").as("dst"))))
     // Only nodes that touch an edge need propagation; everything else is
     // a singleton cluster and bypasses the loop entirely. In a dedup
     // graph duplicates are a small fraction of the corpus, so the
     // iterated set is orders of magnitude smaller than `nodes`.
-    val active = cp(edges.select(col("src").as("id")).distinct())
+    val active = Checkpointer(edges.select(col("src").as("id")).distinct())
     // round-0 labels are the IDENTITY projection of the checkpointed
-    // active set — materializing them again (r16 shape: cp(labels))
+    // active set — materializing them again (r16 shape: Checkpointer(labels))
     // was a redundant job; every consumer of labels₀ reads active's
     // blocks through a zero-cost projection (r17, guide §2.4)
     var labels = active.select(col("id"), col("id").as("lbl"))
@@ -93,14 +92,15 @@ object ConnectedComponents {
         .groupBy(col("dst"))
         .agg(min(col("lbl")).as("nbr_lbl")))
         .withColumnRenamed("dst", "id")
-      val next = cp(labels
+      val next = Checkpointer(labels
         .join(nbrMin, Seq("id"), "left")
         .select(col("id"),
           least(col("lbl"), coalesce(col("nbr_lbl"), col("lbl"))).as("lbl")))
       val newSum = lblSum(next)
-      // round N is materialized (cp is eager) — round N−1's blocks are
-      // now unreachable from any plan; free them instead of waiting for
-      // RDD GC (they otherwise pile up across rounds and bench reps)
+      // round N is materialized (the checkpoint is eager) — round N−1's
+      // blocks are now unreachable from any plan; free them instead of
+      // waiting for RDD GC (they otherwise pile up across rounds and
+      // bench reps)
       Checkpointer.release(labels)
       labels = next
       done = newSum.compareTo(prevSum) == 0
@@ -146,17 +146,16 @@ object ConnectedComponents {
     *
     * Same signature and output contract as [[run]]: (id, lbl) with
     * lbl = min node id of the component, singletons included. */
-  def runStar(edgesIn: DataFrame, nodes: DataFrame, maxIter: Int = 30,
-              cp: Checkpointer = Checkpointer.Local): DataFrame =
-    runStarRounds(edgesIn, nodes, maxIter, cp)._1
+  def runStar(edgesIn: DataFrame, nodes: DataFrame, maxIter: Int = 30): DataFrame =
+    runStarRounds(edgesIn, nodes, maxIter)._1
 
   /** [[runStar]] plus the number of rounds executed (exposed so the
     * O(log n) convergence claim is testable, not asserted). */
-  def runStarRounds(edgesIn: DataFrame, nodes: DataFrame, maxIter: Int = 30,
-                    cp: Checkpointer = Checkpointer.Local): (DataFrame, Int) = {
-    val initial = cp(canon(edgesIn))
+  def runStarRounds(edgesIn: DataFrame, nodes: DataFrame,
+                    maxIter: Int = 30): (DataFrame, Int) = {
+    val initial = Checkpointer(canon(edgesIn))
     // active = nodes touching an edge (for singleton bypass, as in run())
-    val active = cp(initial.select(col("src").as("id"))
+    val active = Checkpointer(initial.select(col("src").as("id"))
       .union(initial.select(col("dst").as("id"))).distinct())
 
     def probe(df: DataFrame): (Long, java.math.BigDecimal) = {
@@ -192,7 +191,7 @@ object ConnectedComponents {
         .filter(col("v") =!= col("m"))
         .select(col("m").as("src"), col("v").as("dst"))
         .union(smins.select(col("m").as("src"), col("u").as("dst")))
-      val nextEdges = cp(canon(small))
+      val nextEdges = Checkpointer(canon(small))
       val cur = probe(nextEdges)
       // superseded round state — free its blocks (see run())
       Checkpointer.release(edges)

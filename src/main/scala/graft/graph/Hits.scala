@@ -44,9 +44,8 @@ object Hits {
   /** General engine: `edges` (src, dst) directed, multi-edges = weight.
     * Returns (id, hub) for sources and (id, auth) for destinations as
     * two frames; scores are exact DECIMAL(28,0) integers. */
-  def run(edgesIn: DataFrame, iters: Int = iterations,
-          cp: Checkpointer = Checkpointer.Local): (DataFrame, DataFrame) = {
-    val edges = cp(edgesIn.select(col("src"), col("dst")))
+  def run(edgesIn: DataFrame, iters: Int = iterations): (DataFrame, DataFrame) = {
+    val edges = Checkpointer(edgesIn.select(col("src"), col("dst")))
     // a0 = 1 for every authority, so h1 is just the (weighted)
     // out-degree — one aggregate, no join needed for round 1
     var hub = edges.groupBy(col("src"))

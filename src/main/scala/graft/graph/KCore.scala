@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.plans.Checkpointer
 
 /** Bounded-round k-core peeling (Batagelj-Zaveršnik by synchronous
   * rounds — the degeneracy-ordering primitive behind community cores,
@@ -63,24 +64,20 @@ object KCore {
     (e2, keep)
   }
 
-  def qKCore(spark: SparkSession, dir: String): DataFrame =
-    qKCoreWith(spark, dir, graft.plans.Checkpointer.Local)
-
   /** Each round's survivor edge set is checkpointed before it is
     * consumed three ways (its ledger row, the next round's degree
     * aggregate, and the next round's semi-join probe) — without the
     * cut, round r's subtree re-runs the expensive co-order self-join
     * r times and the composed plan grows geometrically (measured:
     * 7.3 s → 1.9 s at sf0.1). The standard iterative-graph device
-    * here (CC/PageRank); pass [[graft.plans.Checkpointer.Reliable]]
-    * on preemptible clusters. */
-  def qKCoreWith(spark: SparkSession, dir: String,
-      cp: graft.plans.Checkpointer): DataFrame = {
-    var edges = cp(coOrderEdges(spark, dir))
+    * here (CC/PageRank); [[Checkpointer]] makes it reliable wherever
+    * a checkpoint directory is set. */
+  def qKCore(spark: SparkSession, dir: String): DataFrame = {
+    var edges = Checkpointer(coOrderEdges(spark, dir))
     var ledger: DataFrame = null
     for (r <- 1 to kcRounds) {
       val (e2raw, _) = peel(edges, kcK)
-      val e2 = cp(e2raw)
+      val e2 = Checkpointer(e2raw)
       // survivor NODES of this round, derived from the kept edge set's
       // own keep-filter: recompute the tiny degree table against the
       // PRE-peel edges (cheap — edges is checkpointed) so the ledger

@@ -57,14 +57,13 @@ object PageRank {
     * lineage depth would call for a checkpoint every ~10 rounds — the
     * CC device — but fixed small iters is the PageRank-as-quality-prior
     * regime. */
-  def run(edgesIn: DataFrame, iters: Int = iterations,
-          cp: Checkpointer = Checkpointer.Local): DataFrame = {
+  def run(edgesIn: DataFrame, iters: Int = iterations): DataFrame = {
     // (r16 measured dead end, do not redo: dropping this checkpoint and
     // letting the degree aggregate + ewd build each re-derive the edge
     // projection read 3.5 → 4.6 s at sf0.1 — the upstream scan fanout
     // exchange re-executes per consumer.)
-    val edges = cp(edgesIn.select(col("src"), col("dst")))
-    val deg = cp(edges.groupBy(col("src").as("id"))
+    val edges = Checkpointer(edgesIn.select(col("src"), col("dst")))
+    val deg = Checkpointer(edges.groupBy(col("src").as("id"))
       .agg(count(lit(1)).as("d")))
     val n = deg.count() // one scalar — bounded driver state
     // per-edge source degree carried on the edge row: one join at build
@@ -72,7 +71,7 @@ object PageRank {
     // partitioned by src BEFORE the checkpoint so every iteration's
     // join reuses the edge-side layout and shuffles only the node-sized
     // ranks frame (localCheckpoint preserves outputPartitioning)
-    val ewd = cp(edges.join(
+    val ewd = Checkpointer(edges.join(
       deg.select(col("id").as("src"), col("d")), Seq("src"))
       .repartition(col("src")))
     Checkpointer.release(edges)

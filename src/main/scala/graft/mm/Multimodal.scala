@@ -5,6 +5,8 @@ import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.plans.Checkpointer
+
 /** Multimodal column handling for training-data pipelines: media as
   * opaque `binary` columns + typed metadata structs, with decode /
   * feature-extract / resize / frame-sample as batched `mapPartitions`
@@ -179,11 +181,11 @@ object Multimodal {
     * Scale shape: the 48-row driver collect is fixture STAGING, not the
     * data path (production points .load() at an existing media lake);
     * the scan itself lists, prunes and header-parses inside the source.
-    * The result is localCheckpoint-materialized before the temp
-    * directory is deleted. */
+    * The result is materialized through [[Checkpointer]] (eagerly)
+    * before the temp directory is deleted. */
   def qMediaScan(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     // the staged fixture lives on the DRIVER's local filesystem and is
-    // deleted after a localCheckpoint — both only sound in local mode;
+    // deleted right after the eager checkpoint — only sound in local mode;
     // a cluster deployment points the connector at a shared media lake
     // and never stages (fail fast instead of FileNotFound mid-scan)
     require(spark.sparkContext.isLocal,
@@ -221,7 +223,7 @@ object Multimodal {
           col("width"), col("height"), col("sample_rate"))
       // materialize the scan while the files still exist; the display
       // sort re-runs from the checkpointed blocks at write time
-      out.localCheckpoint(eager = true).orderBy("name")
+      Checkpointer(out).orderBy("name")
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(stage.toFile)
     }
@@ -380,7 +382,7 @@ object Multimodal {
         .where(col("kind") === "image" && col("width") >= 2)
         .select(col("name"), col("kind"), col("size"),
           col("width"), col("height"))
-      out.localCheckpoint(eager = true).orderBy("name")
+      Checkpointer(out).orderBy("name")
     }
 
   /** q_media_gif_decode — distributed LZW DECODE under the oracle
@@ -424,7 +426,7 @@ object Multimodal {
           }
         }
       }(enc)
-      decoded.localCheckpoint(eager = true).orderBy("name")
+      Checkpointer(decoded).orderBy("name")
     }
 
   /** Stage the deterministic JPEG fixture (first 48 documents rows →
@@ -456,7 +458,7 @@ object Multimodal {
         .load(stage)
         .where(col("kind") === "image" && col("width") >= 6)
         .select(col("name"), col("kind"), col("width"), col("height"))
-      out.localCheckpoint(eager = true).orderBy("name")
+      Checkpointer(out).orderBy("name")
     }
 
   /** q_media_jpeg_decode — distributed baseline-JPEG DECODE under the
@@ -497,7 +499,7 @@ object Multimodal {
           }
         }
       }(enc)
-      decoded.localCheckpoint(eager = true).orderBy("name")
+      Checkpointer(decoded).orderBy("name")
     }
 
   /** q_media_adpcm_decode — distributed IMA-ADPCM DECODE under the
@@ -549,7 +551,7 @@ object Multimodal {
           }
         }
       }(enc)
-      decoded.localCheckpoint(eager = true).orderBy("name")
+      Checkpointer(decoded).orderBy("name")
     }
 
   /** q_media_video_sample — REAL frame demux + stride-sampled decode
@@ -618,7 +620,7 @@ object Multimodal {
             }
         }
       }(enc)
-      decoded.localCheckpoint(eager = true).orderBy("name", "frame_idx")
+      Checkpointer(decoded).orderBy("name", "frame_idx")
     }
 
   /** q_media_resize — the RESIZE operator under the hash (r16): until
@@ -660,7 +662,7 @@ object Multimodal {
           }
         }
       }(enc)
-      decoded.localCheckpoint(eager = true).orderBy("name")
+      Checkpointer(decoded).orderBy("name")
     }
 
   /** q_media_profile — the full codec DISPATCH under one hash (r16
@@ -726,6 +728,6 @@ object Multimodal {
               }
         }
       }(enc)
-      decoded.localCheckpoint(eager = true).orderBy("name")
+      Checkpointer(decoded).orderBy("name")
     }
 }

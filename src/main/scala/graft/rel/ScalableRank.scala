@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.plans.Checkpointer
+
 /** Exact global ROW_NUMBER / NTILE without a single-reducer sort — the
   * range-bucketed twin of [[graft.text.Sampling.shufflePositions]] (that
   * device buckets by a hash PREFIX of its own sort key; this one buckets
@@ -89,9 +91,7 @@ object ScalableRank {
     * — and the cut VALUES never affect the caller-visible output, only
     * the balance, so the collect can never change a hash. */
   def withRangeBucket(df: DataFrame, bucketKey: Column,
-                      buckets: Int = defaultBuckets,
-                      cp: graft.plans.Checkpointer =
-                        graft.plans.Checkpointer.Local): DataFrame = {
+                      buckets: Int = defaultBuckets): DataFrame = {
     // upper bound 4096, not 65536: bucketExpr's CASE tree is linear-SIZE
     // in the cut count (only its depth is log), and ~131k expression
     // nodes at 65536 would blow Janino's 64KB method limit into
@@ -102,9 +102,8 @@ object ScalableRank {
     // the device reads its input three ways (cut points, per-bucket
     // counts, the ranked output): checkpoint the keyed frame ONCE so
     // the upstream corpus pass runs once and the two extra reads hit
-    // materialized blocks (the PageRank lineage idiom; pass
-    // Checkpointer.None for plan-inspection composition)
-    val keyed = cp(df.withColumn("__rbk", bucketKey.cast("double")))
+    // materialized blocks (the PageRank lineage idiom)
+    val keyed = Checkpointer(df.withColumn("__rbk", bucketKey.cast("double")))
     val fracs = (1 until buckets).map(i => lit(i.toDouble / buckets))
     // the non-null/non-NaN key requirement is ENFORCED, not just
     // documented (r14 advice): a null/NaN key compares false against
@@ -134,11 +133,9 @@ object ScalableRank {
     * at zero extra passes. */
   def rangeRowNumber(df: DataFrame, bucketKey: Column, order: Seq[Column],
                      out: String, buckets: Int = defaultBuckets,
-                     totalOut: Option[String] = None,
-                     cp: graft.plans.Checkpointer =
-                       graft.plans.Checkpointer.Local): DataFrame = {
+                     totalOut: Option[String] = None): DataFrame = {
     reserve(df, out +: totalOut.toSeq)
-    val b = withRangeBucket(df, bucketKey, buckets, cp)
+    val b = withRangeBucket(df, bucketKey, buckets)
     // exclusive cumulative offsets over the ≤`buckets`-row count frame;
     // the partition-less window is intentional and BOUNDED (the
     // histogram/AUC-bins pattern); total count rides along for free
@@ -162,12 +159,10 @@ object ScalableRank {
     * bit-identical to the naive window (first `N mod n` tiles take one
     * extra row), computed from the range-bucketed rank. */
   def rangeNtile(df: DataFrame, bucketKey: Column, order: Seq[Column],
-                 n: Int, out: String, buckets: Int = defaultBuckets,
-                 cp: graft.plans.Checkpointer =
-                   graft.plans.Checkpointer.Local): DataFrame = {
+                 n: Int, out: String, buckets: Int = defaultBuckets): DataFrame = {
     require(n >= 1, s"ntile n must be >= 1: $n")
     val r = rangeRowNumber(df, bucketKey, order, "__rrn", buckets,
-      totalOut = Some("__rtot"), cp = cp)
+      totalOut = Some("__rtot"))
     // BIGINT-exact tile arithmetic (never a float division whose floor
     // could drift); IF is lazy, so the q=0 else-branch (N < n) is never
     // evaluated and its `div 0` cannot trip ANSI

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
+import graft.plans.Checkpointer
 
 /** Event-stream time-series operators (SURVEY.md §2.B extension): the
   * densify / funnel / cohort shapes every product-analytics and
@@ -1621,7 +1622,7 @@ object TimeSeries {
     // re-computing the md5 split hash per row (the expensive term);
     // now one scan+hash pass feeds all three from checkpointed blocks
     // (guide §1.2 "don't compute things twice", §2.3)
-    val li = graft.plans.Checkpointer.Local(
+    val li = Checkpointer(
       Tables.lineitem(spark, dir).select(
         isTrain.as("tr"),
         col("l_quantity").cast("long").as("x"),
@@ -1638,7 +1639,7 @@ object TimeSeries {
     // the residual frame is itself read twice (quantile pass, coverage
     // pass) — checkpoint it too so the |validation| rows are computed
     // once rather than re-joined against the broadcast (a, b) per pass
-    val r = graft.plans.Checkpointer.Local(
+    val r = Checkpointer(
       li.filter(!col("tr")).crossJoin(broadcast(ab))
         .select(expr("ABS(CAST(y AS DOUBLE) - a - b * CAST(x AS DOUBLE))").as("r")))
     val q = r.agg(percentile(col("r"), lit(0.9)).as("qh"),

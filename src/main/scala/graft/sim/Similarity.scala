@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.plans.Checkpointer
 import graft.vec.VectorOps
 
 /** Similarity search over embedding columns (SURVEY.md §2.C).
@@ -712,16 +713,14 @@ object Similarity {
   def cappedLshBuckets(df: DataFrame, idCol: String, vecCol: String,
                        nPlanes: Int, dim: Int, cap: Long,
                        subPlanes: Int = 3, maxDepth: Int = 3,
-                       planeOffset: Int = 0,
-                       cp: graft.plans.Checkpointer =
-                         graft.plans.Checkpointer.Local): DataFrame = {
+                       planeOffset: Int = 0): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     // materialize the signature scan ONCE: every probe below and every
     // downstream consumer then reads these blocks instead of recomputing
     // the nPlanes×dim hyperplane fold over the corpus (the probe loop
     // used to recompute it per round — half this operator's runtime)
-    val base = cp(df.select(col(idCol), col(vecCol), lit(0).as("lvl"),
+    val base = Checkpointer(df.select(col(idCol), col(vecCol), lit(0).as("lvl"),
       lshBuckets(col(vecCol), hyperplanes(nPlanes, dim, planeOffset))
         .cast("long").as("bucket")))
     var cur = base
@@ -775,7 +774,8 @@ object Similarity {
         .select(col(idCol), col(vecCol), col("lvl"), col("bucket"),
           col("h_lvl").isNotNull.as("hot"))
       // multiply-consumed downstream (~6 ways) — one materialization
-      cp(settled.map(_.withColumn("hot", lit(false)).unionAll(last)).getOrElse(last))
+      Checkpointer(
+        settled.map(_.withColumn("hot", lit(false)).unionAll(last)).getOrElse(last))
     }
   }
 
@@ -801,9 +801,7 @@ object Similarity {
     * at extreme dim, re-join the vectors after dedup instead. */
   def embeddingNearDupPairsCapped(emb: DataFrame, threshold: Double,
                                   dim: Int = 64, targetBucketSize: Long = 64L,
-                                  cap: Long = 256L, nTables: Int = 2,
-                                  cp: graft.plans.Checkpointer =
-                                    graft.plans.Checkpointer.Local): DataFrame = {
+                                  cap: Long = 256L, nTables: Int = 2): DataFrame = {
     val n = emb.count()
     val nPlanes = autoPlanes(n, targetBucketSize)
     val tables = (0 until nTables).map { t =>
@@ -811,7 +809,7 @@ object Similarity {
       // plus the refined composition only when refinement fired) — its
       // output reads materialized blocks for all ~6 consumers below
       val bk = cappedLshBuckets(emb, "vec_id", "embedding", nPlanes, dim, cap,
-        planeOffset = t * 101, cp = cp)
+        planeOffset = t * 101)
       val cold = bk.filter(!col("hot"))
       val a = cold.select(col("lvl"), col("bucket"),
         col("vec_id").as("id_a"), col("embedding").as("ea"))
@@ -1150,7 +1148,7 @@ object Similarity {
     val train =
       if (trainFraction >= 1.0) cands
       else cands.filter(graft.text.Sampling.inSample(col("cid"), trainFraction))
-    val sub = pqSubvecs(train).localCheckpoint(eager = true)
+    val sub = Checkpointer(pqSubvecs(train))
     // re-centering uses the DECIMAL device (r15, the qPqLloydRound
     // oracle pattern promoted into the production trainer): components
     // ROUND(x,9) → DECIMAL(18,9), summed exactly (addition-order-proof
@@ -1178,11 +1176,12 @@ object Similarity {
       // q_pq_topk_trained; no ReusedExchange fires across them, see
       // plans/r17). eager=false makes both references share ONE
       // checkpointed RDD computed inside the same job — dedupe without
-      // the serial job barrier an eager cp would add (measured: eager
-      // per-round cp was 4.24 → 5.11 s, a dead end — do not redo).
-      (book.join(means, Seq("m", "k"), "left")
-        .select(col("m"), col("k"), coalesce(col("cv_new"), col("cv")).as("cv")))
-        .localCheckpoint(eager = false)
+      // the serial job barrier an eager checkpoint would add (measured:
+      // eager per-round checkpoint was 4.24 → 5.11 s, a dead end — do
+      // not redo).
+      Checkpointer(book.join(means, Seq("m", "k"), "left")
+        .select(col("m"), col("k"), coalesce(col("cv_new"), col("cv")).as("cv")),
+        eager = false)
     }
   }
 
@@ -1199,10 +1198,10 @@ object Similarity {
     val cands = emb.filter(col("vec_id") >= 8)
       .select(col("vec_id").as("cid"), col("embedding").as("ce"))
     // train once, reuse for encode + LUT: the codebook is M·K = 128 tiny
-    // rows consumed by two broadcasts — localCheckpoint cuts the 2×
+    // rows consumed by two broadcasts — the checkpoint cuts the 2×
     // re-execution of the iterative training subtree, the same device as
-    // Checkpointer.Local in the CC keys
-    val codebook = pqCodebookTrained(cands).localCheckpoint(eager = true)
+    // the CC keys' per-round state
+    val codebook = Checkpointer(pqCodebookTrained(cands))
     val codes = pqEncode(cands, codebook)
     val lut = pqLut(queries, codebook)
     pqScoreTopK(codes, lut, 3, Seq("m", "k"))

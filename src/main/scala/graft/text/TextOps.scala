@@ -149,24 +149,21 @@ object TextOps {
     * broadcast anti-join — no extra shuffle of the shingle stream.
     *
     * When the cap is active the stream is materialized ONCE (through
-    * `cp`) and both consumers — the hot-set aggregation and the
+    * [[Checkpointer]]) and both consumers — the hot-set aggregation and the
     * anti-join probe — read the checkpointed blocks. Leaving it lazy
     * made every downstream consumer recompute tokenize→shingle→explode
     * plus the hot-set subtree (round 2's only real bench regression:
     * q_dedup_minhash 3.4→6.6 s).
     *
-    * SIDE EFFECT: with the default `cp` (Local/Reliable are eager),
+    * SIDE EFFECT: the checkpoint is eager, so with the cap active
     * merely CONSTRUCTING this DataFrame runs Spark jobs and pins
-    * blocks until RDD GC — callers that only want to inspect or
-    * compose the plan should pass `cp = Checkpointer.None` (at the
-    * recompute cost above if they then execute it). */
-  def shingleRows(docs: DataFrame, w: Int, maxDf: Long = shingleDfCap,
-                  cp: Checkpointer = Checkpointer.Local): DataFrame = {
+    * blocks until RDD GC. */
+  def shingleRows(docs: DataFrame, w: Int, maxDf: Long = shingleDfCap): DataFrame = {
     val sh = docs.select(col("doc_id"),
       explode(array_distinct(shingles(tokens(col("text")), w))).as("s"))
     if (maxDf <= 0) sh
     else {
-      val mat = cp(sh)
+      val mat = Checkpointer(sh)
       val hot = mat.groupBy(col("s")).agg(count(lit(1)).as("df"))
         .filter(col("df") > maxDf)
         .select(col("s"))
@@ -558,13 +555,12 @@ object TextOps {
 
   def simhashBandPairs(fps: DataFrame, maxHamming: Int = 3,
                        nBands: Int = 4,
-                       cp: Checkpointer = Checkpointer.Local,
                        guard: Long = simhashBandGuard): DataFrame = {
     require(32 % nBands == 0, s"nBands must divide 32, got $nBands")
     val width = 32 / nBands
     val mask = (1L << width) - 1
     // materialized once: both self-join sides reuse the banded keys
-    val keyed = cp(fps.select(col("doc_id"), col("fp"),
+    val keyed = Checkpointer(fps.select(col("doc_id"), col("fp"),
       explode(array((0 until nBands).map(b =>
         struct(lit(b).as("band"),
           shiftright(col("fp"), b * width).bitwiseAND(lit(mask)).as("bits"))): _*))
@@ -584,9 +580,8 @@ object TextOps {
 
   /** Hamming-band SimHash near-dup pairs for a document corpus. */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3,
-                   nBands: Int = 4,
-                   cp: Checkpointer = Checkpointer.Local): DataFrame =
-    simhashBandPairs(simhashFingerprintsLong(docs), maxHamming, nBands, cp)
+                   nBands: Int = 4): DataFrame =
+    simhashBandPairs(simhashFingerprintsLong(docs), maxHamming, nBands)
 
   /** Per-bucket population cap for [[simhashBandPairsCapped]] /
     * q_dedup_simhash_capped — profiled so BOTH the cold-pair and the
@@ -615,12 +610,11 @@ object TextOps {
     * mirror — so the key is DuckDB-oracled, unlike the capped
     * embedding key whose plane count is data-driven. */
   def simhashBandPairsCapped(fps: DataFrame, maxHamming: Int = 3,
-                             nBands: Int = 4, cap: Long = simhashBucketCap,
-                             cp: Checkpointer = Checkpointer.Local): DataFrame = {
+                             nBands: Int = 4, cap: Long = simhashBucketCap): DataFrame = {
     require(32 % nBands == 0, s"nBands must divide 32, got $nBands")
     val width = 32 / nBands
     val mask = (1L << width) - 1
-    val keyed = cp(fps.select(col("doc_id"), col("fp"),
+    val keyed = Checkpointer(fps.select(col("doc_id"), col("fp"),
         explode(array((0 until nBands).map(b =>
           struct(lit(b).as("band"),
             shiftright(col("fp"), b * width).bitwiseAND(lit(mask)).as("bits"))): _*))
@@ -699,16 +693,15 @@ object TextOps {
     * corpus self-join, still shingle-keyed, never a cross product). */
   def ngramJaccardPairs(docs: DataFrame, w: Int, minJaccard: Double,
                         probeFilter: Option[Column],
-                        maxDf: Long = shingleDfCap,
-                        cp: Checkpointer = Checkpointer.Local): DataFrame = {
+                        maxDf: Long = shingleDfCap): DataFrame = {
     // With the df cap active, shingleRows already materialized the
     // stream — its output is a cheap broadcast anti-join over
     // checkpointed blocks, fine to recompute per consumer. Only the
     // uncapped full-corpus self-join (probeFilter=None) still needs the
     // stream pinned here: it consumes it three ways (counts, probe,
     // candidate side) and each would rebuild tokenize→shingle→explode.
-    val shBase = shingleRows(docs, w, maxDf, cp)
-    val sh = if (probeFilter.isEmpty && maxDf <= 0) cp(shBase) else shBase
+    val shBase = shingleRows(docs, w, maxDf)
+    val sh = if (probeFilter.isEmpty && maxDf <= 0) Checkpointer(shBase) else shBase
     val counts = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val probe = probeFilter.fold(sh)(sh.filter)
     val inter = probe.select(col("doc_id").as("id_a"), col("s"))
@@ -743,9 +736,8 @@ object TextOps {
     * three consumers re-read cheap blocks. */
   def containmentPairs(docs: DataFrame, w: Int = 3,
                        minContainment: Double = 0.9,
-                       maxDf: Long = shingleDfCap,
-                       cp: Checkpointer = Checkpointer.Local): DataFrame = {
-    val sh = shingleRows(docs, w, maxDf, cp)
+                       maxDf: Long = shingleDfCap): DataFrame = {
+    val sh = shingleRows(docs, w, maxDf)
     val counts = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val inter = sh.select(col("doc_id").as("id_a"), col("s"))
       .join(sh.select(col("doc_id").as("id_b"), col("s")), Seq("s"))
@@ -804,13 +796,12 @@ object TextOps {
     * cheaper than the w=3 form; boilerplate spans above the df cap are
     * dropped by the broadcast anti-join before they can go quadratic. */
   def substringDupPairs(docs: DataFrame, w: Int = substringSpanTokens,
-                        maxDf: Long = shingleDfCap,
-                        cp: Checkpointer = Checkpointer.Local): DataFrame = {
+                        maxDf: Long = shingleDfCap): DataFrame = {
     // join on the span DIGEST: the self-join shuffle carries 16-byte
     // hashes instead of ~6·w-byte span strings (at 100 TB the spans
     // dominate the exchange otherwise); md5 keeps the oracle exact —
     // DuckDB computes identical digests
-    val sh = shingleRows(docs, w, maxDf, cp)
+    val sh = shingleRows(docs, w, maxDf)
       .select(col("doc_id"), md5(col("s")).as("h"))
     sh.select(col("doc_id").as("id_a"), col("h"))
       .join(sh.select(col("doc_id").as("id_b"), col("h")), Seq("h"))
@@ -831,13 +822,12 @@ object TextOps {
     * jaccard > 0.5, so the key is DuckDB-oracle-able (recursive CTE);
     * the same [[graft.graph.ConnectedComponents.run]] consumes MinHash/
     * SimHash pair output unchanged. */
-  def qDedupCluster(spark: SparkSession, dir: String,
-                    cp: Checkpointer = Checkpointer.Local): DataFrame = {
+  def qDedupCluster(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val edges = ngramJaccardPairs(docs, 3, 0.5, None, cp = cp)
+    val edges = ngramJaccardPairs(docs, 3, 0.5, None)
       .select(col("id_a").as("src"), col("id_b").as("dst"))
     val nodes = docs.select(col("doc_id").as("id"))
-    graft.graph.ConnectedComponents.run(edges, nodes, cp = cp)
+    graft.graph.ConnectedComponents.run(edges, nodes)
       .select(col("id").as("doc_id"), col("lbl").as("cluster_id"),
         (col("id") === col("lbl")).as("keep"))
       .orderBy("doc_id")
@@ -1430,9 +1420,8 @@ object TextOps {
     * in eval, contamination fraction, flag. */
   def decontaminationReport(docs: DataFrame, isEval: Column, w: Int,
                             threshold: Double = decontamThreshold,
-                            maxDf: Long = shingleDfCap,
-                            cp: Checkpointer = Checkpointer.Local): DataFrame = {
-    val sh = shingleRows(docs, w, maxDf, cp)
+                            maxDf: Long = shingleDfCap): DataFrame = {
+    val sh = shingleRows(docs, w, maxDf)
     val evalSh = sh.filter(isEval).select(col("s")).distinct()
     val trainSh = sh.filter(!isEval)
     val totals = trainSh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_shingles"))
@@ -1945,8 +1934,7 @@ object TextOps {
     * Semi-join composition keeps each filter independent (no
     * multi-hundred-column rows ever shuffle; the text column rides only
     * the final scan → pack path). */
-  def llmPipeline(docs: DataFrame,
-                  cp: Checkpointer = Checkpointer.Local): DataFrame = {
+  def llmPipeline(docs: DataFrame): DataFrame = {
     val toks = tokens(col("text"))
     val nTok = size(toks).cast("double")
     val nDistinct = size(array_distinct(toks)).cast("double")
@@ -1977,31 +1965,31 @@ object TextOps {
     // once as the main branch). Both consumers now read checkpointed
     // blocks; the filter's tokenize/array_distinct/stopword HOFs run
     // one time. Identical rows — `base` IS docs.filter(rowKeep).
-    val base = cp(docs.filter(rowKeep))
+    val base = Checkpointer(docs.filter(rowKeep))
     val repOk = repetitionReport(base)
       .filter(!col("flagged")).select("doc_id")
     val deconOk = decontaminationReport(docs, isEval, 3,
-        threshold = pipelineContamMax, cp = cp)
+        threshold = pipelineContamMax)
       .filter(!col("flagged")).select("doc_id")
     // checkpoint the gated set: three downstream consumers (exact
     // dedup, near-dup edges, survivor scan) would each recompute the
     // quality+repetition+decontamination subtree otherwise — measured
     // 10.3 s → materialize-once at sf0.1. Survivor rows are a filtered
     // subset of the corpus, so the checkpoint is input-bounded.
-    val cleaned = cp(base
+    val cleaned = Checkpointer(base
       .join(repOk, Seq("doc_id"), "left_semi")
       .join(deconOk, Seq("doc_id"), "left_semi"))
 
     // exact dedup: min doc_id survives per content digest
     val exactKeep = cleaned.groupBy(md5(col("text")).as("h"))
       .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
-    val deduped = cp(cleaned.join(exactKeep, Seq("doc_id"), "left_semi"))
+    val deduped = Checkpointer(cleaned.join(exactKeep, Seq("doc_id"), "left_semi"))
 
     // near-dup cluster dedup over the surviving subset
-    val edges = ngramJaccardPairs(deduped, 3, pipelineClusterJaccard, None, cp = cp)
+    val edges = ngramJaccardPairs(deduped, 3, pipelineClusterJaccard, None)
       .select(col("id_a").as("src"), col("id_b").as("dst"))
     val keepCluster = graft.graph.ConnectedComponents
-      .run(edges, deduped.select(col("doc_id").as("id")), cp = cp)
+      .run(edges, deduped.select(col("doc_id").as("id")))
       .filter(col("id") === col("lbl"))
       .select(col("id").as("doc_id"))
     val survivors = deduped.join(keepCluster, Seq("doc_id"), "left_semi")
@@ -2042,7 +2030,7 @@ object TextOps {
     * Stages 0–4 (scrub → gates → exact dedup → substring dedup) live in
     * [[pipelineGatedDeduped]], shared with the v3 key (r15) so the two
     * cluster-dedup variants cannot drift. */
-  private def pipelineGatedDeduped(docs: DataFrame, cp: Checkpointer): DataFrame = {
+  private def pipelineGatedDeduped(docs: DataFrame): DataFrame = {
     // stage 0: PII inject (the q_scrub_pii device) + scrub
     val injected = when(col("doc_id") % 7 === 0,
       concat(lit("contact user"), col("doc_id").cast("string"),
@@ -2053,7 +2041,7 @@ object TextOps {
       regexp_replace(injected, emailRe, "<EMAIL>"), urlRe, "<URL>")
     // checkpoint: every gate below re-reads the scrubbed corpus; without
     // this each would recompute the two regex passes over the raw scan
-    val scrubbed = cp(docs.select(col("doc_id"), col("source"),
+    val scrubbed = Checkpointer(docs.select(col("doc_id"), col("source"),
       cleanedText.as("text")))
 
     val toks = tokens(col("text"))
@@ -2102,13 +2090,13 @@ object TextOps {
     // REGRESSES here, 3.4 → 4.1 s solo: `scrubbed` is already
     // checkpointed blocks, so the doubled rowKeep HOF filter runs over
     // cheap local reads inside one well-overlapped job, while the extra
-    // eager cp adds a serial job barrier.)
+    // eager checkpoint adds a serial job barrier.)
     val repOk = repetitionReport(scrubbed.filter(rowKeep))
       .filter(!col("flagged")).select("doc_id")
     val deconOk = decontaminationReport(scrubbed, isEval, 3,
-        threshold = pipelineContamMax, cp = cp)
+        threshold = pipelineContamMax)
       .filter(!col("flagged")).select("doc_id")
-    val cleaned = cp(scrubbed
+    val cleaned = Checkpointer(scrubbed
       .filter(rowKeep)
       .join(tailOk, Seq("doc_id"), "left_semi")
       .join(repOk, Seq("doc_id"), "left_semi")
@@ -2117,21 +2105,20 @@ object TextOps {
     // exact dedup: min doc_id survives per content digest
     val exactKeep = cleaned.groupBy(md5(col("text")).as("h"))
       .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
-    val deduped = cp(cleaned.join(exactKeep, Seq("doc_id"), "left_semi"))
+    val deduped = Checkpointer(cleaned.join(exactKeep, Seq("doc_id"), "left_semi"))
 
     // exact-substring dedup: any doc sharing a 20-token span with a
     // LOWER-id survivor drops (min-id-wins, the exact-dedup convention)
-    val subDropped = substringDupPairs(deduped, cp = cp)
+    val subDropped = substringDupPairs(deduped)
       .select(col("id_b").as("doc_id")).distinct()
-    cp(deduped.join(subDropped, Seq("doc_id"), "left_anti"))
+    Checkpointer(deduped.join(subDropped, Seq("doc_id"), "left_anti"))
   }
 
   /** Shared v2/v3 tail: keep one doc per near-dup component, then split
     * assignment + packing over (split, source) streams. */
-  private def clusterSplitPack(subKept: DataFrame, edges: DataFrame,
-                               cp: Checkpointer): DataFrame = {
+  private def clusterSplitPack(subKept: DataFrame, edges: DataFrame): DataFrame = {
     val keepCluster = graft.graph.ConnectedComponents
-      .run(edges, subKept.select(col("doc_id").as("id")), cp = cp)
+      .run(edges, subKept.select(col("doc_id").as("id")))
       .filter(col("id") === col("lbl"))
       .select(col("id").as("doc_id"))
     val survivors = subKept.join(keepCluster, Seq("doc_id"), "left_semi")
@@ -2140,13 +2127,12 @@ object TextOps {
     packChunks(withSplit, concat_ws("/", col("split"), col("source")), col("doc_id"))
   }
 
-  def llmPipelineV2(docs: DataFrame,
-                    cp: Checkpointer = Checkpointer.Local): DataFrame = {
-    val subKept = pipelineGatedDeduped(docs, cp)
+  def llmPipelineV2(docs: DataFrame): DataFrame = {
+    val subKept = pipelineGatedDeduped(docs)
     // near-dup cluster dedup over the surviving subset
-    val edges = ngramJaccardPairs(subKept, 3, pipelineClusterJaccard, None, cp = cp)
+    val edges = ngramJaccardPairs(subKept, 3, pipelineClusterJaccard, None)
       .select(col("id_a").as("src"), col("id_b").as("dst"))
-    clusterSplitPack(subKept, edges, cp)
+    clusterSplitPack(subKept, edges)
   }
 
   def qLlmPipelineV2(spark: SparkSession, dir: String): DataFrame =
@@ -2170,12 +2156,11 @@ object TextOps {
     * for near-identical piles, the adversarial case the rehearsals
     * plant. Oracle = v2's CTE chain with stage 5 swapped for the
     * q_dedup_simhash_capped mirror re-rooted on the survivor CTE. */
-  def llmPipelineV3(docs: DataFrame,
-                    cp: Checkpointer = Checkpointer.Local): DataFrame = {
-    val subKept = pipelineGatedDeduped(docs, cp)
-    val edges = simhashBandPairsCapped(simhashFingerprintsLong(subKept), cp = cp)
+  def llmPipelineV3(docs: DataFrame): DataFrame = {
+    val subKept = pipelineGatedDeduped(docs)
+    val edges = simhashBandPairsCapped(simhashFingerprintsLong(subKept))
       .select(col("id_a").as("src"), col("id_b").as("dst"))
-    clusterSplitPack(subKept, edges, cp)
+    clusterSplitPack(subKept, edges)
   }
 
   def qLlmPipelineV3(spark: SparkSession, dir: String): DataFrame =
@@ -2384,11 +2369,9 @@ object TextOps {
     * lineage-truncated through the [[graft.plans.Checkpointer]] so
     * plans don't grow with merges. Spec-pinned against an in-memory
     * reference implementation (BpeTrainSpec). */
-  def bpeTrain(docs: DataFrame, nMerges: Int,
-               cp: graft.plans.Checkpointer = graft.plans.Checkpointer.Local)
-      : BpeTrainResult = {
+  def bpeTrain(docs: DataFrame, nMerges: Int): BpeTrainResult = {
     // the single corpus pass: distinct words + counts, char-segmented
-    var vocab = cp(docs
+    var vocab = Checkpointer(docs
       .select(explode(tokens(lower(col("text")))).as("w"))
       .filter(length(col("w")) >= 2)
       .groupBy(col("w")).agg(count(lit(1)).as("wc"))
@@ -2425,7 +2408,7 @@ object TextOps {
             size(out) > 0 && element_at(out, -1) === lit(a) && s === lit(b),
             concat(slice(out, lit(1), size(out) - 1), array(lit(a + b))))
             .otherwise(concat(out, array(s))))
-        val next = cp(vocab.select(col("w"), col("wc"), merged.as("syms")))
+        val next = Checkpointer(vocab.select(col("w"), col("wc"), merged.as("syms")))
         graft.plans.Checkpointer.release(vocab)
         vocab = next
         round += 1

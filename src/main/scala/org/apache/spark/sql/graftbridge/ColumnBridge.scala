@@ -21,12 +21,13 @@ object ColumnBridge {
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
   /** Free the storage blocks behind a (local)checkpointed DataFrame.
-    * `Dataset.localCheckpoint()` pins its materialized RDD blocks until
+    * A local checkpoint pins its materialized RDD blocks until
     * the RDD is garbage-collected by the ContextCleaner — in iterative
     * algorithms that checkpoint per round, superseded round states pile
     * up nondeterministically (GC lag), inflating the block store and
     * slowing later work. A no-op for plans that aren't a checkpoint
-    * (LogicalRDD) root, so it is always safe to call on a cp() result. */
+    * (LogicalRDD) root, so it is always safe to call on a
+    * `graft.plans.Checkpointer` result. */
   def releaseCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
       .queryExecution.analyzed match {

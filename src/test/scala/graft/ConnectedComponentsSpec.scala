@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.graftbridge.CheckpointDirs.withCheckpointDir
+
 import graft.graph.ConnectedComponents
 
 /** Distributed min-label propagation vs a driver-side union-find oracle
@@ -109,14 +111,13 @@ class ConnectedComponentsSpec extends SparkSpec {
     // configuration — truncating lineage each round.
     val n = 10001L
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_path").toString
-    spark.sparkContext.setCheckpointDir(dir)
     val edges = spark.range(0L, n - 1).selectExpr("id AS src", "id + 1 AS dst")
     val nodes = spark.range(0L, n).selectExpr("id")
     val t0 = System.nanoTime()
-    val (labelsDf, rounds) = ConnectedComponents.runStarRounds(
-      edges, nodes, cp = graft.plans.Checkpointer.Reliable)
-    val wrong = labelsDf.filter($"lbl" =!= 0L).count()
-    val total = labelsDf.count()
+    val (wrong, total, rounds) = withCheckpointDir(dir) {
+      val (labelsDf, rounds) = ConnectedComponents.runStarRounds(edges, nodes)
+      (labelsDf.filter($"lbl" =!= 0L).count(), labelsDf.count(), rounds)
+    }
     val wallSec = (System.nanoTime() - t0) / 1e9
     assert(total == n && wrong == 0, s"$wrong of $total nodes mislabeled on the path")
     val bound = math.ceil(math.log(n.toDouble) / math.log(2.0)).toInt + 4
@@ -128,18 +129,18 @@ class ConnectedComponentsSpec extends SparkSpec {
 
   test("reliable checkpointer mode matches union-find oracle") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
     val rnd = new scala.util.Random(7)
     val n = 30
     val edges = (1 to 25)
       .map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
       .filter(e => e._1 != e._2)
     val expected = unionFindMinLabels(n, edges)
-    val got = ConnectedComponents.run(
-      edges.toDF("src", "dst"),
-      (0 until n).map(_.toLong).toDF("id"),
-      cp = graft.plans.Checkpointer.Reliable)
-      .as[(Long, Long)].collect().toMap
+    val got = withCheckpointDir(dir) {
+      ConnectedComponents.run(
+        edges.toDF("src", "dst"),
+        (0 until n).map(_.toLong).toDF("id"))
+        .as[(Long, Long)].collect().toMap
+    }
     assert(got == expected)
   }
 }

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointDirs.withCheckpointDir
 
 import graft.text.TextOps
 
@@ -145,18 +147,25 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("qDedupCluster end-to-end under Reliable checkpointing == Local output") {
-    // the full gate query's iterative loop (df-capped shingle stream +
-    // CC rounds) run with reliable (HDFS-style) checkpoints: identical
-    // output, and the checkpoint dir must actually have been written
-    val dir = java.nio.file.Files.createTempDirectory("graft_reliable").toFile
-    spark.sparkContext.setCheckpointDir(dir.toString)
-    val local = TextOps.qDedupCluster(spark, sfDir).collect().toSeq
-    val reliable = TextOps.qDedupCluster(spark, sfDir,
-      cp = graft.plans.Checkpointer.Reliable).collect().toSeq
-    assert(local == reliable)
+    // each key's iterative loop (df-capped shingle streams, CC rounds,
+    // PQ Lloyd rounds and codebook, the v2 pipeline's gate chain) run
+    // with a checkpoint dir set, i.e. reliable (HDFS-style) checkpoints:
+    // output identical to the no-dir (local checkpoint) run, and the
+    // scoped dir must actually have been written by every key
     def fileCount(f: java.io.File): Int =
       if (f.isDirectory) f.listFiles().map(fileCount).sum else 1
-    assert(fileCount(dir) > 0, "Reliable run never wrote a checkpoint")
+    val keys: Seq[(String, () => DataFrame)] = Seq(
+      "qDedupCluster" -> (() => TextOps.qDedupCluster(spark, sfDir)),
+      "qPqTopKTrained" -> (() => graft.sim.Similarity.qPqTopKTrained(spark, sfDir)),
+      "llmPipelineV2" -> (() => TextOps.llmPipelineV2(Tables.documents(spark, sfDir))))
+    keys.foreach { case (name, run) =>
+      def rows(): Seq[String] = run().collect().map(_.toString).toSeq.sorted
+      val local = rows()
+      val dir = java.nio.file.Files.createTempDirectory("graft_reliable").toFile
+      val reliable = withCheckpointDir(dir.toString)(rows())
+      assert(local.nonEmpty && local == reliable, s"$name: reliable output differs")
+      assert(fileCount(dir) > 0, s"$name: reliable run never wrote a checkpoint")
+    }
   }
 
   test("banded cluster assignment: MinHash edges collapse the planted cluster") {
