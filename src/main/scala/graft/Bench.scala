@@ -1,16 +1,38 @@
 package graft
+import scala.collection.immutable.VectorMap
+import scala.jdk.CollectionConverters._
+import scala.util.Try
 import org.apache.spark.sql.SparkSession
+import Harness.r3
 object Bench {
-  /** JSON-safe error text: whitelist printable ASCII (anything else —
-    * control chars, unicode — becomes a space), then strip the two
-    * characters that would still break a JSON string literal. */
-  private def sanitize(t: Throwable): String =
-    t.toString.replaceAll("[^\\x20-\\x7e]", " ")
-      .replace("\\", " ").replace("\"", " ").take(160)
+  /** The regression gate's baseline: the usable medians of a committed
+    * bench artifact, or why it must not be read. A baseline measured
+    * with another core count or scale factor, or one that does not
+    * record them, says nothing about this run's setup. A baseline that
+    * was itself contended_run is skipped whole; keys it flagged
+    * contended or unstable (and erroring `null` keys) are left out. */
+  def baselineMedians(json: String, cpus: Int, sf: String): Either[String, Map[String, Double]] =
+    Try(Harness.json.readTree(json)).toOption.toRight("is not JSON").flatMap { b =>
+      def got(field: String) = b.path(field).asText("unrecorded")
+      Seq("cpus" -> cpus.toString, "sf" -> sf).collectFirst {
+        case (f, want) if got(f) != want => s"$f ${got(f)}, this run $want"
+      }.orElse(Option.when(b.path("contended_run").asBoolean(true))("contended_run")).toLeft {
+        val bad = Seq("contended", "unstable").flatMap(b.path(_).elements.asScala.map(_.asText)).toSet
+        b.path("queries").properties.asScala.collect {
+          case e if e.getValue.isNumber && !bad(e.getKey) => e.getKey -> e.getValue.asDouble
+        }.toMap
+      }
+    }
+
+  private def git(args: String*): Option[String] = try {
+    val pr = new ProcessBuilder(("git" +: args): _*).start()
+    val out = new String(pr.getInputStream.readAllBytes(), "UTF-8")
+    if (pr.waitFor() == 0 && out.trim.nonEmpty) Some(out) else None
+  } catch { case _: Throwable => None }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Harness.cpus
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
     // per-key untimed warm-up rep (default on): rep 1 of a cold key pays
     // whole-stage-codegen compilation of that key's unique generated
@@ -21,24 +43,7 @@ object Bench {
     // also kills the rep-1-spike "unstable" false flags that made
     // round-over-round comparisons discard healthy keys.
     val warmup = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP", "1").toInt.max(0)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is ns-precision parquet; see graft.Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the intentionally-bounded partition-less windows (AUC bin
-    // cumsum, shuffle-bucket offsets, ROC/lift curve bins — all run
-    // over ≤4096 aggregate rows, never data) trip WindowExec's
-    // blanket "No Partition Defined"
-    // warning on every job; ~100 repeats of it bury the bench's own
-    // output in the judged log tail, so drop that one logger to ERROR
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = Harness.session(cpus)
     // bounded-collect audit — see graft.CollectAudit; any key whose
     // largest driver collect exceeds the cap fails the sweep
     val collectCap = sys.env.get("SPARK_GRAFT_COLLECT_CAP").map(_.toLong).getOrElse(10000L)
@@ -105,20 +110,16 @@ object Bench {
       (1 to warmup).foreach { _ =>
         try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         catch { case _: Throwable => }
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+        Harness.releasePinned(spark)
       }
       val times = (1 to reps).iterator.takeWhile(_ => err.isEmpty).flatMap { _ =>
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-                 catch { case t: Throwable => err = Some(sanitize(t)); false }
+                 catch { case t: Throwable => err = Some(Harness.errorText(t)); false }
         val dt = (System.nanoTime() - t0) / 1e9
-        // drop blocks the query left pinned (localCheckpoint streams):
-        // the ContextCleaner's periodic GC is 30 min, so without this
-        // every rep of every query inherits the previous ones' blocks
-        // and the block store fills over the run (reps are new RDDs —
-        // nothing here is reused, only leaked). Outside the timer: this
-        // is harness hygiene, not query cost.
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+        // outside the timer: releasing pinned blocks is harness hygiene,
+        // not query cost
+        Harness.releasePinned(spark)
         if (ok) Some(dt) else None
       }.toVector
       val median = if (times.isEmpty) 0.0 else times.sorted.apply((times.size - 1) / 2)
@@ -177,37 +178,16 @@ object Bench {
     // floor, and a 2x of 0.2 s is still noise, so also require +0.5 s
     // absolute). Baseline comes from git HEAD, not the working tree, so
     // an earlier contaminated overwrite of the file can't poison the
-    // check; a baseline that was itself contended_run, or a key flagged
-    // contended/unstable in it, is skipped.
-    val baselineSrc: Option[String] =
-      sys.env.get("SPARK_GRAFT_BENCH_BASELINE").flatMap { p =>
-        try Some(new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8"))
-        catch { case _: Throwable => None }
-      }.orElse {
-        try {
-          val pr = new ProcessBuilder("git", "show", "HEAD:BENCH_LOCAL.json").start()
-          val out = new String(pr.getInputStream.readAllBytes(), "UTF-8")
-          if (pr.waitFor() == 0 && out.trim.nonEmpty) Some(out) else None
-        } catch { case _: Throwable => None }
-      }
-    def jsonObjNums(json: String, field: String): Map[String, Double] =
-      ("\"" + field + "\":\\{([^}]*)\\}").r.findFirstMatchIn(json).map(_.group(1)).map { body =>
-        "\"([^\"]+)\":([0-9][0-9.eE+-]*)".r.findAllMatchIn(body)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }.getOrElse(Map.empty)
-    def jsonArrStrs(json: String, field: String): Set[String] =
-      ("\"" + field + "\":\\[([^\\]]*)\\]").r.findFirstMatchIn(json).map(_.group(1)).map { body =>
-        "\"([^\"]+)\"".r.findAllMatchIn(body).map(_.group(1)).toSet
-      }.getOrElse(Set.empty)
-    val baseClean = baselineSrc.exists(_.contains("\"contended_run\":false"))
-    val baseQ = if (baseClean) baselineSrc.map(jsonObjNums(_, "queries")).getOrElse(Map.empty)
-                else Map.empty[String, Double]
-    val baseBad = baselineSrc.map(s => jsonArrStrs(s, "contended") ++ jsonArrStrs(s, "unstable"))
-      .getOrElse(Set.empty)
-    val regressed0 = results.collect {
-      case (k, m, _, None) if baseQ.get(k).exists(b =>
-        !baseBad(k) && b >= 0.15 && m > 2 * b && m - b > 0.5) => k
-    }
+    // check; see baselineMedians for the baselines it will not read.
+    val baseline = sys.env.get("SPARK_GRAFT_BENCH_BASELINE")
+      .flatMap(p => Try(java.nio.file.Files.readString(java.nio.file.Paths.get(p))).toOption)
+      .orElse(git("show", "HEAD:BENCH_LOCAL.json"))
+      .fold[Either[String, Map[String, Double]]](Left("none found"))(baselineMedians(_, cpus, sfDir))
+    baseline.left.foreach(r => System.err.println(s"[bench] regression baseline skipped: $r"))
+    val baseQ = baseline.getOrElse(Map.empty)
+    def regressedVs(k: String, m: Double): Boolean =
+      baseQ.get(k).exists(b => b >= 0.15 && m > 2 * b && m - b > 0.5)
+    val regressed0 = results.collect { case (k, m, _, None) if regressedVs(k, m) => k }
     // auto-rerun pass (round-13 verdict ask #7): every flagged key gets
     // ONE solo re-measurement at the end of the sweep — by then the
     // transient co-tenant load that caused most flags is gone, and the
@@ -245,42 +225,33 @@ object Bench {
     // regressed re-adjudicates against the FINAL median: a clean rerun
     // that still exceeds the committed baseline is a real regression
     val regressed = finalResults.collect {
-      case (k, m, _, None) if regressed0.contains(k) && baseQ.get(k).exists(b =>
-        b >= 0.15 && m > 2 * b && m - b > 0.5) => k
+      case (k, m, _, None) if regressed0.contains(k) && regressedVs(k, m) => k
     }
-    def r3(d: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, d)
     // an erroring key is `null` in every timing map, EXCLUDED from the
     // total and from n_queries, counted in n_errors, and fails the run's
     // exit code (round-9 verdict ask #4: 9 erroring keys recorded as
     // 0.000 inside a rc-0 "success" made BENCH_r09 read fully green)
-    def keyVal(k: String, m: Double, err: Option[String]): String =
-      "\"" + k + "\":" + (if (err.isDefined) "null" else r3(m))
+    def medians(rs: Seq[(String, Double, Vector[Double], Option[String])]) =
+      VectorMap.from(rs.map { case (k, m, _, e) => k -> (if (e.isDefined) null else r3(m)) })
     // ascending by median: the harness keeps only the LAST ~2000 output
     // chars of the run, so the expensive (interesting) keys and the
     // headline total must sit at the END of the line to survive truncation
     val byTime = finalResults.sortBy(_._2)
-    val qs = byTime.map { case (k, m, _, e) => keyVal(k, m, e) }
-      .mkString("{", ",", "}")
-    val runs = byTime.map { case (k, _, ts, _) => "\"" + k + "\":" + ts.map(r3).mkString("[", ",", "]") }
-      .mkString("{", ",", "}")
-    val errs = finalResults.collect { case (k, _, _, Some(e)) => "\"" + k + "\":\"" + e + "\"" }
-      .mkString("{", ",", "}")
+    val qs = medians(byTime)
+    val runs = VectorMap.from(byTime.map { case (k, _, ts, _) => k -> ts.map(r3) })
+    val errs = VectorMap.from(finalResults.collect { case (k, _, _, Some(e)) => k -> e })
     val ok = finalResults.filter(_._4.isEmpty)
     val nErrors = finalResults.size - ok.size
     val total = ok.map(_._2).sum
-    val method = s"median of $reps noop-format writes per query after $warmup untimed warm-up rep (steady-state: codegen compile paid before timing; includes final ORDER BY cost; value per key = median over successful reps, raw samples under runs, queries sorted ascending by median; contended = keys whose surrounding sentinel no-ops ran >2x the run median, unstable = keys whose own reps spread >2.5x (max/min), regressed = keys whose median exceeds 2x (and +0.5s) their value in the clean solo BENCH_LOCAL.json at git HEAD (catches sustained load the sentinels miss; empty if no clean committed baseline) - discard flagged medians in round-over-round comparisons, contended_run = the whole run is under sustained load (sentinel median >2x the solo reference) - treat such medians as load-inflated; every first-pass-flagged key is auto-rerun ONCE at sweep end and its rerun median replaces the flagged one (clearing the flag) only when the rerun itself is evidence-clean (no error, clean bracketing sentinels, rep spread <=2.5x) - both passes stay on the artifact under rerun; round-1 timed count(), which dropped sorts via EliminateSorts - totals not directly comparable); collect_audit = per-key max rows any single collect-class action delivered to the driver (topmost numOutputRows capped by root limits), violations = keys over the cap (default 10000, SPARK_GRAFT_COLLECT_CAP; the three memory-sink streaming keys carry finite elevated caps ~10x their sf0.1 result size instead of an exemption) - a non-empty list fails the run"
-    val contJson = contended.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val unstJson = unstable.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val regrJson = regressed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val sentJson = s"""{"base":${r3(sentinelBase)},"ref":${r3(sentinelRef)},"max":${r3(sentinels.max)},"samples":${sentinels.map(r3).mkString("[", ",", "]")}}"""
+    val method = s"median of $reps noop-format writes per query after $warmup untimed warm-up rep (steady-state: codegen compile paid before timing; includes final ORDER BY cost; value per key = median over successful reps, raw samples under runs, queries sorted ascending by median; contended = keys whose surrounding sentinel no-ops ran >2x the run median, unstable = keys whose own reps spread >2.5x (max/min), regressed = keys whose median exceeds 2x (and +0.5s) their value in the clean solo BENCH_LOCAL.json at git HEAD measured with the same cpus and sf (catches sustained load the sentinels miss; empty if no such baseline, baseline_skipped = why) - discard flagged medians in round-over-round comparisons, contended_run = the whole run is under sustained load (sentinel median >2x the solo reference) - treat such medians as load-inflated; every first-pass-flagged key is auto-rerun ONCE at sweep end and its rerun median replaces the flagged one (clearing the flag) only when the rerun itself is evidence-clean (no error, clean bracketing sentinels, rep spread <=2.5x) - both passes stay on the artifact under rerun; round-1 timed count(), which dropped sorts via EliminateSorts - totals not directly comparable); collect_audit = per-key max rows any single collect-class action delivered to the driver (topmost numOutputRows capped by root limits), violations = keys over the cap (default 10000, SPARK_GRAFT_COLLECT_CAP; the three memory-sink streaming keys carry finite elevated caps ~10x their sf0.1 result size instead of an exemption) - a non-empty list fails the run"
     // full JSON (all keys + raw samples) lands in the repo; stdout gets a
     // COMPACT line instead — rounds 1-4 all show "parsed": null in
     // BENCH_r*.json because the full ~5 kB line overflowed the harness's
     // ~2000-char stdout tail and could never be json.loads'd whole
-    val rerunJson = reruns.map { case (k, m, _, e, clean) =>
+    val rerun = VectorMap.from(reruns.map { case (k, m, _, e, clean) =>
       val first = results.collectFirst { case (`k`, m0, _, _) => m0 }.getOrElse(0.0)
-      s""""$k":{"first":${r3(first)},"rerun":${if (e.isDefined) "null" else r3(m)},"clean":$clean}"""
-    }.mkString("{", ",", "}")
+      k -> VectorMap("first" -> r3(first), "rerun" -> (if (e.isDefined) null else r3(m)), "clean" -> clean)
+    })
     // drain the bus so the last key's collect events are attributed,
     // then close the audit: keys whose biggest single driver collect
     // exceeded the cap are VIOLATIONS (whitelist currently empty — the
@@ -304,16 +275,20 @@ object Bench {
     val collectViolations = audit.collect {
       case (k, n) if n > collectWhitelist.getOrElse(k, collectCap.toLong) => k
     }.toSeq.sorted
-    val over1k = audit.filter(_._2 > 1000).toSeq.sortBy(-_._2)
-      .map { case (k, n) => s""""$k":$n""" }.mkString("{", ",", "}")
-    // drain_timeouts: keys whose post-run bus drain timed out — their
-    // straggler collect events attribute to the NEXT key, so a
-    // violation adjacent to one of these is suspect (r15 advice)
-    val drainJson = collectAudit.drainTimeouts()
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val collectJson =
-      s"""{"cap":$collectCap,"over_1k":$over1k,"drain_timeouts":$drainJson,"violations":${collectViolations.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
-    val fullJson = s"""{"method":"$method","runs":$runs,"queries":$qs,"errors":$errs,"sentinel":$sentJson,"contended":$contJson,"unstable":$unstJson,"regressed":$regrJson,"rerun":$rerunJson,"collect_audit":$collectJson,"baseline_checked":${baseQ.nonEmpty},"contended_run":$runContended,"sf":"$sfDir","n_queries":${ok.size},"n_errors":$nErrors,"per_key_mean":${r3(if (ok.nonEmpty) total / ok.size else 0.0)},"unit":"sec","metric":"total","value":${r3(total)}}"""
+    val collectJson = VectorMap(
+      "cap" -> collectCap,
+      "over_1k" -> VectorMap.from(audit.filter(_._2 > 1000).toSeq.sortBy(-_._2)),
+      // drain_timeouts: keys whose post-run bus drain timed out — their
+      // straggler collect events attribute to the NEXT key, so a
+      // violation adjacent to one of these is suspect (r15 advice)
+      "drain_timeouts" -> collectAudit.drainTimeouts(),
+      "violations" -> collectViolations)
+    // the setup a later run's regression gate compares against, then the
+    // headline fields, last in every artifact
+    val tail = Seq("sf" -> sfDir, "cpus" -> cpus, "git_commit" -> git("rev-parse", "HEAD").map(_.trim),
+      "max_heap_mb" -> Runtime.getRuntime.maxMemory / (1L << 20), "n_queries" -> ok.size,
+      "n_errors" -> nErrors, "per_key_mean" -> r3(if (ok.nonEmpty) total / ok.size else 0.0))
+    val headline = Seq("unit" -> "sec", "metric" -> "total", "value" -> r3(total))
     // a BENCH_ONLY partial sweep must NOT silently overwrite the
     // committed full-sweep BENCH_LOCAL.json — default partial output to
     // a temp file instead (override explicitly if you mean it)
@@ -324,25 +299,29 @@ object Bench {
         p
       } else "BENCH_LOCAL.json"
     }
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(outFile), (fullJson + "\n").getBytes("UTF-8"))
+    Harness.writeJson(outFile, VectorMap.from(Seq("method" -> method, "runs" -> runs,
+      "queries" -> qs, "errors" -> errs,
+      "sentinel" -> VectorMap("base" -> r3(sentinelBase), "ref" -> r3(sentinelRef),
+        "max" -> r3(sentinels.max), "samples" -> sentinels.map(r3)),
+      "contended" -> contended, "unstable" -> unstable, "regressed" -> regressed,
+      "rerun" -> rerun, "collect_audit" -> collectJson, "baseline_checked" -> baseQ.nonEmpty,
+      "baseline_skipped" -> baseline.left.toOption, "contended_run" -> runContended) ++ tail ++ headline))
+    def compact(queries: VectorMap[String, Any], note: Seq[(String, Any)]) =
+      VectorMap.from(Seq("full" -> outFile, "queries" -> queries, "errors" -> errs,
+        "n_contended" -> contended.size, "n_unstable" -> unstable.size,
+        "n_regressed" -> regressed.size, "n_collect_violations" -> collectViolations.size,
+        "contended_run" -> runContended) ++ tail ++ note ++ headline)
     // compact stdout line: slowest 25 keys only (the rest are sub-second
-    // scheduling-floor keys), headline fields last; ~900 chars total so the
-    // whole line survives inside the tail window alongside sbt's epilogue
-    val topQs = byTime.takeRight(25).map { case (k, m, _, e) => keyVal(k, m, e) }
-      .mkString("{", ",", "}")
-    val compact = s"""{"full":"$outFile","queries":$topQs,"errors":$errs,"n_contended":${contended.size},"n_unstable":${unstable.size},"n_regressed":${regressed.size},"n_collect_violations":${collectViolations.size},"contended_run":$runContended,"sf":"$sfDir","n_queries":${ok.size},"n_errors":$nErrors,"per_key_mean":${r3(if (ok.nonEmpty) total / ok.size else 0.0)},"queries_note":"slowest 25 of ${results.size}; every key + sentinel detail in $outFile","unit":"sec","metric":"total","value":${r3(total)}}"""
-    println(compact)
+    // scheduling-floor keys), headline fields last; ~1000 chars total so
+    // the whole line survives inside the tail window alongside sbt's epilogue
+    println(Harness.json.writeValueAsString(compact(medians(byTime.takeRight(25)), Seq("queries_note" ->
+      s"slowest 25 of ${results.size}; every key + sentinel detail in $outFile"))))
     // the same compact line, ALL-keys queries map, to a fixed file-wise
     // contract (r16 verdict ask #2): two rounds of PERF had an empty
     // per_query table because the stdout line arrives '[info]'-prefixed
     // through sbt's logger and the driver's extractor rejects it. Full
     // sweeps only — a partial BENCH_ONLY run must not masquerade as one.
-    if (only.isEmpty) {
-      val compactAll = s"""{"full":"$outFile","queries":$qs,"errors":$errs,"n_contended":${contended.size},"n_unstable":${unstable.size},"n_regressed":${regressed.size},"n_collect_violations":${collectViolations.size},"contended_run":$runContended,"sf":"$sfDir","n_queries":${ok.size},"n_errors":$nErrors,"per_key_mean":${r3(if (ok.nonEmpty) total / ok.size else 0.0)},"unit":"sec","metric":"total","value":${r3(total)}}"""
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get("BENCH_COMPACT.json"), (compactAll + "\n").getBytes("UTF-8"))
-    }
+    if (only.isEmpty) Harness.writeJson("BENCH_COMPACT.json", compact(qs, Nil))
     if (collectViolations.nonEmpty)
       System.err.println(s"[bench] COLLECT-AUDIT VIOLATIONS (> $collectCap rows to the driver): ${collectViolations.mkString(", ")}")
     spark.stop()

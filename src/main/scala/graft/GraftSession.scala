@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 import graft.plans.GraftExtensions
 
-/** Session factory with the engine's recommended configuration — the
-  * entry point for a user adopting the library.
+/** The one session factory: every harness main (through [[Harness]])
+  * and the test suite's shared session build from it, so the setup that
+  * is benched, verified and tested is the one a library user gets.
   *
   * Settings and why:
   *  - AQE on (runtime re-planning: skew splits, shuffle coalescing,
@@ -16,10 +17,11 @@ import graft.plans.GraftExtensions
   *  - UTC session timezone: cross-engine/time-function determinism.
   *  - ns-as-long parquet reads: required for ns-precision timestamp
   *    columns (see [[Tables.events]]).
-  *  - [[GraftExtensions]] injected so `graft_dot` and future native
-  *    expressions resolve in SQL. Note extensions only apply when the
-  *    builder CREATES the session; `getOrCreate` against a live session
-  *    keeps the existing one.
+  *  - no web UI; set `spark.ui.enabled=true` on the builder to get one.
+  *  - [[GraftExtensions]] injected so `graft_dot` and `graft_scatter`
+  *    resolve in SQL. Extensions only apply when the builder CREATES
+  *    the session; `getOrCreate` against a live session keeps the
+  *    existing one.
   */
 object GraftSession {
   def builder(master: String = "local[*]",
@@ -41,4 +43,5 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
 }

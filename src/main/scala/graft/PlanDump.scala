@@ -2,10 +2,10 @@ package graft
 
 /** Dev tool (optimization rounds): dump `.explain("formatted")` for the
   * named keys to `<outDir>/<key>_<tag>.txt` — the plan evidence the
-  * round's judge checks claims against (plans/r16/). Same session shape
-  * as [[Bench]] (local master, shuffle partitions from the env) so the
-  * dumped plan is the one the bench executes, not a differently-sized
-  * variant.
+  * round's judge checks claims against (plans/r16/). It runs on
+  * [[Bench]]'s session, [[Harness.session]] with `SPARK_GRAFT_CPUS`
+  * cores (default: all), so the dumped plan is the one the bench
+  * executes at the same core count, not a differently-sized variant.
   *
   * Usage: PlanDump <outDir> <tag> <key>[,<key>...]
   */
@@ -17,15 +17,7 @@ object PlanDump {
     val unknown = keys.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown keys: ${unknown.mkString(", ")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(logLevel = "ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     keys.foreach { k =>
       val df = SparkEntry.queries(k)(spark, sfDir)

@@ -1,7 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.immutable.VectorMap
+
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import Harness.r3
 
 /** 100× rehearsal (round-10 verdict ask #8): synthesize an sf1-equivalent
   * corpus by unioning sf0.1 FACTOR× with consistent id offsets, then run
@@ -94,15 +98,7 @@ object ScaleRehearsal {
     val outFile = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "BENCH_SF1_SAMPLE.json")
     val keys = sys.env.get("SPARK_GRAFT_SCALE_KEYS")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(DefaultKeys)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val unknown = keys.filterNot(SparkEntry.queries.keySet)
     require(unknown.isEmpty, s"unknown keys: ${unknown.mkString(", ")}")
     // the marker carries src, factor AND a synth-layout version — the
@@ -123,15 +119,14 @@ object ScaleRehearsal {
       val t0 = System.nanoTime()
       SparkEntry.queries(key)(spark, dir).write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      Harness.releasePinned(spark)
       dt
     }
     def outRows(key: String, dir: String): Long = {
       val n = SparkEntry.queries(key)(spark, dir).count()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      Harness.releasePinned(spark)
       n
     }
-    def r3(d: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, d)
     final case class K(base: Double, scaled: Double, ratio: Double,
                        rows: Option[(Long, Long, Double)])
     val rows = keys.map { k =>
@@ -172,10 +167,8 @@ object ScaleRehearsal {
           System.err.println(s"[scale] $k output rows $rb -> $rs (x${r3(or)})")
           Some((rb, rs, or))
         } else None
-        (k, Some(K(base, scaled, ratio, counts)), None: Option[String])
-      } catch { case t: Throwable =>
-        (k, None, Some(t.toString.replaceAll("[^\\x20-\\x7e]", " ").replace("\\", " ").replace("\"", " ").take(160)))
-      }
+        k -> Right(K(base, scaled, ratio, counts))
+      } catch { case t: Throwable => k -> Left(Harness.errorText(t)) }
     }
     // flagged keys split by the adjudication: output-bound (time grew no
     // faster than the result did — intrinsic, not a plan defect) vs
@@ -183,23 +176,21 @@ object ScaleRehearsal {
     // scaled-timing noise (a measured 11.2x on a 10x corpus with exactly
     // 10x output) from masquerading as a blowup — the signal sought is
     // 10x vs 100x, not 1.1x.
-    val flagged = rows.collect { case (k, Some(v), _) if v.ratio > factor * 1.25 => (k, v) }
+    val flagged = rows.collect { case (k, Right(v)) if v.ratio > factor * 1.25 => (k, v) }
     val outputBound = flagged.collect {
       case (k, v) if v.rows.exists(r => v.ratio <= r._3 * 1.25) => k }
     val superLinear = flagged.map(_._1).filterNot(outputBound.contains)
-    val keysJson = rows.map {
-      case (k, Some(v), _) =>
-        val rj = v.rows.fold("") { case (rb, rs, or) =>
-          s""","rows_base":$rb,"rows_scaled":$rs,"rows_ratio":${r3(or)}""" }
-        s""""$k":{"base_sec":${r3(v.base)},"scaled_sec":${r3(v.scaled)},"ratio":${r3(v.ratio)}$rj}"""
-      case (k, None, Some(e)) => s""""$k":{"error":"$e"}"""
-      case (k, _, _) => s""""$k":{}"""
-    }.mkString("{", ",", "}")
+    val keysJson = VectorMap.from(rows.map {
+      case (k, Right(v)) => k -> VectorMap.from(Seq("base_sec" -> r3(v.base),
+        "scaled_sec" -> r3(v.scaled), "ratio" -> r3(v.ratio)) ++ v.rows.toSeq.flatMap {
+          case (rb, rs, or) => Seq("rows_base" -> rb, "rows_scaled" -> rs, "rows_ratio" -> r3(or)) })
+      case (k, Left(e)) => k -> Map("error" -> e)
+    })
     val note = s"scaled corpus = $src unioned x$factor with per-keyspace id strides (events.user_id shares the cust stride so events-to-orders FK fanout is faithful); payloads unperturbed so dedup keys see ~${factor}x duplicate rate (adversarially heavy); base = median of 3 reps at $src, scaled = 1 rep after warm-up; output rows_base/rows_scaled recorded for EVERY key whose time ratio exceeds the data factor; keys with time ratio > 1.25x the data growth are adjudicated against that OUTPUT growth: output_bound = result grew at least as fast as time (within the same 1.25 noise tolerance; intrinsic, production mitigation = exact-dedup-first composition as in q_llm_pipeline*), super_linear = work genuinely outran both"
-    val json = s"""{"note":"$note","factor":$factor,"src":"$src","scaled_dir":"$dst","keys":$keysJson,"output_bound":${outputBound.map("\"" + _ + "\"").mkString("[", ",", "]")},"super_linear":${superLinear.map("\"" + _ + "\"").mkString("[", ",", "]")},"n_keys":${keys.size},"n_errors":${rows.count(_._3.isDefined)}}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(outFile), (json + "\n").getBytes("UTF-8"))
-    println(json)
+    println(Harness.writeJson(outFile, VectorMap("note" -> note, "factor" -> factor,
+      "src" -> src, "scaled_dir" -> dst, "keys" -> keysJson, "output_bound" -> outputBound,
+      "super_linear" -> superLinear, "n_keys" -> keys.size, "n_errors" -> rows.count(_._2.isLeft))))
     spark.stop()
-    if (rows.exists(_._3.isDefined)) sys.exit(1)
+    if (rows.exists(_._2.isLeft)) sys.exit(1)
   }
 }

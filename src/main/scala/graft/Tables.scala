@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.functions._
 
 /** Parquet loaders for the star schema described in TESTDATA.md /
@@ -51,32 +52,40 @@ object Tables {
     * where one small scan task is the right shape. Disable explicitly
     * with spark.graft.scan.fanout=false to measure the starved layout
     * itself. */
-  /** Planned-scan-task count per (application, path, cores): computing
-    * it costs a full physical planning + RDD conversion of the scan
-    * (r16 advice #4 — some keys build documents() several times), and
-    * the answer is stable for a fixed file set within an application.
-    * Bounded: one small entry per distinct corpus path per app. */
+  /** Planned-scan-task count per (application, sorted files, cores):
+    * computing it costs a full physical planning + RDD conversion of the
+    * scan (r16 advice #4 — some keys build documents() several times);
+    * a path overwritten in place is a new file set, measured again.
+    * Bounded: one small entry per distinct corpus file set per app. */
   private val scanTasksCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Int), Int]
+    scala.collection.concurrent.TrieMap.empty[(String, Seq[String], Int), Int]
 
-  private def scaled(df: DataFrame, path: String,
+  private[graft] val FanoutConf = "spark.graft.scan.fanout"
+
+  /** Marks the repartition [[scaled]] inserts; the value is the table's
+    * payload column. [[graft.plans.IdleFanoutPrune]] removes only nodes
+    * that carry it. */
+  private[graft] val FanoutTag: TreeNodeTag[String] = TreeNodeTag[String]("graft.scan.fanout")
+
+  /** Tolerant, loud conf parse (r16 advice #4): unset is on, only
+    * "true"/"false" (any case) are meaningful, anything else fails. */
+  private[graft] def fanoutEnabled(value: Option[String]): Boolean = value match {
+    case None => true
+    case Some(v) if v.trim.equalsIgnoreCase("true") => true
+    case Some(v) if v.trim.equalsIgnoreCase("false") => false
+    case Some(v) => throw new IllegalArgumentException(
+      s"$FanoutConf must be true or false, got '$v'")
+  }
+
+  private def scaled(df: DataFrame, payload: String,
                      key: org.apache.spark.sql.Column*): DataFrame = {
     val spark = df.sparkSession
-    // tolerant, loud conf parse (r16 advice #4): only "true"/"false"
-    // (any case) are meaningful; anything else must not silently pick a
-    // branch via an unhelpful IllegalArgumentException from toBoolean
-    val enabled = spark.conf.getOption("spark.graft.scan.fanout") match {
-      case None => true
-      case Some(v) if v.trim.equalsIgnoreCase("true") => true
-      case Some(v) if v.trim.equalsIgnoreCase("false") => false
-      case Some(v) => throw new IllegalArgumentException(
-        s"spark.graft.scan.fanout must be true or false, got '$v'")
-    }
-    if (!enabled) df
+    if (!fanoutEnabled(spark.conf.getOption(FanoutConf))) df
     else {
       val want = spark.sparkContext.defaultParallelism
       val have = scanTasksCache.getOrElseUpdate(
-        (spark.sparkContext.applicationId, path, want), df.rdd.getNumPartitions)
+        (spark.sparkContext.applicationId, df.inputFiles.sorted.toSeq, want),
+        df.rdd.getNumPartitions)
       if (2 * have <= want) {
         // shape-scoped opt-out (r17): the rule removes THIS repartition
         // from plans where column pruning shows no payload column ever
@@ -86,7 +95,9 @@ object Tables {
         if (!rules.contains(graft.plans.IdleFanoutPrune))
           spark.experimental.extraOptimizations =
             rules :+ graft.plans.IdleFanoutPrune
-        df.repartition(want, key: _*)
+        val fanned = df.repartition(want, key: _*)
+        fanned.queryExecution.analyzed.setTagValue(FanoutTag, payload)
+        fanned
       } else df
     }
   }
@@ -114,6 +125,6 @@ object Tables {
     }
   }
   def documents(spark: SparkSession, dir: String): DataFrame =
-    scaled(apply(spark, dir, "documents"), s"$dir/documents.parquet", col("doc_id"))
+    scaled(apply(spark, dir, "documents"), "text", col("doc_id"))
   def embeddings(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "embeddings")
 }

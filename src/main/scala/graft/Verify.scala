@@ -1,28 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is ns-precision parquet; see graft.Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // silence WindowExec's "No Partition Defined" for the documented
-    // bounded partition-less windows (AUC bins, shuffle-bucket offsets,
-    // ROC/lift curve bins) — they run over aggregate rows, not data;
-    // see Bench for detail
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     // every registered key must leave a visible trace (round-9 verdict
     // ask #3: erroring keys VANISHED from CORRECTNESS_r08/r09 because no
@@ -50,29 +32,10 @@ object Verify {
             .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
         } catch { case _: Throwable => () }
       }
-      // free blocks the query left pinned (localCheckpoint streams) —
-      // the ContextCleaner's periodic GC is 30 min, far longer than
-      // this run; nothing is shared between queries, only leaked
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      Harness.releasePinned(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val errJson = failures
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
+    Harness.writeJson(s"$outDir/oracle_sql.json", SparkEntry.oracleSql)
+    Harness.writeJson(s"$outDir/errors.json", failures)
     if (failures.nonEmpty)
       System.err.println(s"[verify] ${failures.size} of ${SparkEntry.queries.size} keys FAILED: ${failures.keys.mkString(", ")}")
     spark.stop()

@@ -5,8 +5,8 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Session extension registering graft's native expressions for SQL use
-  * (`SELECT graft_dot(a, b) ...`). Install with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * (`SELECT graft_dot(a, b) ...`). [[graft.GraftSession]] installs it;
+  * a session built elsewhere gets it with
   * `--conf spark.sql.extensions=graft.plans.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

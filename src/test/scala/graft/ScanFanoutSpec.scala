@@ -125,4 +125,34 @@ class ScanFanoutSpec extends SparkSpec {
         .orderBy("doc_id").collect().toSeq)
     assert(rows(false) == rows(true))
   }
+
+  test("IdleFanoutPrune keeps a repartition the user wrote") {
+    val plan = withFanout(true)(Tables.documents(spark, sfDir).select("doc_id")
+      .repartition(200, col("doc_id")).queryExecution.executedPlan.toString)
+    assert(plan.contains("Exchange hashpartitioning(doc_id") && plan.contains(", 200)"),
+      s"the user's repartition lost its exchange:\n$plan")
+  }
+
+  test("IdleFanoutPrune does nothing while spark.graft.scan.fanout is false") {
+    // built with the fanout on, so the frame carries the fanout node;
+    // planned with it off, so the rule must leave that node alone
+    val meta = withFanout(true)(Tables.documents(spark, sfDir).select("doc_id", "source"))
+    val plan = withFanout(false)(meta.queryExecution.executedPlan.toString)
+    assert(plan.contains("Exchange"), s"the rule ignored its flag:\n$plan")
+  }
+
+  test("an overwritten corpus path is measured again, not served from the cache") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_fanout").toString
+    try {
+      val src = Tables.documents(spark, sfDir)
+      src.coalesce(1).write.parquet(s"$dir/documents.parquet")
+      val starved = withFanout(true)(Tables.documents(spark, dir))
+      assert(starved.queryExecution.executedPlan.toString.contains("Exchange"))
+      src.repartition(16).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val plan = withFanout(true)(Tables.documents(spark, dir)).queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange"), s"the 16-file corpus still fans out:\n$plan")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
 }

@@ -4,17 +4,13 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites (single JVM-wide SparkSession — suite
-  * startup dominates otherwise). UTC + ns-parquet settings mirror the
-  * driver's Verify session. */
+  * startup dominates otherwise), built by [[GraftSession]] like every
+  * main's, at 8 cores whatever the box: the plan pins assume 8 shuffle
+  * partitions. Only the test-only settings below are added. */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
+    val s = GraftSession.builder("local[8]", 8)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
       // memory-pressure pin for the WHOLE suite: the memory manager

@@ -137,12 +137,14 @@ class VectorOpsSpec extends SparkSpec {
   }
 
   test("graft_dot is SQL-callable via GraftExtensions injection") {
-    // injectFunction path, applied to the live session's registry
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => graft.plans.DotProduct(exprs(0), exprs(1)), "built-in")
+    // nothing registered by hand: the suite's session comes from
+    // GraftSession, whose GraftExtensions inject both functions
     val d = spark.sql("SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d")
       .head().getDouble(0)
     assert(d == 11.0)
+    val v = spark.sql("SELECT graft_scatter(array(0, 2), array(1.0d, 5.0d), 4) AS v")
+      .head().getSeq[Double](0)
+    assert(v == Seq(1.0, 0.0, 5.0, 0.0))
   }
 
   test("reshape: shape metadata survives, flatten(reshape2d) == original") {
