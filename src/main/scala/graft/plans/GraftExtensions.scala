@@ -21,5 +21,15 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[ScatterToDense].getName, "graft_scatter"),
       (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
         ScatterToDense(exprs(0), exprs(1), exprs(2))))
+    e.injectFunction((
+      new FunctionIdentifier("graft_shingles"),
+      new ExpressionInfo(classOf[Shingles].getName, "graft_shingles"),
+      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
+        Shingles(exprs(0), Ngrams.width("graft_shingles", exprs(1)))))
+    e.injectFunction((
+      new FunctionIdentifier("graft_ngram_stats"),
+      new ExpressionInfo(classOf[NgramStats].getName, "graft_ngram_stats"),
+      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
+        NgramStats(exprs(0), Ngrams.width("graft_ngram_stats", exprs(1)))))
   }
 }

@@ -6,13 +6,17 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
-import graft.plans.Checkpointer
+import graft.plans.{Checkpointer, NgramStats, Shingles}
 
 /** Text-analysis + deduplication operators for LLM training-data
   * pipelines (SURVEY.md §2.C; beyond the reference surface, which has no
-  * text ops). All plumbing is Catalyst HOFs — tokenization, shingling,
-  * hashing and banding never leave whole-stage codegen; the only shuffles
-  * are the final groupBys, each keyed on a hash (uniform, skew-free).
+  * text ops). All plumbing is row-local Catalyst expressions — no UDFs,
+  * no RDD islands; the only shuffles are the final groupBys, each keyed
+  * on a hash (uniform, skew-free). Higher-order functions (`transform`,
+  * `aggregate`, `filter` with a lambda) run INTERPRETED inside the
+  * generated stage, and Catalyst does not hoist common subexpressions
+  * into their lambdas; so shingling, the hot per-window loop, is a
+  * native codegen'd expression ([[Shingles]], [[NgramStats]]) instead.
   */
 object TextOps {
 
@@ -128,11 +132,11 @@ object TextOps {
   /** [[baseHash60]] reduced mod p — the MinHash permutation domain. */
   def baseHash(s: Column): Column = pmod(baseHash60(s), lit(prime))
 
-  /** Word w-shingles of a token array as strings. */
-  def shingles(toks: Column, w: Int): Column =
-    transform(
-      sequence(lit(0), greatest(size(toks) - w, lit(0))),
-      i => concat_ws(" ", slice(toks, i + 1, lit(w))))
+  /** Word w-shingles of a token array as strings: `max(n − w, 0) + 1`
+    * space-joined windows, `[""]` for a null or empty array. A native
+    * linear pass ([[Shingles]]): a `transform` over window indices would
+    * re-evaluate `toks` (the split) inside its lambda for every window. */
+  def shingles(toks: Column, w: Int): Column = Shingles(toks, w)
 
   /** Document-frequency cap for shingle joins. At 100 TB, boilerplate
     * shared by millions of documents (headers, licenses, templates)
@@ -262,8 +266,8 @@ object TextOps {
 
   /** Exact-Jaccard verification of candidate (id_a, id_b) pairs —
     * the shared tail of [[nearDupPairs]] / [[nearDupPairsCapped]].
-    * Shingle sets are computed only for the surviving candidates,
-    * never for the whole corpus. */
+    * Shingle sets are computed for every document of `docs` (see the
+    * note below), then joined to both sides of each candidate pair. */
   private def verifyJaccard(cand: DataFrame, docs: DataFrame, w: Int,
                             minJaccard: Double): DataFrame = {
     // Shingle sets are computed PER DOCUMENT on the scan side, not per
@@ -1456,65 +1460,32 @@ object TextOps {
     * type-token ratio in [[qQualityScore]] misses exactly this failure
     * mode (a document looping 50 distinct words still has high TTR).
     *
-    * Scale shape (r16 split): the BIGRAM concentration needs a
-    * per-gram multiplicity, so it stays the explode → two-phase hash
-    * aggregation keyed on (doc_id, gram) — partial map-side combine
-    * absorbs the explosion (each document lives in one input
-    * partition, so the map side already reduces to per-doc distinct
-    * grams). The TRIGRAM signal needs only counts of elements vs
-    * DISTINCT elements — both single native array functions — so it is
-    * computed ROW-LOCALLY (`size` / `size ∘ array_distinct`) in one
-    * codegen pass over the corpus: no second explode, no per-doc
-    * countDistinct re-shuffle. Local A/B (RepProbe, one JVM, sf0.1):
-    * medians tie at ~1.9 s — 32 local cores hide the removed pass
-    * behind the bigram branch — but the plan drops one Exchange and a
-    * whole corpus explode→aggregate, which is the term that matters
-    * when the corpus, not the core count, is the long pole (guide
-    * §2.3/§2.4); output proven row-identical (symmetric diff 0).
-    *
-    * Why the bigram side is not row-local too? Measured at sf0.1:
-    * nested-lambda counting (`transform(distinct, x ->
-    * size(filter(g2, y -> y = x)))`) re-derives the whole shingle
-    * expression per outer element — Catalyst does not hoist common
-    * subexpressions into lambda bodies — 150 s (~30× worse); the
-    * sort-then-longest-run `aggregate` fold avoids the recompute but
-    * HOF lambdas evaluate interpreted with per-element struct
-    * allocation — 8.4 s. The codegen'd relational aggregation wins,
-    * and its shuffle carries (doc_id, gram, count) — already
-    * combiner-reduced, not the raw corpus. (`array_distinct` and
-    * `size` are single NATIVE functions, not lambdas — the trigram
-    * side dodges both failure modes.) */
+    * Scale shape: ONE row-local projection. [[NgramStats]] counts a
+    * document's shingles, distinct shingles and top multiplicity in a
+    * single native pass, so `top_bigram_frac = top_count / n_grams` at
+    * w = 2 and `dup_trigram_frac = 1 − n_distinct / n_grams` at w = 3
+    * need no explode, no shuffle and no join. The ratios are the same
+    * double divisions as the relational form (explode the bigrams,
+    * count per (doc_id, gram), then max/sum per doc; count and
+    * countDistinct the trigrams; join on doc_id), so the rounded output
+    * is bit-identical to it whenever `doc_id` is unique and non-null,
+    * as it is in `documents`. (With a repeated doc_id the relational
+    * form merged the repeats' grams into one row; a null doc_id never
+    * survived its join.) Every document yields at least one window —
+    * `[""]` for null or empty text — so no denominator is zero and
+    * every document gets a row, as under the relational form. */
   def repetitionReport(docs: DataFrame): DataFrame = {
     val toks = tokens(col("text"))
-    val g2 = docs.select(col("doc_id"), explode(shingles(toks, 2)).as("g"))
-      .groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("c"))
-      .groupBy(col("doc_id"))
-      .agg(max(col("c")).as("max2"), sum(col("c")).as("tot2"))
-    // Membership (r16 verdict "what's wrong" #1, closed by PROOF rather
-    // than a guard): a doc joins g3 iff its shingle array has ≥1
-    // element, and with the current [[shingles]] that is EVERY doc —
-    // sequence(0, greatest(…, 0)) emits ≥1 index for every input, even
-    // NULL text, where concat_ws skips the null slice and yields [""].
-    // So the row-local form's membership equals the old explode form's
-    // on all inputs (pinned by the degenerate-docs spec: 1-token,
-    // 2-token, empty AND null-text docs, old ≡ new row-for-row). A
-    // defensive filter(size(sh3) >= 1) was measured instead and
-    // REJECTED: the optimizer pushes it below the projection and
-    // re-evaluates the whole shingle expression per row (guide §4.4's
-    // duplicate-evaluation trap) — q_quality_repetition 0.76 → 2.46 s.
-    val g3 = docs
-      .select(col("doc_id"), shingles(toks, 3).as("sh3"))
-      .select(col("doc_id"),
-        size(col("sh3")).cast("long").as("tot3"),
-        size(array_distinct(col("sh3"))).cast("long").as("dist3"))
-    val topBigram = col("max2").cast("double") / col("tot2")
-    val dupTrigram = lit(1.0) - col("dist3").cast("double") / col("tot3")
-    g2.join(g3, Seq("doc_id"))
-      .select(
-        col("doc_id"),
-        round(topBigram, 6).as("top_bigram_frac"),
-        round(dupTrigram, 6).as("dup_trigram_frac"),
-        (topBigram > repTopBigramMax || dupTrigram > repDupTrigramMax).as("flagged"))
+    val stats = docs.select(col("doc_id"),
+      NgramStats(toks, 2).as("s2"), NgramStats(toks, 3).as("s3"))
+    val topBigram = col("s2.top_count").cast("double") / col("s2.n_grams")
+    val dupTrigram =
+      lit(1.0) - col("s3.n_distinct").cast("double") / col("s3.n_grams")
+    stats.select(
+      col("doc_id"),
+      round(topBigram, 6).as("top_bigram_frac"),
+      round(dupTrigram, 6).as("dup_trigram_frac"),
+      (topBigram > repTopBigramMax || dupTrigram > repDupTrigramMax).as("flagged"))
   }
 
   def qQualityRepetition(spark: SparkSession, dir: String): DataFrame =
@@ -1947,7 +1918,7 @@ object TextOps {
     // n-gram stats read only the doc's own tokens), so its input is
     // pre-filtered to the row-local survivors (eval carve-out + quality
     // cut) — the semi-join intersection is unchanged while its
-    // explode→aggregate pass runs over survivors (guide §2.3, r16).
+    // n-gram pass runs over survivors (guide §2.3, r16).
     // DECONTAMINATION is NOT restrictable (r17, closes the r16 advice
     // medium finding): shingleRows' df cap is computed over its INPUT
     // corpus, and the oracle's cap basis is the FULL corpus (the s1
@@ -2074,7 +2045,7 @@ object TextOps {
     // function (it reads only the doc's own n-grams), so its input is
     // pre-filtered to the docs the row-local gates (eval carve-out,
     // quality, Gopher) already keep — the semi-join intersection is
-    // unchanged, but its explode→aggregate pass runs over survivors
+    // unchanged, but its n-gram pass runs over survivors
     // instead of the whole corpus (guide §2.3, r16). DECONTAMINATION is
     // NOT restrictable (r17, closes the r16 advice medium finding):
     // shingleRows' df cap is computed over its INPUT corpus and the

@@ -1,6 +1,13 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, Expression, StringSplit}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.graftbridge.ListenerBridge
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Pins shuffle-Exchange and Sort counts of the heaviest gate queries so
   * a plan regression fails tests instead of drifting silently in bench
@@ -36,7 +43,9 @@ class PlanRegressionSpec extends SparkSpec {
     ("q_mlp_predict", 1, 1),
     // round-5 keys (measured at sf0.001 like the rest)
     ("q_decontaminate", 4, 1),
-    ("q_quality_repetition", 5, 1),
+    // one row-local NgramStats projection (no explode, no per-gram
+    // aggregation, no join): the only exchange is the output ORDER BY
+    ("q_quality_repetition", 1, 1),
     ("q_pack_chunks", 2, 2),
     ("q_dedup_incremental", 3, 1),
     ("q_dedup_latest", 2, 3),
@@ -49,7 +58,10 @@ class PlanRegressionSpec extends SparkSpec {
     // round-6 keys: the composed pipeline is the sum of its stages'
     // shapes (gates + digest dedup + shingle join + CC rounds + keyed
     // window); simhash_banded is fingerprint agg + band self-join
-    ("q_llm_pipeline", 15, 3),
+    // tightened from 15/3 to the measured count: the gated, deduped
+    // survivor sets are checkpoints (r17), so the final plan holds only
+    // what runs after them (cluster semi-join, pack window, output sort)
+    ("q_llm_pipeline", 6, 2),
     ("q_dedup_simhash_banded", 3, 1),
     // round-6 pipeline additions: substring dedup is digest-join-shaped
     // like ngram; scrub is a single codegen pass (1 exch = final sort);
@@ -211,6 +223,44 @@ class PlanRegressionSpec extends SparkSpec {
       assert(e <= maxExch && s <= maxSort,
         s"$name plan drifted: exchanges=$e (pin $maxExch), sorts=$s (pin $maxSort)")
       info(s"$name: exchanges=$e sorts=$s")
+    }
+  }
+
+  /** Optimized plans of every query `run` executes (checkpoints
+    * included), plus `run`'s own result. */
+  private def optimizedPlans(run: => DataFrame): Seq[LogicalPlan] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(qe.optimizedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val df = run
+      df.write.format("noop").mode("overwrite").save()
+      ListenerBridge.flushListenerBus(spark.sparkContext, 60000L)
+      df.queryExecution.optimizedPlan +: seen.asScala.toSeq
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("shingling never re-splits the document inside a lambda") {
+    // the quadratic form: transform(sequence(..), i -> concat_ws(' ',
+    // slice(split(text, ' '), ..))) re-evaluates the split per window
+    def requadratic(p: LogicalPlan): Seq[Expression] =
+      p.collectWithSubqueries { case n => n.expressions }.flatten.flatMap(_.collect {
+        case t: ArrayTransform if t.function.exists(_.isInstanceOf[StringSplit]) => t
+      })
+    val docs = Tables.documents(spark, sfDir)
+    Seq[(String, () => DataFrame)](
+      "shingleRows" -> (() => text.TextOps.shingleRows(docs, 3)),
+      "repetitionReport" -> (() => text.TextOps.repetitionReport(docs)),
+      "llmPipelineV2" -> (() => text.TextOps.llmPipelineV2(docs))
+    ).foreach { case (name, run) =>
+      val plans = optimizedPlans(run())
+      assert(plans.size > 1, s"$name: no executed query was observed")
+      val bad = plans.flatMap(requadratic)
+      assert(bad.isEmpty, s"$name re-splits per shingle: ${bad.take(1).mkString}")
     }
   }
 }

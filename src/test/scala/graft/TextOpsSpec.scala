@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.CheckpointDirs.withCheckpointDir
 
+import graft.plans.NgramStats
 import graft.text.TextOps
 
 /** Dedup + text-analysis behavior on planted fixtures (FIXTURES.md §B
@@ -105,6 +106,118 @@ class TextOpsSpec extends SparkSpec {
       .select(TextOps.shingles(TextOps.tokens($"text"), 3).as("sh"))
       .head().getSeq[String](0)
     assert(out == Seq("a b c", "b c d"))
+  }
+
+  /** The HOF form [[TextOps.shingles]] had before the native kernel,
+    * verbatim: the reference spec the kernel must reproduce exactly. */
+  private def shinglesHof(toks: Column, w: Int): Column =
+    transform(
+      sequence(lit(0), greatest(size(toks) - w, lit(0))),
+      i => concat_ws(" ", slice(toks, i + 1, lit(w))))
+
+  private val shingleWidths = Seq(1, 2, 3, 5, 20)
+
+  /** Edge-case texts plus a 500-document seeded corpus: varied lengths
+    * (0 to 60 tokens), repeats, multi-byte tokens and stray spaces. */
+  private lazy val shingleCorpus = {
+    val edge = Seq(
+      Option.empty[String], Some(""), Some(" "), Some("  "),
+      Some(" lead"), Some("trail "), Some("double  space"),
+      Some(" both  ends "), Some("one"), Some("a b"), Some("a b c"),
+      Some("a b c d e"), Some("ünï cödé 日本語 テキスト 🙂 emoji 🙂"),
+      Some((1 to 20).mkString(" ")), Some((1 to 19).mkString(" ")))
+    val vocab = Vector("the", "a", "spam", "ham", "ß", "日本", "🙂", "x", "")
+    val rnd = new scala.util.Random(4242)
+    val seeded = (0 until 500).map { _ =>
+      Some((0 until rnd.nextInt(61)).map(_ => vocab(rnd.nextInt(vocab.size)))
+        .mkString(if (rnd.nextInt(10) == 0) "  " else " "))
+    }
+    (edge ++ seeded).zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text")
+      // above an exchange, so the projection is planned, not folded into
+      // the local relation by the optimizer
+      .repartition(3)
+  }
+
+  /** Runs `body` with expression codegen on (the default) and off. */
+  private def inBothEvalModes(body: String => Unit): Unit =
+    Seq("CODEGEN_ONLY", "NO_CODEGEN").foreach { mode =>
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      spark.conf.set("spark.sql.codegen.wholeStage", mode == "CODEGEN_ONLY")
+      try body(mode)
+      finally {
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+      }
+    }
+
+  test("Shingles kernel == the HOF shingles spec on edge cases and a seeded corpus") {
+    val toks = TextOps.tokens($"text")
+    inBothEvalModes { mode =>
+      shingleWidths.foreach { w =>
+        val rows = shingleCorpus
+          .select($"doc_id", $"text", TextOps.shingles(toks, w).as("k"),
+            shinglesHof(toks, w).as("h"))
+          .as[(Long, Option[String], Seq[String], Seq[String])].collect()
+        assert(rows.length == 515)
+        val bad = rows.filter(r => r._3 != r._4)
+        assert(bad.isEmpty, s"$mode w=$w: ${bad.take(3).mkString("\n")}")
+      }
+    }
+    // the documented shapes, spelled out
+    val one = Seq(Option.empty[String], Some(""), Some("a b")).toDF("text")
+      .select(TextOps.shingles(toks, 3).as("k")).as[Seq[String]].collect()
+    assert(one.toSeq == Seq(Seq(""), Seq(""), Seq("a b")))
+  }
+
+  test("Shingles kernel skips null tokens like concat_ws") {
+    // not foldable, so the generated code runs, not constant folding
+    val toks = array(lit("a"), when($"id" > 0, lit("z")), lit("b"), lit("c"))
+    shingleWidths.foreach { w =>
+      val r = spark.range(1).repartition(1)
+        .select(TextOps.shingles(toks, w).as("k"), shinglesHof(toks, w).as("h"))
+        .as[(Seq[String], Seq[String])].head()
+      assert(r._1 == r._2, s"w=$w")
+    }
+    assert(spark.range(1).select(TextOps.shingles(lit(null).cast("array<string>"), 2))
+      .as[Seq[String]].head() == Seq(""))
+    assert(intercept[IllegalArgumentException](TextOps.shingles(toks, 0))
+      .getMessage.contains("width"))
+  }
+
+  test("NgramStats == counts over the HOF shingles") {
+    val toks = TextOps.tokens($"text")
+    inBothEvalModes { mode =>
+      shingleWidths.foreach { w =>
+        val sh = shinglesHof(toks, w)
+        val top = array_max(transform(array_distinct(sh),
+          g => size(filter(sh, x => x === g)))).cast("long")
+        val rows = shingleCorpus
+          .select($"doc_id", NgramStats(toks, w).as("s"),
+            struct(size(sh).cast("long"), size(array_distinct(sh)).cast("long"), top)
+              .as("h"))
+          .select($"doc_id", $"s.n_grams", $"s.n_distinct", $"s.top_count",
+            $"h.col1", $"h.col2", $"h.col3")
+          .as[(Long, Long, Long, Long, Long, Long, Long)].collect()
+        assert(rows.length == 515)
+        val bad = rows.filter(r => (r._2, r._3, r._4) != (r._5, r._6, r._7))
+        assert(bad.isEmpty, s"$mode w=$w: ${bad.take(3).mkString("\n")}")
+      }
+    }
+  }
+
+  test("graft_shingles and graft_ngram_stats are SQL-callable via GraftExtensions") {
+    // nothing registered by hand: GraftSession installs GraftExtensions
+    val r = spark.sql(
+      "SELECT graft_shingles(split(t, ' '), 2) AS sh, " +
+        "graft_ngram_stats(split(t, ' '), 2) AS st FROM VALUES ('a b a b') AS v(t)").head()
+    assert(r.getSeq[String](0) == Seq("a b", "b a", "a b"))
+    val st = r.getStruct(1)
+    assert((st.getAs[Long]("n_grams"), st.getAs[Long]("n_distinct"),
+      st.getAs[Long]("top_count")) == (3L, 2L, 2L))
+    val e = intercept[Exception](spark.sql(
+      "SELECT graft_shingles(split(t, ' '), n) FROM VALUES ('a b', 2) AS v(t, n)").collect())
+    assert(e.getMessage.contains("int literal"), e.getMessage)
   }
 
   test("df cap drops a planted hot shingle and bounds the pair join") {
@@ -420,29 +533,30 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("repetition report: degenerate docs keep the pre-r16 explode membership") {
-    // r16 verdict "what's wrong" #1 / r17 ask #5: the row-local trigram
-    // branch must emit rows for EXACTLY the docs the old
-    // explode(shingles)->aggregate inner join kept. Degenerate corpus:
-    // sub-trigram docs (1 and 2 tokens), an empty string, and a NULL
-    // text. Measured here: the feared divergence does NOT exist —
-    // shingles() emits >=1 element for EVERY input (null text included:
-    // concat_ws skips the null slice, yielding [""]), so both forms
-    // keep every doc and the size(sh3)>=1 guard never fires; this spec
-    // pins the full-row equivalence on the degenerate regime.
+    // the row-local NgramStats report must emit exactly the rows of the
+    // relational form (explode shingles -> aggregate -> inner join),
+    // here over the HOF shingles spec it was written against.
+    // Degenerate corpus: sub-trigram docs (1 and 2 tokens), an empty
+    // string, a NULL text (shingles emit [""] for it, so the relational
+    // form keeps it too), and planted looping docs.
     val docs = Seq(
       (1L, Some("solo")),
       (2L, Some("two tokens")),
       (3L, Some("")),
       (4L, Option.empty[String]),
-      (5L, Some(sentence(11, 40)))
+      (5L, Some(sentence(11, 40))),
+      (6L, Some(Seq.fill(25)("spam ham").mkString(" "))),
+      (7L, Some(Seq.fill(12)("buy now cheap pills").mkString(" "))),
+      (8L, Some(Seq.fill(30)("loop").mkString(" "))),
+      (9L, Some(sentence(12, 30) + " " + Seq.fill(10)("to the moon").mkString(" ")))
     ).toDF("doc_id", "text")
-    // the pre-r16 form, verbatim (git b02539b~1)
+    // the pre-r16 form (git b02539b~1) over the HOF shingles
     val toks = TextOps.tokens($"text")
-    val g2 = docs.select($"doc_id", explode(TextOps.shingles(toks, 2)).as("g"))
+    val g2 = docs.select($"doc_id", explode(shinglesHof(toks, 2)).as("g"))
       .groupBy($"doc_id", $"g").agg(count(lit(1)).as("c"))
       .groupBy($"doc_id")
       .agg(max($"c").as("max2"), sum($"c").as("tot2"))
-    val g3old = docs.select($"doc_id", explode(TextOps.shingles(toks, 3)).as("g"))
+    val g3old = docs.select($"doc_id", explode(shinglesHof(toks, 3)).as("g"))
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("tot3"), countDistinct($"g").as("dist3"))
     val topBigram = $"max2".cast("double") / $"tot2"
@@ -456,12 +570,11 @@ class TextOpsSpec extends SparkSpec {
       .as[(Long, Double, Double, Boolean)].collect().toSet
     val now = TextOps.repetitionReport(docs)
       .as[(Long, Double, Double, Boolean)].collect().toSet
-    assert(now == old, s"row-local trigram branch diverged:\nnow  $now\nold  $old")
-    // membership check: BOTH forms keep even the null-text doc (shingle
-    // array [""], one element) — the r16-advice hypothesis that the old
-    // explode dropped it is false, and this pins that fact
-    assert(now.exists(_._1 == 4L) && old.exists(_._1 == 4L),
-      s"null-text doc membership changed: $now")
+    assert(now == old, s"row-local report diverged:\nnow  $now\nold  $old")
+    assert(now.map(_._1) == (1L to 9L).toSet, s"membership changed: $now")
+    // the looping docs are flagged, the diverse one is not
+    val flagged = now.filter(_._4).map(_._1)
+    assert(Set(6L, 7L, 8L).subsetOf(flagged) && !flagged(5L), s"$now")
   }
 
   test("incremental dedup: in-batch dups collapse, corpus-known docs drop, fresh survive") {
