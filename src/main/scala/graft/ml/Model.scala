@@ -62,8 +62,12 @@ object ModelWeights {
   * model that can (1) score an example and (2) produce a log-loss
   * gradient with respect to its flat weight vector plugs into every
   * trainer and update rule unchanged. Implementations must be
-  * immutable — `withWeights` returns a new model around new weights,
-  * which is what lets a broadcast model ship into tasks safely.
+  * immutable apart from `weights.flat` — `withWeights` returns a new
+  * model around new weights, which is what lets a broadcast model ship
+  * into tasks safely — and must read `weights.flat` afresh on every
+  * call rather than cache anything derived from it: a trainer task
+  * steps a task-local copy of the weights in place (the only array
+  * the training loop mutates), never the broadcast model's.
   */
 trait DiffModel extends Serializable {
   def weights: ModelWeights
@@ -72,6 +76,18 @@ trait DiffModel extends Serializable {
   def predictProb(x: Array[Double]): Double
   /** d(logLoss)/d(flat) for one example, same layout as weights.flat. */
   def gradient(x: Array[Double], y: Double): Array[Double]
+
+  /** Adds this example's [[gradient]] into `acc` element by element
+    * (`acc(i) += g(i)`), leaving the weights untouched. `acc` is the
+    * caller's: an implementation writes only into it, never keeps a
+    * reference to it, and `acc` must not alias `weights.flat`. The
+    * default materializes [[gradient]]; hot models override it to
+    * accumulate without the per-example array. */
+  def addGradient(x: Array[Double], y: Double, acc: Array[Double]): Unit = {
+    val g = gradient(x, y)
+    var i = 0
+    while (i < acc.length) { acc(i) += g(i); i += 1 }
+  }
 
   def predictLabel(x: Array[Double]): Double =
     if (predictProb(x) >= 0.5) 1.0 else 0.0
@@ -231,22 +247,50 @@ private[ml] trait LayeredNet extends DiffModel {
 
   /** Forward pass keeping each layer's activations (backprop needs
     * them): acts(0) = x, acts(l+1) = layer l's output; the last is
-    * [[activateOutput]]-transformed in place. */
+    * [[activateOutput]]-transformed in place. Each sweep of a layer's
+    * input feeds four output units: four independent add chains, each
+    * summed in the same `i` order as the one-unit loop that finishes
+    * the layer, so every unit's sum is bit-identical either way. */
   protected final def forward(x: Array[Double]): Array[Array[Double]] = {
     val f = weights.flat
+    // locals for the lazy-val layout, hoisted out of the unit loops
+    val dims = this.dims; val wOff = this.wOff; val bOff = this.bOff
+    val nLayers = this.nLayers
     val acts = new Array[Array[Double]](nLayers + 1)
     acts(0) = x
     var l = 0
     while (l < nLayers) {
       val in = acts(l)
+      val nIn = in.length
+      val stride = dims(l)
+      val b = bOff(l)
+      val hidden = l < nLayers - 1 // raw logits on the last layer
       val out = new Array[Double](dims(l + 1))
       var j = 0
-      while (j < out.length) {
-        var s = f(bOff(l) + j)
-        val row = wOff(l) + j * dims(l)
+      while (j + 4 <= out.length) {
+        val r0 = wOff(l) + j * stride
+        val r1 = r0 + stride; val r2 = r1 + stride; val r3 = r2 + stride
+        var s0 = f(b + j); var s1 = f(b + j + 1)
+        var s2 = f(b + j + 2); var s3 = f(b + j + 3)
         var i = 0
-        while (i < in.length) { s += f(row + i) * in(i); i += 1 }
-        out(j) = if (l == nLayers - 1) s else math.tanh(s) // raw logits last
+        while (i < nIn) {
+          val v = in(i)
+          s0 += f(r0 + i) * v; s1 += f(r1 + i) * v
+          s2 += f(r2 + i) * v; s3 += f(r3 + i) * v
+          i += 1
+        }
+        out(j) = if (hidden) math.tanh(s0) else s0
+        out(j + 1) = if (hidden) math.tanh(s1) else s1
+        out(j + 2) = if (hidden) math.tanh(s2) else s2
+        out(j + 3) = if (hidden) math.tanh(s3) else s3
+        j += 4
+      }
+      while (j < out.length) {
+        var s = f(b + j)
+        val row = wOff(l) + j * stride
+        var i = 0
+        while (i < nIn) { s += f(row + i) * in(i); i += 1 }
+        out(j) = if (hidden) math.tanh(s) else s
         j += 1
       }
       acts(l + 1) = out
@@ -257,9 +301,19 @@ private[ml] trait LayeredNet extends DiffModel {
   }
 
   final def gradient(x: Array[Double], y: Double): Array[Double] = {
+    val g = new Array[Double](weights.flat.length)
+    addGradient(x, y, g)
+    g
+  }
+
+  /** Backprop straight into `acc`: each layer's outer product δ·aᵀ and
+    * its bias delta are added in place, with no per-example gradient
+    * array. */
+  override final def addGradient(x: Array[Double], y: Double,
+                                 acc: Array[Double]): Unit = {
     val f = weights.flat
+    val dims = this.dims; val wOff = this.wOff; val bOff = this.bOff
     val acts = forward(x)
-    val g = new Array[Double](f.length)
     var delta = outputDelta(acts(nLayers), y)
     var l = nLayers - 1
     while (l >= 0) {
@@ -267,9 +321,10 @@ private[ml] trait LayeredNet extends DiffModel {
       var j = 0
       while (j < delta.length) {
         val row = wOff(l) + j * dims(l)
+        val d = delta(j)
         var i = 0
-        while (i < in.length) { g(row + i) = delta(j) * in(i); i += 1 }
-        g(bOff(l) + j) = delta(j)
+        while (i < in.length) { acc(row + i) += d * in(i); i += 1 }
+        acc(bOff(l) + j) += d
         j += 1
       }
       if (l > 0) {
@@ -289,7 +344,6 @@ private[ml] trait LayeredNet extends DiffModel {
       }
       l -= 1
     }
-    g
   }
 }
 

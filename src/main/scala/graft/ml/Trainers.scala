@@ -15,10 +15,19 @@ import org.apache.spark.sql.functions.col
   * as SYNCHRONOUS epochs (SURVEY.md §2.A DistributedTrainer row):
   *
   *   per epoch:  broadcast center weights
-  *               → mapPartitions: local minibatch SGD per partition
-  *               → treeAggregate the per-partition results (one vector
-  *                 per partition, element-wise combine — O(log n) depth)
+  *               → mapPartitions: local minibatch SGD per partition,
+  *                 on a task-local copy of the weights stepped in place
+  *               → [[treeFold]] the per-partition results in partition
+  *                 order: collected and folded on the driver when there
+  *                 are ≤ [[mergeFanIn]] partitions, else first folded
+  *                 into ≤ [[mergeFanIn]] contiguous buckets on executors
   *               → driver applies the [[UpdateRule]] to move the center
+  *
+  * That is one Spark job per epoch. [[trainDistributedWithHistory]]
+  * adds no job per epoch for its loss curve: each epoch's pass also
+  * scores the center it broadcasts (the previous epoch's result), and
+  * one loss pass after the last epoch scores the final center — E+1
+  * jobs for E epochs.
   *
   * Every boundary is a Spark-managed stage, so training is
   * deterministic given a seed, straggler-tolerant (speculation), and
@@ -201,24 +210,33 @@ object Trainers {
   /** One local-SGD pass over a partition's rows, for ANY [[DiffModel]]
     * (the reference's worker loop, `workers.py › SGDWorker [H]`, is
     * likewise model-agnostic — it calls into the compiled model's
-    * gradient). Deterministic: rows are consumed in partition order. */
+    * gradient). Deterministic: rows are consumed in partition order.
+    * `init` is never mutated (in local mode it is the broadcast object
+    * every task shares): the pass steps a task-local copy of its
+    * weights in place, one minibatch at a time, and reuses one
+    * gradient buffer for the whole pass. */
   private def localSgd(
       init: DiffModel, rows: Iterator[(Array[Double], Double)],
       lr: Double, batchSize: Int): (ModelWeights, Long) = {
-    var m = init
+    require(batchSize >= 1, s"batchSize must be >= 1, got $batchSize")
+    val w = init.weights.flat.clone()
+    val m = init.withWeights(init.weights.copy(flat = w))
+    val g = new Array[Double](w.length)
     var n = 0L
-    rows.grouped(batchSize).foreach { batch =>
-      val g = new Array[Double](m.weights.flat.length)
-      batch.foreach { case (x, y) =>
-        val gi = m.gradient(x, y)
-        var i = 0
-        while (i < g.length) { g(i) += gi(i); i += 1 }
-        n += 1
-      }
-      val scale = lr / batch.size
-      m = m.withWeights(m.weights.copy(
-        flat = Array.tabulate(g.length)(i => m.weights.flat(i) - scale * g(i))))
+    var inBatch = 0
+    def step(): Unit = {
+      val scale = lr / inBatch
+      var i = 0
+      while (i < w.length) { w(i) = w(i) - scale * g(i); g(i) = 0.0; i += 1 }
+      inBatch = 0
     }
+    rows.foreach { case (x, y) =>
+      m.addGradient(x, y, g)
+      n += 1
+      inBatch += 1
+      if (inBatch == batchSize) step()
+    }
+    if (inBatch > 0) step()
     (m.weights, n)
   }
 
@@ -238,6 +256,10 @@ object Trainers {
     * (P, G), so the float result is bit-reproducible run to run — the
     * property a plain treeAggregate (task-arrival combine order) does
     * NOT give, and the early-stop determinism contract needs.
+    * With P ≤ [[mergeFanIn]] every bucket holds one partition, so the
+    * partials are collected without the shuffle and folded on the
+    * driver in partition-index order — the same fold, one stage fewer.
+    * `contrib` holds at most one (partition index, value) per partition.
     * Returns (fold, number of partials materialized on the driver). */
   private[graft] def treeFold[T](
       contrib: org.apache.spark.rdd.RDD[(Int, T)], numParts: Int,
@@ -250,16 +272,31 @@ object Trainers {
         (key.asInstanceOf[Int].toLong * g / math.max(numParts, 1)).toInt
     }
     import org.apache.spark.rdd.RDD.rddToOrderedRDDFunctions
-    val partials = contrib.repartitionAndSortWithinPartitions(part)
-      .mapPartitionsWithIndex { (gi, it) =>
-        if (it.isEmpty) Iterator.empty
-        else {
-          var acc = it.next()._2
-          it.foreach { kv => acc = merge(acc, kv._2) }
-          Iterator.single((gi, acc))
-        }
-      }.collect()
+    val partials =
+      if (g == numParts) contrib.collect()
+      else contrib.repartitionAndSortWithinPartitions(part)
+        .mapPartitionsWithIndex { (gi, it) =>
+          if (it.isEmpty) Iterator.empty
+          else {
+            var acc = it.next()._2
+            it.foreach { kv => acc = merge(acc, kv._2) }
+            Iterator.single((gi, acc))
+          }
+        }.collect()
     (partials.sortBy(_._1).map(_._2).reduceOption(merge), partials.length)
+  }
+
+  /** One partition's share of an epoch: its SGD result (None when the
+    * partition held no rows) and the broadcast center's summed log-loss
+    * over the same rows (zero unless the round probes). */
+  private final case class RoundStats(sgd: Option[MergeStats],
+                                      lossSum: Double, lossN: Long) {
+    def merge(o: RoundStats): RoundStats = RoundStats(
+      (sgd, o.sgd) match {
+        case (Some(a), Some(b)) => Some(a.merge(b))
+        case (a, b) => a.orElse(b)
+      },
+      lossSum + o.lossSum, lossN + o.lossN)
   }
 
   /** ONE synchronous epoch of the distributed loop: broadcast the
@@ -267,21 +304,36 @@ object Trainers {
     * per-partition [[MergeStats]] (never one vector per partition on
     * the driver), apply the update rule to move the center. Shared by
     * every distributed trainer (plain / with-history / early-stopped)
-    * so the SGD round exists exactly once (round-13 review). */
-  private def epochRound(data: org.apache.spark.rdd.RDD[(Array[Double], Double)],
-                         center: DiffModel, rule: UpdateRule,
-                         state: Array[Double], lr: Double,
-                         batchSize: Int): DiffModel = {
+    * so the SGD round exists exactly once (round-13 review).
+    *
+    * With `probe`, the same pass also sums the frozen broadcast
+    * center's log-loss over each partition's rows, in row order, and
+    * folds those sums exactly as [[meanLoss]] does: the second result
+    * is then bit-identical to `meanLoss(data, center)`, without its
+    * job. Without `probe` it is NaN. */
+  private[graft] def epochRound(
+      data: org.apache.spark.rdd.RDD[(Array[Double], Double)],
+      center: DiffModel, rule: UpdateRule, state: Array[Double], lr: Double,
+      batchSize: Int, probe: Boolean = false): (DiffModel, Double) = {
     val bc = data.sparkContext.broadcast(center)
     val contrib = data.mapPartitionsWithIndex { (pi, it) =>
-      val res = localSgd(bc.value, it, lr, batchSize)
-      if (res._2 == 0) Iterator.empty
-      else Iterator.single((pi, MergeStats.of(res._1, res._2)))
+      val frozen = bc.value
+      var s = 0.0; var k = 0L
+      val rows = if (!probe) it else it.map { r =>
+        s += frozen.logLoss(r._1, r._2); k += 1; r
+      }
+      val (w, n) = localSgd(frozen, rows, lr, batchSize)
+      Iterator.single((pi,
+        RoundStats(if (n == 0) None else Some(MergeStats.of(w, n)), s, k)))
     }
-    val (merged, _) = treeFold[MergeStats](contrib, data.getNumPartitions, _.merge(_))
+    val (merged, _) = treeFold[RoundStats](contrib, data.getNumPartitions, _.merge(_))
     bc.destroy()
-    merged.fold(center)(s =>
+    val next = merged.flatMap(_.sgd).fold(center)(s =>
       center.withWeights(rule.applyStats(center.weights, s, state)))
+    val loss =
+      if (!probe) Double.NaN
+      else merged.filter(_.lossN > 0).fold(0.0)(r => r.lossSum / r.lossN)
+    (next, loss)
   }
 
   /** Mean log-loss of `model` over `data` through the same
@@ -289,8 +341,9 @@ object Trainers {
     * combined in a fixed order, so the float total (and with it an
     * early-stop decision at the ulp margin) cannot vary run-to-run on
     * identical data. */
-  private def meanLoss(data: org.apache.spark.rdd.RDD[(Array[Double], Double)],
-                       model: DiffModel): Double = {
+  private[graft] def meanLoss(
+      data: org.apache.spark.rdd.RDD[(Array[Double], Double)],
+      model: DiffModel): Double = {
     val bc = data.sparkContext.broadcast(model)
     val contrib = data.mapPartitionsWithIndex { (pi, it) =>
       val m = bc.value
@@ -307,7 +360,7 @@ object Trainers {
     }
   }
 
-  private def toExamples(df: DataFrame, featuresCol: String, labelCol: String) = {
+  private[graft] def toExamples(df: DataFrame, featuresCol: String, labelCol: String) = {
     df.select(col(featuresCol), col(labelCol).cast("double"))
       .rdd.map { r: Row =>
         (r.getSeq[Any](0).map {
@@ -400,9 +453,9 @@ object Trainers {
   }
 
   /** The synchronous data-parallel trainer (DistributedTrainer redesign,
-    * `trainers.py ~L270-360 [H]`). One Spark stage per epoch; the only
-    * driver-side data is one weight vector per partition (numWorkers ×
-    * nParams doubles), reduced element-wise. */
+    * `trainers.py ~L270-360 [H]`). One Spark job per epoch; the driver
+    * holds at most [[mergeFanIn]] partial [[MergeStats]] (see
+    * [[treeFold]]), never one weight vector per partition. */
   def trainDistributedModel[M <: DiffModel](
       df: DataFrame, featuresCol: String, labelCol: String, init: M,
       numWorkers: Int = 4, epochs: Int = 5, lr: Double = 0.5,
@@ -415,7 +468,7 @@ object Trainers {
       var center: DiffModel = init
       val state = new Array[Double](center.weights.flat.length)
       for (_ <- 0 until epochs)
-        center = epochRound(data, center, rule, state, lr, batchSize)
+        center = epochRound(data, center, rule, state, lr, batchSize)._1
       center.asInstanceOf[M]
     } finally data.unpersist()
   }
@@ -431,8 +484,10 @@ object Trainers {
   /** Training record — the reference Trainer's bookkeeping surface
     * (`trainers.py › Trainer.get_training_time / .get_history [H]`):
     * wall-clock seconds plus the mean log-loss over the training set
-    * after each epoch (one extra distributed (sum, count) aggregate per
-    * epoch — O(1) rows to the driver, never the data). */
+    * after each epoch. Epoch e's loss is probed inside epoch e+1's SGD
+    * pass (the center it broadcasts is epoch e's result), and the last
+    * epoch's by one (sum, count) pass after training: E+1 jobs for E
+    * epochs, O(1) loss rows to the driver per job, never the data. */
   final case class TrainingReport[M <: DiffModel](
       model: M, epochLoss: Seq[Double], seconds: Double)
 
@@ -447,10 +502,13 @@ object Trainers {
       var center: DiffModel = init
       val state = new Array[Double](center.weights.flat.length)
       val losses = scala.collection.mutable.ArrayBuffer.empty[Double]
-      for (_ <- 0 until epochs) {
-        center = epochRound(data, center, rule, state, lr, batchSize)
-        losses += meanLoss(data, center)
+      for (e <- 0 until epochs) {
+        val (next, prevLoss) =
+          epochRound(data, center, rule, state, lr, batchSize, probe = e > 0)
+        if (e > 0) losses += prevLoss
+        center = next
       }
+      if (epochs > 0) losses += meanLoss(data, center)
       TrainingReport(center.asInstanceOf[M], losses.toSeq,
         (System.nanoTime() - t0) / 1e9)
     } finally data.unpersist()
@@ -496,7 +554,7 @@ object Trainers {
       var epoch = 0
       var stopped = false
       while (epoch < maxEpochs && !stopped) {
-        center = epochRound(data, center, rule, state, lr, batchSize)
+        center = epochRound(data, center, rule, state, lr, batchSize)._1
         val vl = meanLoss(valData, center)
         losses += vl
         // epoch 0 is the initial best UNCONDITIONALLY: a NaN validation

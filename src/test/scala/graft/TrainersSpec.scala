@@ -1,6 +1,9 @@
 package graft
 
 import graft.ml._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.graftbridge.ListenerBridge
+import scala.jdk.CollectionConverters._
 
 /** Training semantics (SURVEY.md §5.2 item 4): convergence on a
   * linearly-separable fixture, determinism given a seed, and the
@@ -280,5 +283,116 @@ class TrainersSpec extends SparkSpec {
       numWorkers = 4, maxEpochs = 10, lr = 1e12, patience = 2)
     assert(r.bestEpoch >= 0 && r.bestEpoch < r.valLoss.length,
       s"bestEpoch ${r.bestEpoch}, curve ${r.valLoss}")
+  }
+
+  private def bits(a: Iterable[Double]): Seq[Long] =
+    a.map(java.lang.Double.doubleToRawLongBits).toSeq
+
+  /** 30 rows in 3 classes: small enough that 40 workers leave some
+    * partitions empty. */
+  private lazy val small = {
+    val rnd = new scala.util.Random(23)
+    (0 until 30).map { i =>
+      val k = i % 3
+      (Seq(k + rnd.nextDouble() * 0.6, rnd.nextDouble() - k * 0.5), k.toDouble)
+    }.toDF("features", "label")
+  }
+
+  test("fused loss probe == epochRound then a separate meanLoss, bit for bit") {
+    val init = SoftmaxMlpModel.init(2, Seq(5), 3, seed = 11L)
+    val (epochs, lr, batch) = (4, 0.5, 4)
+    for (nw <- Seq(1, 3, 4, 40)) {
+      val fused = Trainers.trainDistributedWithHistory(small, "features", "label",
+        init, numWorkers = nw, epochs = epochs, lr = lr, batchSize = batch)
+      val data = Trainers.toExamples(small, "features", "label")
+        .repartition(nw).persist()
+      try {
+        if (nw == 40) {
+          assert(data.mapPartitions(it => Iterator(it.size)).collect().contains(0),
+            "40 workers over 30 rows must leave a partition empty")
+          assert(nw > Trainers.mergeFanIn, "40 workers must take the bucketed tree")
+        }
+        var center: DiffModel = init
+        val state = new Array[Double](init.weights.flat.length)
+        val losses = (0 until epochs).map { _ =>
+          center = Trainers.epochRound(data, center, Trainers.Averaging, state,
+            lr, batch)._1
+          Trainers.meanLoss(data, center)
+        }
+        assert(bits(fused.epochLoss) == bits(losses), s"numWorkers=$nw")
+        assert(bits(fused.model.weights.flat) == bits(center.weights.flat),
+          s"numWorkers=$nw")
+      } finally data.unpersist()
+    }
+  }
+
+  /** The jobs `body` submits from this thread, with their stages. */
+  private def jobsOf(body: => Unit): Seq[SparkListenerJobStart] = {
+    val sc = spark.sparkContext
+    val key = "graft.test.jobsOf"
+    val id = java.util.UUID.randomUUID().toString
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(key) == id) seen.add(e)
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(key, id)
+    try body
+    finally {
+      sc.setLocalProperty(key, null)
+      assert(ListenerBridge.flushListenerBus(sc, 60000L), "listener bus did not drain")
+      sc.removeSparkListener(listener)
+    }
+    seen.asScala.toSeq
+  }
+
+  test("E epochs with history run E+1 jobs; treeFold under mergeFanIn shuffles nothing") {
+    for (epochs <- Seq(1, 3)) {
+      val jobs = jobsOf(Trainers.trainDistributedWithHistory(linsep, "features",
+        "label", LinearModel.init(2, seed = 42L), numWorkers = 4, epochs = epochs))
+      assert(jobs.size == epochs + 1, s"$epochs epochs ran ${jobs.size} jobs")
+    }
+    val sc = spark.sparkContext
+    for (p <- Seq(1, 4, Trainers.mergeFanIn)) {
+      val rdd = sc.parallelize((0 until p).map(i => (i, Seq(i))), p)
+      var fold: Option[Seq[Int]] = None
+      val jobs = jobsOf {
+        fold = Trainers.treeFold[Seq[Int]](rdd, p, (a, b) => a ++ b)._1
+      }
+      assert(fold.contains(0 until p))
+      assert(jobs.size == 1, s"P=$p ran ${jobs.size} jobs")
+      // a job's stages are its result stage plus one per shuffle it runs
+      assert(jobs.head.stageInfos.size == 1, s"P=$p ran a shuffle-map stage")
+    }
+    // past mergeFanIn the bucketed tree keeps its shuffle
+    val p = 64
+    val rdd = sc.parallelize((0 until p).map(i => (i, Seq(i))), p)
+    val jobs = jobsOf(Trainers.treeFold[Seq[Int]](rdd, p, (a, b) => a ++ b))
+    assert(jobs.map(_.stageInfos.size) == Seq(2))
+  }
+
+  test("no trainer mutates the init model's weights") {
+    // in local mode every task of an epoch reads the SAME broadcast
+    // object, so a trainer that stepped the broadcast weights in place
+    // would corrupt the center (and the caller's init) mid-epoch
+    val init = SoftmaxMlpModel.init(2, Seq(5), 2, seed = 13L)
+    val before = bits(init.weights.flat)
+    def unchanged(trainer: String): Unit =
+      assert(bits(init.weights.flat) == before, s"$trainer mutated init")
+    Trainers.trainSingleModel(linsep, "features", "label", init, epochs = 2)
+    unchanged("single")
+    Trainers.trainDistributedModel(linsep, "features", "label", init,
+      numWorkers = 4, epochs = 2)
+    unchanged("distributed")
+    Trainers.trainDistributedWithHistory(linsep, "features", "label", init,
+      numWorkers = 4, epochs = 2)
+    unchanged("with-history")
+    Trainers.trainEnsembleModel(linsep, "features", "label", init,
+      numModels = 3, epochs = 2)
+    unchanged("ensemble")
+    Trainers.trainWithEarlyStopping(linsep, "features", "label", linsep, init,
+      numWorkers = 4, maxEpochs = 3)
+    unchanged("early stopping")
   }
 }
