@@ -90,7 +90,10 @@ object Tables {
         // shape-scoped opt-out (r17): the rule removes THIS repartition
         // from plans where column pruning shows no payload column ever
         // crosses it — metadata-only consumers skip the exchange, every
-        // payload consumer keeps it. Idempotent per-session install.
+        // payload consumer keeps it. Idempotent per-session install,
+        // lazily here rather than in GraftExtensions: a session built
+        // without those extensions (a plain session builder) still
+        // gets the prune wherever it gets the fanout.
         val rules = spark.experimental.extraOptimizations
         if (!rules.contains(graft.plans.IdleFanoutPrune))
           spark.experimental.extraOptimizations =

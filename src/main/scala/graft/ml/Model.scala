@@ -136,75 +136,6 @@ object LinearModel {
     LinearModel(ModelWeights.uniform(Seq((1, dim + 1)), -0.1, 0.1, seed))
 }
 
-/** One-hidden-layer MLP (tanh hidden, logistic output) — the smallest
-  * genuinely NONLINEAR member of the model zoo, exercising multi-shape
-  * [[ModelWeights]] for real (the reference's `examples/mnist.py` builds
-  * exactly this Dense→Dense Keras stack [H]). Weight layout, matching
-  * `shapes = Seq((hidden, din), (hidden, 1), (1, hidden), (1, 1))`:
-  * [W1 row-major (hidden×din), b1 (hidden), w2 (hidden), b2].
-  *
-  * Forward:  h_j = tanh(Σ_i W1[j,i]·x_i + b1_j);  p = σ(Σ_j w2_j·h_j + b2).
-  * Backward (log loss): err = p − y; ∂w2 = err·h; ∂b2 = err;
-  * ∂z1_j = err·w2_j·(1 − h_j²); ∂W1[j,i] = ∂z1_j·x_i; ∂b1 = ∂z1.
-  */
-final case class MlpModel(weights: ModelWeights, din: Int, hidden: Int)
-    extends DiffModel {
-  require(weights.flat.length == hidden * din + hidden + hidden + 1,
-    s"weight layout mismatch: ${weights.flat.length} for din=$din hidden=$hidden")
-  private val offB1 = hidden * din
-  private val offW2 = offB1 + hidden
-  private val offB2 = offW2 + hidden
-
-  def withWeights(w: ModelWeights): MlpModel = copy(weights = w)
-
-  private def forward(x: Array[Double]): (Array[Double], Double) = {
-    val f = weights.flat
-    val h = new Array[Double](hidden)
-    var j = 0
-    while (j < hidden) {
-      var s = f(offB1 + j)
-      var i = 0
-      while (i < din) { s += f(j * din + i) * x(i); i += 1 }
-      h(j) = math.tanh(s)
-      j += 1
-    }
-    var z = f(offB2)
-    j = 0
-    while (j < hidden) { z += f(offW2 + j) * h(j); j += 1 }
-    (h, 1.0 / (1.0 + math.exp(-z)))
-  }
-
-  def predictProb(x: Array[Double]): Double = forward(x)._2
-
-  def gradient(x: Array[Double], y: Double): Array[Double] = {
-    val f = weights.flat
-    val (h, p) = forward(x)
-    val g = new Array[Double](f.length)
-    val err = p - y
-    g(offB2) = err
-    var j = 0
-    while (j < hidden) {
-      g(offW2 + j) = err * h(j)
-      val dz1 = err * f(offW2 + j) * (1.0 - h(j) * h(j))
-      g(offB1 + j) = dz1
-      var i = 0
-      while (i < din) { g(j * din + i) = dz1 * x(i); i += 1 }
-      j += 1
-    }
-    g
-  }
-}
-
-object MlpModel {
-  def shapes(din: Int, hidden: Int): Seq[(Int, Int)] =
-    Seq((hidden, din), (hidden, 1), (1, hidden), (1, 1))
-
-  /** Symmetry-breaking uniform init (all-equal hidden units would train
-    * identically and the net would collapse to a linear model). */
-  def init(din: Int, hidden: Int, seed: Long = 42L): MlpModel =
-    MlpModel(ModelWeights.uniform(shapes(din, hidden), -0.5, 0.5, seed), din, hidden)
-}
-
 /** Shared layered-net machinery: the per-layer flat layout (W_l
   * row-major (dims(l+1) × dims(l)) then b_l), the tanh-hidden forward
   * pass, and the backprop loop — everything that does NOT depend on the
@@ -347,6 +278,15 @@ private[ml] trait LayeredNet extends DiffModel {
   }
 }
 
+private[ml] object LayeredNet {
+  /** Shape list of the layered layout over `din +: hiddens :+ outUnits`:
+    * per layer, the (out, in) weight matrix then the (out, 1) bias. */
+  def shapes(din: Int, hiddens: Seq[Int], outUnits: Int): Seq[(Int, Int)] = {
+    val dims = din +: hiddens :+ outUnits
+    dims.zip(dims.tail).flatMap { case (in, out) => Seq((out, in), (out, 1)) }
+  }
+}
+
 /** Configurable-depth MLP (any number of tanh hidden layers, logistic
   * output) — the ARBITRARY-ARCHITECTURE member of the model zoo, closing
   * the gap to the reference's "any compiled Keras model" contract
@@ -355,12 +295,13 @@ private[ml] trait LayeredNet extends DiffModel {
   * (no Keras/GPU: a pure-Scala N-layer net trained through the SAME
   * [[graft.ml.Trainers]] harness and update rules as every other model).
   *
-  * Layout/forward/backprop live in [[LayeredNet]]; for
-  * `hiddens = Seq(h)` the layout is bit-identical to [[MlpModel]]'s,
-  * pinned in DeepMlpSpec, so a 1-hidden DeepMlp and an MlpModel are
-  * interchangeable around the same flat vector. Output head: one
-  * sigmoid unit under log loss (δ_L = p − y); gradient-checked against
-  * central finite differences per parameter in DeepMlpSpec. */
+  * Layout/forward/backprop live in [[LayeredNet]]. `hiddens = Seq(h)`
+  * is the one-hidden-layer net of the reference's `examples/mnist.py`
+  * Dense→Dense stack [H]: its shape list is the 4-shape layout
+  * ((h, din), (h, 1), (1, h), (1, 1)), i.e. [W1 row-major, b1, w2, b2].
+  * Output head: one sigmoid unit under log loss (δ_L = p − y);
+  * gradient-checked against central finite differences per parameter
+  * in DeepMlpSpec. */
 final case class DeepMlpModel(weights: ModelWeights, din: Int,
                               hiddens: Seq[Int]) extends LayeredNet {
   require(hiddens.nonEmpty && hiddens.forall(_ > 0), s"bad hidden sizes: $hiddens")
@@ -381,14 +322,9 @@ final case class DeepMlpModel(weights: ModelWeights, din: Int,
 
 object DeepMlpModel {
   /** Shape list: per layer, the (out, in) weight matrix then the
-    * (out, 1) bias — `hiddens = Seq(h)` reproduces [[MlpModel.shapes]]. */
-  def shapes(din: Int, hiddens: Seq[Int]): Seq[(Int, Int)] = {
-    val dims = din +: hiddens :+ 1
-    dims.sliding(2).toSeq.flatMap {
-      case Seq(in, out) => Seq((out, in), (out, 1))
-      case _ => Seq.empty
-    }
-  }
+    * (out, 1) bias, ending at the one output unit. */
+  def shapes(din: Int, hiddens: Seq[Int]): Seq[(Int, Int)] =
+    LayeredNet.shapes(din, hiddens, 1)
 
   def init(din: Int, hiddens: Seq[Int], seed: Long = 42L): DeepMlpModel =
     DeepMlpModel(ModelWeights.uniform(shapes(din, hiddens), -0.5, 0.5, seed),
@@ -483,13 +419,8 @@ final case class SoftmaxMlpModel(weights: ModelWeights, din: Int,
 }
 
 object SoftmaxMlpModel {
-  def shapes(din: Int, hiddens: Seq[Int], nClasses: Int): Seq[(Int, Int)] = {
-    val dims = din +: hiddens :+ nClasses
-    dims.sliding(2).toSeq.flatMap {
-      case Seq(in, out) => Seq((out, in), (out, 1))
-      case _ => Seq.empty
-    }
-  }
+  def shapes(din: Int, hiddens: Seq[Int], nClasses: Int): Seq[(Int, Int)] =
+    LayeredNet.shapes(din, hiddens, nClasses)
 
   def init(din: Int, hiddens: Seq[Int], nClasses: Int,
            seed: Long = 42L): SoftmaxMlpModel =
@@ -522,9 +453,10 @@ object ModelIO {
   }
 
   /** Architecture-aware loads: the shape list fully determines the model
-    * family (a linear model is one (1, d+1) row; the MLP is the 4-shape
-    * layout of [[MlpModel.shapes]]), so no side-channel metadata file is
-    * needed — a malformed shape list fails fast instead of mis-scoring. */
+    * family (a linear model is one (1, d+1) row; a layered MLP is the
+    * chain of [[DeepMlpModel.shapes]], the 4-shape layout for one hidden
+    * layer), so no side-channel metadata file is needed — a malformed
+    * shape list fails fast instead of mis-scoring. */
   def loadLinear(spark: org.apache.spark.sql.SparkSession, path: String): LinearModel = {
     val w = load(spark, path)
     require(w.shapes.sizeIs == 1 && w.shapes.head._1 == 1,
@@ -550,17 +482,6 @@ object ModelIO {
     val din = pairs.head.head._2
     val hiddens = pairs.dropRight(1).map(_.head._1)
     DeepMlpModel(w, din, hiddens)
-  }
-
-  def loadMlp(spark: org.apache.spark.sql.SparkSession, path: String): MlpModel = {
-    val w = load(spark, path)
-    w.shapes match {
-      case Seq((h1, din), (h2, 1), (1, h3), (1, 1))
-          if h1 == h2 && h2 == h3 =>
-        MlpModel(w, din, h1)
-      case other =>
-        throw new IllegalArgumentException(s"not an MLP shape list: $other")
-    }
   }
 
   /** Shared conv-family shape inference: the shape list is a leading

@@ -88,7 +88,6 @@ object ModelExpressions {
   }
 
   private def layeredDims(m: DiffModel): Option[Seq[Int]] = m match {
-    case mm: MlpModel => Some(Seq(mm.din, mm.hidden, 1))
     case mm: DeepMlpModel => Some(mm.din +: mm.hiddens :+ 1)
     case mm: SoftmaxMlpModel => Some(mm.din +: mm.hiddens :+ mm.nClasses)
     case _ => None
@@ -101,7 +100,7 @@ object ModelExpressions {
     case m: LinearModel => sigmoid(dotC(x, m.w.toSeq) + lit(m.b))
     case m: SoftmaxMlpModel =>
       greatest(softmaxC(layeredLogits(x, m.weights.flat, layeredDims(m).get)): _*)
-    case m @ (_: MlpModel | _: DeepMlpModel) =>
+    case m: DeepMlpModel =>
       sigmoid(layeredLogits(x, m.weights.flat, layeredDims(m).get).head)
     case other => throw new IllegalArgumentException(
       s"no single-column form for ${other.getClass.getSimpleName}; use score()")
@@ -111,7 +110,7 @@ object ModelExpressions {
   def labelColumn(model: DiffModel, x: Column): Column = model match {
     case m: SoftmaxMlpModel =>
       argmaxC(layeredLogits(x, m.weights.flat, layeredDims(m).get)).cast("double")
-    case m @ (_: LinearModel | _: MlpModel | _: DeepMlpModel) =>
+    case m @ (_: LinearModel | _: DeepMlpModel) =>
       when(probColumn(m, x) >= 0.5, 1.0).otherwise(0.0)
     case other => throw new IllegalArgumentException(
       s"no single-column form for ${other.getClass.getSimpleName}; use score()")

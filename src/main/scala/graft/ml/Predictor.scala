@@ -30,6 +30,16 @@ object Predictor {
     df.withColumn(outputCol,
       VectorOps.dotLit(col(featuresCol), model.w.toSeq) + lit(model.b))
 
+  /** A features array cell as doubles: float and double elements
+    * widen exactly, anything else parses through its string form. The
+    * one decoder the trainers' examples and the batched scorers share. */
+  private[ml] def decodeFeatures(v: Seq[Any]): Array[Double] =
+    v.map {
+      case f: Float => f.toDouble
+      case d: Double => d
+      case o => o.toString.toDouble
+    }.toArray
+
   /** Shared batched-scorer core: append ONE double column computed by
     * `score(model, features)` over bounded row batches. The model ships
     * once per executor via broadcast, not once per task closure; the
@@ -51,12 +61,7 @@ object Predictor {
         // batch boundary = where a real implementation hands the whole
         // feature block to the native scorer in one call
         batch.map { r =>
-          val x = r.getSeq[Any](featIdx).map {
-            case f: Float => f.toDouble
-            case d: Double => d
-            case o => o.toString.toDouble
-          }.toArray
-          Row.fromSeq(r.toSeq :+ score(model, x))
+          Row.fromSeq(r.toSeq :+ score(model, decodeFeatures(r.getSeq[Any](featIdx))))
         }
       }
     }(enc)

@@ -1,5 +1,6 @@
 package graft.ml
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 
@@ -23,11 +24,12 @@ import org.apache.spark.sql.functions.col
   *                 into ≤ [[mergeFanIn]] contiguous buckets on executors
   *               → driver applies the [[UpdateRule]] to move the center
   *
-  * That is one Spark job per epoch. [[trainDistributedWithHistory]]
-  * adds no job per epoch for its loss curve: each epoch's pass also
-  * scores the center it broadcasts (the previous epoch's result), and
-  * one loss pass after the last epoch scores the final center — E+1
-  * jobs for E epochs.
+  * That is one Spark job per epoch, run by ONE loop, [[trainLoop]], for
+  * every trainer that merges; the dist-keras entry points are thin
+  * wrappers over it. Recording the loss curve adds no job per epoch:
+  * each epoch's pass also scores the center it broadcasts (the previous
+  * epoch's result), and one loss pass after the last epoch scores the
+  * final center — E+1 jobs for E epochs.
   *
   * Every boundary is a Spark-managed stage, so training is
   * deterministic given a seed, straggler-tolerant (speculation), and
@@ -262,7 +264,7 @@ object Trainers {
     * `contrib` holds at most one (partition index, value) per partition.
     * Returns (fold, number of partials materialized on the driver). */
   private[graft] def treeFold[T](
-      contrib: org.apache.spark.rdd.RDD[(Int, T)], numParts: Int,
+      contrib: RDD[(Int, T)], numParts: Int,
       merge: (T, T) => T)(
       implicit ct: scala.reflect.ClassTag[T]): (Option[T], Int) = {
     val g = math.max(1, math.min(numParts, mergeFanIn))
@@ -302,9 +304,8 @@ object Trainers {
   /** ONE synchronous epoch of the distributed loop: broadcast the
     * center model, local minibatch SGD per partition, tree-fold the
     * per-partition [[MergeStats]] (never one vector per partition on
-    * the driver), apply the update rule to move the center. Shared by
-    * every distributed trainer (plain / with-history / early-stopped)
-    * so the SGD round exists exactly once (round-13 review).
+    * the driver), apply the update rule to move the center. Only
+    * [[trainLoop]] calls it, so the SGD round exists exactly once.
     *
     * With `probe`, the same pass also sums the frozen broadcast
     * center's log-loss over each partition's rows, in row order, and
@@ -312,7 +313,7 @@ object Trainers {
     * is then bit-identical to `meanLoss(data, center)`, without its
     * job. Without `probe` it is NaN. */
   private[graft] def epochRound(
-      data: org.apache.spark.rdd.RDD[(Array[Double], Double)],
+      data: RDD[(Array[Double], Double)],
       center: DiffModel, rule: UpdateRule, state: Array[Double], lr: Double,
       batchSize: Int, probe: Boolean = false): (DiffModel, Double) = {
     val bc = data.sparkContext.broadcast(center)
@@ -342,7 +343,7 @@ object Trainers {
     * early-stop decision at the ulp margin) cannot vary run-to-run on
     * identical data. */
   private[graft] def meanLoss(
-      data: org.apache.spark.rdd.RDD[(Array[Double], Double)],
+      data: RDD[(Array[Double], Double)],
       model: DiffModel): Double = {
     val bc = data.sparkContext.broadcast(model)
     val contrib = data.mapPartitionsWithIndex { (pi, it) =>
@@ -362,13 +363,45 @@ object Trainers {
 
   private[graft] def toExamples(df: DataFrame, featuresCol: String, labelCol: String) = {
     df.select(col(featuresCol), col(labelCol).cast("double"))
-      .rdd.map { r: Row =>
-        (r.getSeq[Any](0).map {
-          case f: Float => f.toDouble
-          case d: Double => d
-          case other => other.toString.toDouble
-        }.toArray, r.getDouble(1))
-      }
+      .rdd.map { r: Row => (Predictor.decodeFeatures(r.getSeq[Any](0)), r.getDouble(1)) }
+  }
+
+  /** Runs `body` on the examples of `df` in `numWorkers` persisted
+    * partitions, and unpersists them after. */
+  private def withExamples[T](df: DataFrame, featuresCol: String, labelCol: String,
+                              numWorkers: Int)(body: RDD[(Array[Double], Double)] => T): T = {
+    val data = toExamples(df, featuresCol, labelCol).repartition(numWorkers).persist()
+    try body(data) finally data.unpersist()
+  }
+
+  /** The epoch loop of every merging trainer ([[trainSingleModel]] and
+    * [[trainEnsembleModel]] never merge and keep their own): up to
+    * `maxEpochs` [[epochRound]]s from `init`, and after each one
+    * `onEpoch(epoch, center)` says whether to go on. With `recordLoss`,
+    * epoch e's training loss rides in epoch e+1's pass and one
+    * [[meanLoss]] pass scores the last center: E+1 jobs for E epochs,
+    * else E. Returns the last center and the loss history. */
+  private def trainLoop(
+      data: RDD[(Array[Double], Double)], init: DiffModel, rule: UpdateRule,
+      lr: Double, batchSize: Int, maxEpochs: Int, recordLoss: Boolean,
+      onEpoch: (Int, DiffModel) => Boolean = (_, _) => true): (DiffModel, Seq[Double]) = {
+    // epochRound broadcasts the whole (immutable) model, not just the
+    // weights: the architecture (shapes, hyperparams) travels with them
+    var center = init
+    val state = new Array[Double](init.weights.flat.length)
+    val losses = scala.collection.mutable.ArrayBuffer.empty[Double]
+    var epoch = 0
+    var goOn = true
+    while (epoch < maxEpochs && goOn) {
+      val probe = recordLoss && epoch > 0
+      val (next, prevLoss) = epochRound(data, center, rule, state, lr, batchSize, probe)
+      if (probe) losses += prevLoss
+      center = next
+      goOn = onEpoch(epoch, center)
+      epoch += 1
+    }
+    if (recordLoss && epoch > 0) losses += meanLoss(data, center)
+    (center, losses.toSeq)
   }
 
   /** SingleTrainer (`trainers.py ~L90-140 [H]`): all data to one
@@ -459,19 +492,11 @@ object Trainers {
   def trainDistributedModel[M <: DiffModel](
       df: DataFrame, featuresCol: String, labelCol: String, init: M,
       numWorkers: Int = 4, epochs: Int = 5, lr: Double = 0.5,
-      batchSize: Int = 32, rule: UpdateRule = Averaging): M = {
-    val data = toExamples(df, featuresCol, labelCol)
-      .repartition(numWorkers).persist()
-    try {
-      // epochRound broadcasts the whole (immutable) model, not just the
-      // weights: the architecture (shapes, hyperparams) travels with them
-      var center: DiffModel = init
-      val state = new Array[Double](center.weights.flat.length)
-      for (_ <- 0 until epochs)
-        center = epochRound(data, center, rule, state, lr, batchSize)._1
-      center.asInstanceOf[M]
-    } finally data.unpersist()
-  }
+      batchSize: Int = 32, rule: UpdateRule = Averaging): M =
+    withExamples(df, featuresCol, labelCol, numWorkers) { data =>
+      trainLoop(data, init, rule, lr, batchSize, epochs, recordLoss = false)
+        ._1.asInstanceOf[M]
+    }
 
   def trainDistributed(
       df: DataFrame, featuresCol: String, labelCol: String, dim: Int,
@@ -496,22 +521,11 @@ object Trainers {
       numWorkers: Int = 4, epochs: Int = 5, lr: Double = 0.5,
       batchSize: Int = 32, rule: UpdateRule = Averaging): TrainingReport[M] = {
     val t0 = System.nanoTime()
-    val data = toExamples(df, featuresCol, labelCol)
-      .repartition(numWorkers).persist()
-    try {
-      var center: DiffModel = init
-      val state = new Array[Double](center.weights.flat.length)
-      val losses = scala.collection.mutable.ArrayBuffer.empty[Double]
-      for (e <- 0 until epochs) {
-        val (next, prevLoss) =
-          epochRound(data, center, rule, state, lr, batchSize, probe = e > 0)
-        if (e > 0) losses += prevLoss
-        center = next
-      }
-      if (epochs > 0) losses += meanLoss(data, center)
-      TrainingReport(center.asInstanceOf[M], losses.toSeq,
-        (System.nanoTime() - t0) / 1e9)
-    } finally data.unpersist()
+    withExamples(df, featuresCol, labelCol, numWorkers) { data =>
+      val (center, losses) =
+        trainLoop(data, init, rule, lr, batchSize, epochs, recordLoss = true)
+      TrainingReport(center.asInstanceOf[M], losses, (System.nanoTime() - t0) / 1e9)
+    }
   }
 
   /** Early-stopping record: the per-epoch VALIDATION loss curve, the
@@ -524,10 +538,13 @@ object Trainers {
     * model-selection loop (`examples/mnist.py` holds out a test split
     * and evaluates the trained model on it [M]; Keras's
     * `EarlyStopping(monitor='val_loss', restore_best_weights=True)` is
-    * the canonical form): per epoch, one distributed SGD round exactly
-    * as [[trainDistributedModel]], then ONE (sum, count) log-loss
-    * aggregate over the VALIDATION partitions — O(1) rows to the
-    * driver per epoch, never the data. Training stops after `patience`
+    * the canonical form): per epoch, one distributed SGD round of
+    * [[trainLoop]], then, in its `onEpoch` callback, ONE (sum, count)
+    * log-loss aggregate over the VALIDATION partitions — O(1) rows to
+    * the driver per epoch, never the data, and 2 jobs per epoch
+    * trained. (Fusing that probe into the next epoch's pass, as the
+    * training-loss probe is, would run one extra SGD epoch whenever
+    * patience fires.) Training stops after `patience`
     * consecutive epochs without a validation improvement > `minDelta`,
     * and the returned model is the BEST epoch's (not the last — a
     * divergent tail cannot poison the result). Deterministic given the
@@ -539,39 +556,34 @@ object Trainers {
       batchSize: Int = 32, rule: UpdateRule = Averaging,
       patience: Int = 3, minDelta: Double = 0.0): EarlyStopReport[M] = {
     require(patience >= 1, s"patience must be >= 1, got $patience")
-    val data = toExamples(df, featuresCol, labelCol)
-      .repartition(numWorkers).persist()
-    val valData = toExamples(valDf, featuresCol, labelCol)
-      .repartition(numWorkers).persist()
-    try {
-      var center: DiffModel = init
-      val state = new Array[Double](center.weights.flat.length)
-      val losses = scala.collection.mutable.ArrayBuffer.empty[Double]
-      var best = center
-      var bestLoss = Double.PositiveInfinity
-      var bestEpoch = -1
-      var sinceBest = 0
-      var epoch = 0
-      var stopped = false
-      while (epoch < maxEpochs && !stopped) {
-        center = epochRound(data, center, rule, state, lr, batchSize)._1
-        val vl = meanLoss(valData, center)
-        losses += vl
-        // epoch 0 is the initial best UNCONDITIONALLY: a NaN validation
-        // loss (or one that never improves) must still leave bestEpoch a
-        // valid index and the model a trained one, never the silent
-        // untrained init (r13 advice). A later FINITE loss always beats
-        // a NaN best (NaN compares false to everything).
-        if (epoch == 0 || vl < bestLoss - minDelta ||
-            (bestLoss.isNaN && !vl.isNaN)) {
-          bestLoss = vl; best = center; bestEpoch = epoch; sinceBest = 0
-        } else {
-          sinceBest += 1
-          if (sinceBest >= patience) stopped = true
-        }
-        epoch += 1
+    withExamples(df, featuresCol, labelCol, numWorkers) { data =>
+      withExamples(valDf, featuresCol, labelCol, numWorkers) { valData =>
+        val losses = scala.collection.mutable.ArrayBuffer.empty[Double]
+        var best: DiffModel = init
+        var bestLoss = Double.PositiveInfinity
+        var bestEpoch = -1
+        var sinceBest = 0
+        var stopped = false
+        trainLoop(data, init, rule, lr, batchSize, maxEpochs, recordLoss = false,
+          onEpoch = { (epoch, center) =>
+            val vl = meanLoss(valData, center)
+            losses += vl
+            // epoch 0 is the initial best UNCONDITIONALLY: a NaN validation
+            // loss (or one that never improves) must still leave bestEpoch a
+            // valid index and the model a trained one, never the silent
+            // untrained init (r13 advice). A later FINITE loss always beats
+            // a NaN best (NaN compares false to everything).
+            if (epoch == 0 || vl < bestLoss - minDelta ||
+                (bestLoss.isNaN && !vl.isNaN)) {
+              bestLoss = vl; best = center; bestEpoch = epoch; sinceBest = 0
+            } else {
+              sinceBest += 1
+              if (sinceBest >= patience) stopped = true
+            }
+            !stopped
+          })
+        EarlyStopReport(best.asInstanceOf[M], losses.toSeq, bestEpoch, stopped)
       }
-      EarlyStopReport(best.asInstanceOf[M], losses.toSeq, bestEpoch, stopped)
-    } finally { data.unpersist(); valData.unpersist() }
+    }
   }
 }

@@ -227,6 +227,11 @@ object TopK {
     * case — inside a sane executor; lower it for wide rows or large k. */
   val defaultMaxGroups: Int = 1 << 20
 
+  /** Installed lazily on the session the query runs in, not through
+    * [[GraftExtensions]]: a session built without those extensions (by
+    * an embedding application, or by the benchmark harness) would
+    * otherwise fail to plan a [[TopKPerGroup]] node. The install is
+    * idempotent per session. */
   private def ensureStrategy(spark: SparkSession): Unit =
     if (!spark.experimental.extraStrategies.contains(TopKStrategy))
       spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ TopKStrategy

@@ -71,20 +71,45 @@ object TextOps {
     * score. Stopword list fixed so Spark and the oracle agree. */
   val stopwords: Seq[String] = Seq("the", "a", "of", "data", "table", "row")
 
-  def qQualityScore(spark: SparkSession, dir: String): DataFrame = {
-    val toks = tokens(col("text"))
-    val nTok = size(toks).cast("double")
-    val nDistinct = size(array_distinct(toks)).cast("double")
-    val nStop = size(filter(toks, t => array_contains(typedLit(stopwords), t))).cast("double")
+  /** The per-document token signals over the `text` column that the
+    * quality score and the Gopher gate read, each defined once: the gate
+    * keys and the v1/v2/v3 pipelines use these same expressions, so
+    * their decisions cannot drift apart. Ratios and means are rounded
+    * to 6 dp where an output or a threshold reads them, so both engines
+    * decide identically on every document. */
+  private object DocSignals {
+    private val toks = tokens(col("text"))
+    val nTokens: Column = size(toks)
+    private val nTok = nTokens.cast("double")
+    private val nDistinct = size(array_distinct(toks)).cast("double")
+    val stopHits: Column =
+      size(filter(toks, t => array_contains(typedLit(stopwords), t)))
+    private val nStop = stopHits.cast("double")
+    val distinctRatio: Column = round(nDistinct / nTok, 6)
+    val stopRatio: Column = round(nStop / nTok, 6)
+    val quality: Column =
+      round((nDistinct / nTok) * 0.5 + (lit(1.0) - nStop / nTok) * 0.5, 6)
+    val meanTokenLen: Column = round(
+      aggregate(transform(toks, t => length(t)), lit(0), (acc, x) => acc + x)
+        .cast("double") / nTok, 6)
+    // the Gopher rule verdicts (thresholds below, at gopherRules)
+    val lenOk: Column = nTokens >= gopherMinTokens && nTokens <= gopherMaxTokens
+    val meanLenOk: Column =
+      meanTokenLen >= gopherMeanLenMin && meanTokenLen <= gopherMeanLenMax
+    val stopOk: Column = stopHits >= gopherMinStopHits
+    val diverseOk: Column = distinctRatio >= gopherMinDistinctRatio
+    val gopherKeep: Column = lenOk && meanLenOk && stopOk && diverseOk
+  }
+
+  def qQualityScore(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(
         col("doc_id"),
-        size(toks).as("n_tokens"),
-        round(nDistinct / nTok, 6).as("distinct_ratio"),
-        round(nStop / nTok, 6).as("stop_ratio"),
-        round((nDistinct / nTok) * 0.5 + (lit(1.0) - nStop / nTok) * 0.5, 6).as("quality"))
+        DocSignals.nTokens.as("n_tokens"),
+        DocSignals.distinctRatio.as("distinct_ratio"),
+        DocSignals.stopRatio.as("stop_ratio"),
+        DocSignals.quality.as("quality"))
       .orderBy("doc_id")
-  }
 
   /** Content-defined document fingerprint: md5 over the sorted distinct
     * term set (bag fingerprint — order-insensitive, so a shuffled
@@ -1906,11 +1931,6 @@ object TextOps {
     * multi-hundred-column rows ever shuffle; the text column rides only
     * the final scan → pack path). */
   def llmPipeline(docs: DataFrame): DataFrame = {
-    val toks = tokens(col("text"))
-    val nTok = size(toks).cast("double")
-    val nDistinct = size(array_distinct(toks)).cast("double")
-    val nStop = size(filter(toks, t => array_contains(typedLit(stopwords), t))).cast("double")
-    val quality = round((nDistinct / nTok) * 0.5 + (lit(1.0) - nStop / nTok) * 0.5, 6)
     val isEval = Sampling.inSample(col("doc_id"), decontamEvalFraction)
 
     // gates: each report is the gate key's own relational shape.
@@ -1928,7 +1948,7 @@ object TextOps {
     // regime the cap exists for. It reads the full corpus, as the
     // oracle does; the eval side must be full anyway (eval docs define
     // the contaminating shingle set regardless of their quality).
-    val rowKeep = !isEval && quality >= pipelineMinQuality
+    val rowKeep = !isEval && DocSignals.quality >= pipelineMinQuality
     // materialize the row-local survivor set ONCE (r17, from the
     // V1Probe stage profile: the gate-execution job was 3.3-3.8 s of a
     // ~5.5 s steady-state total because the corpus was scanned TWICE
@@ -2015,28 +2035,14 @@ object TextOps {
     val scrubbed = Checkpointer(docs.select(col("doc_id"), col("source"),
       cleanedText.as("text")))
 
-    val toks = tokens(col("text"))
-    val nTok = size(toks).cast("double")
-    val nDistinct = size(array_distinct(toks)).cast("double")
-    val nStop = size(filter(toks, t => array_contains(typedLit(stopwords), t))).cast("double")
-    val quality = round((nDistinct / nTok) * 0.5 + (lit(1.0) - nStop / nTok) * 0.5, 6)
     val isEval = Sampling.inSample(col("doc_id"), decontamEvalFraction)
 
     // Gopher gate: pure per-row arithmetic, so it fuses INLINE into the
-    // survivor filter — the exact expressions of [[gopherRules]] (same
-    // 6-dp rounding, so the decision is bit-identical to the gate key),
+    // survivor filter — the [[DocSignals]] verdicts [[gopherRules]]
+    // reports, so the decision is bit-identical to the gate key's,
     // without the separate scan + doc_id semi-join a report-shaped gate
     // would cost. Measured: the fused filter removes one full pass over
     // the scrubbed corpus from the pipeline's critical path.
-    val n = size(toks)
-    val meanLen = round(
-      aggregate(transform(toks, t => length(t)), lit(0), (acc, x) => acc + x)
-        .cast("double") / nTok, 6)
-    val stopHits = size(filter(toks, t => array_contains(typedLit(stopwords), t)))
-    val dr = round(size(array_distinct(toks)).cast("double") / nTok, 6)
-    val gopherKeep = n >= gopherMinTokens && n <= gopherMaxTokens &&
-      meanLen >= gopherMeanLenMin && meanLen <= gopherMeanLenMax &&
-      stopHits >= gopherMinStopHits && dr >= gopherMinDistinctRatio
 
     // aggregation-shaped gates — each the gate key's own relational
     // shape over the scrubbed corpus; tail cuts span the WHOLE corpus
@@ -2054,7 +2060,8 @@ object TextOps {
     // cap-excluded shingles re-enter and change contamination verdicts
     // in exactly the skew regime the cap exists for. It reads the full
     // scrubbed corpus, as the oracle does.
-    val rowKeep = !isEval && quality >= pipelineMinQuality && gopherKeep
+    val rowKeep = !isEval && DocSignals.quality >= pipelineMinQuality &&
+      DocSignals.gopherKeep
     val tailOk = qualityTails(scrubbed).filter(col("tail") === "mid").select("doc_id")
     // (r17 measured dead end, do not redo: materializing
     // scrubbed.filter(rowKeep) once — the v1 win, see llmPipeline —
@@ -2163,28 +2170,19 @@ object TextOps {
     * shuffles before the output sort. Signals are rounded to 6 dp
     * BEFORE thresholding so both engines make the identical decision
     * on every document. */
-  def gopherRules(docs: DataFrame): DataFrame = {
-    val toks = tokens(col("text"))
-    val n = size(toks)
-    val nd = n.cast("double")
-    val meanLen = round(
-      aggregate(transform(toks, t => length(t)), lit(0), (acc, x) => acc + x)
-        .cast("double") / nd, 6)
-    val stopHits = size(filter(toks, t => array_contains(typedLit(stopwords), t)))
-    val dr = round(size(array_distinct(toks)).cast("double") / nd, 6)
+  def gopherRules(docs: DataFrame): DataFrame =
     docs.select(
       col("doc_id"),
-      n.as("n_tokens"),
-      meanLen.as("mean_token_len"),
-      stopHits.as("stop_hits"),
-      dr.as("distinct_ratio"),
-      (n >= gopherMinTokens && n <= gopherMaxTokens).as("len_ok"),
-      (meanLen >= gopherMeanLenMin && meanLen <= gopherMeanLenMax).as("mean_len_ok"),
-      (stopHits >= gopherMinStopHits).as("stop_ok"),
-      (dr >= gopherMinDistinctRatio).as("diverse_ok"))
+      DocSignals.nTokens.as("n_tokens"),
+      DocSignals.meanTokenLen.as("mean_token_len"),
+      DocSignals.stopHits.as("stop_hits"),
+      DocSignals.distinctRatio.as("distinct_ratio"),
+      DocSignals.lenOk.as("len_ok"),
+      DocSignals.meanLenOk.as("mean_len_ok"),
+      DocSignals.stopOk.as("stop_ok"),
+      DocSignals.diverseOk.as("diverse_ok"))
       .withColumn("keep",
         col("len_ok") && col("mean_len_ok") && col("stop_ok") && col("diverse_ok"))
-  }
 
   def qQualityGopher(spark: SparkSession, dir: String): DataFrame =
     gopherRules(Tables.documents(spark, dir)).orderBy("doc_id")

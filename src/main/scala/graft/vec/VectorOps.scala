@@ -124,8 +124,9 @@ object VectorOps {
 
   /** Deterministic MLP demo weights (din=64, hidden=4) — formula-derived
     * (no RNG) so the Spark query and the DuckDB oracle interpolate the
-    * SAME literals; layout matches [[graft.ml.MlpModel]]
-    * ([W1 row-major, b1, w2, b2], MlpDemoSpec pins the equivalence). */
+    * SAME literals; layout matches a one-hidden-layer
+    * [[graft.ml.DeepMlpModel]] ([W1 row-major, b1, w2, b2], VectorOpsSpec
+    * pins the equivalence). */
   val mlpHidden: Int = 4
   val mlpW1: Seq[Seq[Double]] = (0 until mlpHidden).map(j =>
     (0 until 64).map(i => ((i * 37 + j * 101) % 19 - 9) / 10.0))
@@ -503,8 +504,9 @@ object VectorOps {
     * [[graft.plans.DotProduct]]), the output is a sigmoid over the
     * explicit left-associated weighted sum — so even a neural scorer
     * stays inside whole-stage codegen, no UDF, no mapPartitions. The
-    * same weights drive [[graft.ml.MlpModel]] in MlpDemoSpec, pinning
-    * the expression form to the Scala backprop model. */
+    * same weights drive a one-hidden-layer [[graft.ml.DeepMlpModel]] in
+    * VectorOpsSpec, pinning the expression form to the Scala backprop
+    * model. */
   def qMlpPredict(spark: SparkSession, dir: String): DataFrame = {
     // tanh written via exp — the oracle engine has no tanh builtin, and
     // using the SAME formula on both sides keeps the fold comparable

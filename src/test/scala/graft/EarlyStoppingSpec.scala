@@ -66,7 +66,7 @@ class EarlyStoppingSpec extends SparkSpec {
 
   test("works for the nonlinear members of the zoo through the same harness") {
     val r = Trainers.trainWithEarlyStopping(train, "features", "label",
-      valid, MlpModel.init(din = 2, hidden = 4, seed = 5L),
+      valid, DeepMlpModel.init(din = 2, hiddens = Seq(4), seed = 5L),
       numWorkers = 4, maxEpochs = 20, lr = 0.5, patience = 5)
     val rows = valid.as[(Seq[Double], Double)].collect()
     val acc = rows.count { case (x, y) =>

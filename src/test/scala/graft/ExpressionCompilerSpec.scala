@@ -39,7 +39,7 @@ class ExpressionCompilerSpec extends SparkSpec {
   }
 
   test("1-hidden MLP compiles to its predictProb") {
-    checkProb(MlpModel.init(din = 64, hidden = 5, seed = 103L))
+    checkProb(DeepMlpModel.init(din = 64, hiddens = Seq(5), seed = 103L))
   }
 
   test("deep MLP (3 hidden layers) compiles to its predictProb") {

@@ -221,11 +221,11 @@ class GradientKernelSpec extends SparkSpec {
     }
   }
 
-  test("linear, MLP and conv-softmax models accumulate through the default addGradient") {
+  test("linear and conv models use the default addGradient") {
     val rnd = new scala.util.Random(21)
     val models: Seq[(DiffModel, Int, Int)] = Seq(
       (LinearModel.init(5, seed = 2L), 5, 2),
-      (MlpModel.init(5, 6, seed = 2L), 5, 2),
+      (ConvNetModel.init(6, 6, 3, 3, 2, seed = 2L), 36, 2),
       (ConvSoftmaxModel.init(6, 6, 3, 3, 2, 3, seed = 2L), 36, 3))
     models.foreach { case (m, dim, k) =>
       (0 until 8).foreach { _ =>

@@ -6,8 +6,8 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The harness contracts that need no Spark: one session factory, and
-  * the bench regression gate's choice of baseline. */
+/** The contracts that need no Spark: one session factory, one training
+  * epoch loop, and the bench regression gate's choice of baseline. */
 class HarnessSpec extends AnyFunSuite {
 
   test("GraftSession is the only place src builds a session") {
@@ -19,6 +19,12 @@ class HarnessSpec extends AnyFunSuite {
     }.filter(p => p.getFileName.toString != "GraftSession.scala" &&
       Files.readString(p).contains(builderCall))
     assert(offenders.isEmpty, s"build sessions with GraftSession.builder: ${offenders.mkString(", ")}")
+  }
+
+  test("Trainers runs every merging trainer through one epoch loop") {
+    val src = Files.readString(Paths.get("src/main/scala/graft/ml/Trainers.scala"))
+    val calls = "(?<!def )\\bepochRound\\(".r.findAllIn(src).size
+    assert(calls == 1, s"epochRound has $calls call sites; route epochs through trainLoop")
   }
 
   test("bench regression gate reads only a baseline with this run's cpus and sf") {

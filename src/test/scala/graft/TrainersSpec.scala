@@ -84,7 +84,7 @@ class TrainersSpec extends SparkSpec {
 
   test("ModelIO: trained MLP weights round-trip bit-exactly through parquet") {
     val trained = Trainers.trainDistributedModel(xor, "features", "label",
-      MlpModel.init(2, 4, seed = 7L), numWorkers = 2, epochs = 3, lr = 0.5)
+      DeepMlpModel.init(2, Seq(4), seed = 7L), numWorkers = 2, epochs = 3, lr = 0.5)
     val dir = java.nio.file.Files.createTempDirectory("graft_model").toString + "/m"
     ModelIO.save(spark, trained.weights, dir)
     val back = ModelIO.load(spark, dir)
@@ -94,9 +94,14 @@ class TrainersSpec extends SparkSpec {
     val rebuilt = trained.withWeights(back)
     val x = Array(0.3, 0.7)
     assert(rebuilt.predictProb(x) == trained.predictProb(x))
-    // architecture-aware load reconstructs the MLP from shapes alone
-    val typed = ModelIO.loadMlp(spark, dir)
-    assert(typed.din == 2 && typed.hidden == 4)
+    // a file in the 4-shape one-hidden-layer layout, written from its
+    // explicit shape list, loads through the layered loader bit-exactly
+    val fourShape = ModelWeights(Seq((4, 2), (4, 1), (1, 4), (1, 1)), trained.weights.flat)
+    ModelIO.save(spark, fourShape, dir)
+    val typed = ModelIO.loadDeepMlp(spark, dir)
+    assert(typed.din == 2 && typed.hiddens == Seq(4))
+    assert(typed.weights.shapes == fourShape.shapes)
+    assert(bits(typed.weights.flat) == bits(trained.weights.flat))
     assert(typed.predictProb(x) == trained.predictProb(x))
     // and refuses a mismatched family
     intercept[IllegalArgumentException] {
@@ -156,7 +161,7 @@ class TrainersSpec extends SparkSpec {
     assert(linAcc < 0.8, s"linear model should NOT learn XOR, got $linAcc")
 
     val mlp = Trainers.trainDistributedModel(xor, "features", "label",
-      MlpModel.init(din = 2, hidden = 8, seed = 5L),
+      DeepMlpModel.init(din = 2, hiddens = Seq(8), seed = 5L),
       numWorkers = 4, epochs = 150, lr = 0.8, rule = Trainers.Averaging)
     val acc = xorAccuracy(mlp)
     assert(acc > 0.95, s"MLP XOR accuracy $acc")
@@ -164,7 +169,7 @@ class TrainersSpec extends SparkSpec {
 
   test("MLP learns XOR with an async-derived rule (Adag)") {
     val mlp = Trainers.trainDistributedModel(xor, "features", "label",
-      MlpModel.init(din = 2, hidden = 8, seed = 5L),
+      DeepMlpModel.init(din = 2, hiddens = Seq(8), seed = 5L),
       numWorkers = 4, epochs = 150, lr = 0.8, rule = Trainers.Adag())
     val acc = xorAccuracy(mlp)
     assert(acc > 0.95, s"MLP+Adag XOR accuracy $acc")
@@ -172,13 +177,13 @@ class TrainersSpec extends SparkSpec {
 
   test("MLP training is deterministic given a seed") {
     def run() = Trainers.trainDistributedModel(xor, "features", "label",
-      MlpModel.init(2, 4, seed = 11L), numWorkers = 4, epochs = 3, lr = 0.5)
+      DeepMlpModel.init(2, Seq(4), seed = 11L), numWorkers = 4, epochs = 3, lr = 0.5)
       .weights.flat.toSeq
     assert(run() == run())
   }
 
   test("MLP gradient matches finite differences") {
-    val m = MlpModel.init(din = 3, hidden = 4, seed = 99L)
+    val m = DeepMlpModel.init(din = 3, hiddens = Seq(4), seed = 99L)
     val x = Array(0.3, -1.2, 0.7)
     val y = 1.0
     val g = m.gradient(x, y)
@@ -207,7 +212,7 @@ class TrainersSpec extends SparkSpec {
   }
 
   test("batched predictor scores an MLP (model-agnostic plumbing)") {
-    val mlp = MlpModel.init(din = 2, hidden = 4, seed = 7L)
+    val mlp = DeepMlpModel.init(din = 2, hiddens = Seq(4), seed = 7L)
     val bc = spark.sparkContext.broadcast(mlp)
     val scored = Predictor.predictBatched(xor, bc, "features", "p")
       .select("p").as[Double].collect()
@@ -370,6 +375,30 @@ class TrainersSpec extends SparkSpec {
     val rdd = sc.parallelize((0 until p).map(i => (i, Seq(i))), p)
     val jobs = jobsOf(Trainers.treeFold[Seq[Int]](rdd, p, (a, b) => a ++ b))
     assert(jobs.map(_.stageInfos.size) == Seq(2))
+  }
+
+  test("E epochs without history run E jobs") {
+    for (epochs <- Seq(1, 3)) {
+      val jobs = jobsOf(Trainers.trainDistributedModel(linsep, "features",
+        "label", LinearModel.init(2, seed = 42L), numWorkers = 4, epochs = epochs))
+      assert(jobs.size == epochs, s"$epochs epochs ran ${jobs.size} jobs")
+    }
+  }
+
+  test("early stopping runs 2 jobs per epoch it trains") {
+    // lr = 1e12 overflows the loss from epoch 0 on, so patience = 1
+    // fires after the second epoch
+    for ((lr, stops) <- Seq((0.5, false), (1e12, true))) {
+      var r: Trainers.EarlyStopReport[LinearModel] = null
+      val jobs = jobsOf {
+        r = Trainers.trainWithEarlyStopping(linsep, "features", "label", linsep,
+          LinearModel.init(2, seed = 3L), numWorkers = 4, maxEpochs = 3, lr = lr,
+          patience = 1)
+      }
+      assert(r.stoppedEarly == stops, s"lr $lr: curve ${r.valLoss}")
+      assert(jobs.size == 2 * r.valLoss.length,
+        s"lr $lr: ${r.valLoss.length} epochs ran ${jobs.size} jobs")
+    }
   }
 
   test("no trainer mutates the init model's weights") {

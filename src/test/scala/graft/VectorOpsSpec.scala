@@ -160,15 +160,16 @@ class VectorOpsSpec extends SparkSpec {
       nested.last.toSeq == Seq(9.0, 10.0, 11.0, 12.0))
   }
 
-  test("q_mlp_predict (Catalyst expression form) == MlpModel forward pass") {
+  test("q_mlp_predict (Catalyst expression form) == DeepMlpModel forward pass") {
     // the gate query computes the MLP in pure codegen expressions; the
-    // trainer-side MlpModel computes it in Scala — same weights, so the
-    // probabilities must agree to float-input precision
+    // trainer-side one-hidden-layer DeepMlpModel computes it in Scala —
+    // same weights, so the probabilities must agree to float-input precision
     val flat = (VectorOps.mlpW1.flatten ++ VectorOps.mlpB1 ++
       VectorOps.mlpW2 :+ VectorOps.mlpB2).toArray
-    val model = graft.ml.MlpModel(
-      graft.ml.ModelWeights(graft.ml.MlpModel.shapes(64, VectorOps.mlpHidden), flat),
-      din = 64, hidden = VectorOps.mlpHidden)
+    val hiddens = Seq(VectorOps.mlpHidden)
+    val model = graft.ml.DeepMlpModel(
+      graft.ml.ModelWeights(graft.ml.DeepMlpModel.shapes(64, hiddens), flat),
+      din = 64, hiddens = hiddens)
     val viaExpr = VectorOps.qMlpPredict(spark, sfDir)
       .as[(Long, Double)].collect().toMap
     val emb = Tables.embeddings(spark, sfDir)
