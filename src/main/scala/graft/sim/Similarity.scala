@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.plans.Checkpointer
+import graft.plans.{Checkpointer, HotKeys}
 import graft.vec.VectorOps
 
 /** Similarity search over embedding columns (SURVEY.md §2.C).
@@ -451,6 +451,16 @@ object Similarity {
 
   // -------------------------------------------- all-pairs near-dup (LSH)
 
+  /** Hot-bucket density budget for the UNCAPPED LSH pair join: the pair
+    * work per bucket is ~(probes+1)·c² in the bucket population c, so a
+    * guarded run does at most ~(nPlanes+1)·2^nPlanes·guard² candidate
+    * dot products — bounded minutes at guard 8192, and the ×100
+    * rehearsal's planted 100-deep duplicate piles (c ≈ 10⁴–10⁵ per
+    * bucket) trip it immediately instead of silently burning a 25-min+
+    * run (r13 verdict item 4: the demonstrated failure mode). Passes
+    * untouched at every test SF and the ×10 corpus (max bucket ≈ 3 k). */
+  val uncappedBucketGuard = 8192L
+
   /** All-pairs embedding near-duplicate pairs via LSH bucketing — the
     * scale path that [[qDedupEmbedding]]'s broadcast probe block stands
     * in for: every vector hashes to a random-hyperplane bucket, pairs
@@ -466,38 +476,20 @@ object Similarity {
     * hyperplanes (each cuts a pair at angle θ with prob θ/π) can be
     * missed — recall is measured vs bounded brute force in
     * SimilaritySpec, not assumed. */
-  /** Hot-bucket density budget for the UNCAPPED LSH pair join: the pair
-    * work per bucket is ~(probes+1)·c² in the bucket population c, so a
-    * guarded run does at most ~(nPlanes+1)·2^nPlanes·guard² candidate
-    * dot products — bounded minutes at guard 8192, and the ×100
-    * rehearsal's planted 100-deep duplicate piles (c ≈ 10⁴–10⁵ per
-    * bucket) trip it immediately instead of silently burning a 25-min+
-    * run (r13 verdict item 4: the demonstrated failure mode). Passes
-    * untouched at every test SF and the ×10 corpus (max bucket ≈ 3 k). */
-  val uncappedBucketGuard = 8192L
-
-  /** Fail-fast density check before an uncapped pair join: ONE cheap
-    * map-side-combined aggregate into the ≤2^nPlanes-row bucket-count
-    * frame; a bucket above `guard` aborts with the hot-bucket profile
-    * and the capped operator's name, BEFORE any quadratic work runs. */
-  private def assertBucketDensity(withBucket: DataFrame, guard: Long): Unit = {
-    val hot = withBucket.groupBy(col("b0")).agg(count(lit(1)).as("n"))
-      .filter(col("n") > guard).orderBy(col("n").desc).limit(5)
-      .collect().map(r => s"bucket ${r.get(0)}=${r.getLong(1)}")
-    require(hot.isEmpty,
-      s"uncapped LSH bucket density exceeds guard $guard (hot: " +
-        s"${hot.mkString(", ")}); the pair join would be ~quadratic in " +
-        "the hot-bucket population — use embeddingNearDupPairsCapped " +
-        "(q_dedup_embedding_lsh_capped) at this duplicate density")
-  }
-
   def embeddingNearDupPairs(emb: DataFrame, threshold: Double,
                             nPlanes: Int = 4, dim: Int = 64,
                             maxBucket: Long = uncappedBucketGuard): DataFrame = {
     val planes = hyperplanes(nPlanes, dim)
     val withBucket = emb.select(col("vec_id"), col("embedding"),
       lshBuckets(col("embedding"), planes).as("b0"))
-    assertBucketDensity(withBucket, maxBucket)
+    // fail fast before the pair join: one map-side-combined aggregate
+    // into the ≤2^nPlanes-row bucket-count frame
+    HotKeys.guard(withBucket, col("b0"), maxBucket, b => s"bucket $b") { hot =>
+      s"uncapped LSH bucket density exceeds guard $maxBucket (hot: " +
+        s"$hot); the pair join would be ~quadratic in " +
+        "the hot-bucket population — use embeddingNearDupPairsCapped " +
+        "(q_dedup_embedding_lsh_capped) at this duplicate density"
+    }
     val a = withBucket.select(col("vec_id").as("id_a"), col("embedding").as("ea"),
       explode(array(col("b0") +: (0 until nPlanes).map(p =>
         col("b0").bitwiseXOR(lit(1 << p))): _*)).as("bucket"))
@@ -566,45 +558,31 @@ object Similarity {
     * ([[qDedupEmbeddingLshCapped]]) stays rows-only because its plane
     * count and refinement depth are data-driven at runtime.
     *
-    * Scale: identical shapes to the adaptive form — bucket equi-joins
-    * (never all-pairs), O(|b|) star expansion for skew piles, a
-    * broadcast of the ≤2^nPlanes bucket-count rows. */
+    * Scale: identical shapes to the adaptive form — the
+    * [[graft.plans.HotKeys.starPairs]] device per table: bucket
+    * equi-joins (never all-pairs), O(|b|) star expansion for skew piles,
+    * a broadcast of the hot buckets' reps with their embeddings. */
   def embeddingNearDupPairsCappedFixed(emb: DataFrame, threshold: Double,
                                        nPlanes: Int, dim: Int = 64,
                                        cap: Long = 64L, nTables: Int = 2): DataFrame = {
     val tables = (0 until nTables).map { t =>
       val bk = emb.select(col("vec_id"), col("embedding"),
         lshBuckets(col("embedding"), hyperplanes(nPlanes, dim, t * 101)).as("bucket"))
-      // ≤ 2^nPlanes rows — broadcast, so tagging hot is a map-side join
-      val counts = bk.groupBy(col("bucket"))
-        .agg((count(lit(1)) > cap).as("hot"))
-      val tagged = bk.join(broadcast(counts), Seq("bucket"))
-      val cold = tagged.filter(!col("hot"))
-      val coldPairs = cold
-        .select(col("bucket"), col("vec_id").as("id_a"), col("embedding").as("ea"))
-        .join(cold.select(col("bucket"), col("vec_id").as("id_b"),
-          col("embedding").as("eb")), Seq("bucket"))
-        .filter(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"), col("ea"), col("eb"))
-      val hotRows = tagged.filter(col("hot"))
-      val reps = hotRows.groupBy(col("bucket")).agg(min(col("vec_id")).as("id_a"))
-      val repVecs = reps.join(hotRows.select(col("bucket"),
-        col("vec_id").as("id_a"), col("embedding").as("ea")), Seq("bucket", "id_a"))
-      // min-id rep < every other member: (rep, member) is already canonical
-      val starPairs = hotRows.join(repVecs, Seq("bucket"))
-        .filter(col("vec_id") =!= col("id_a"))
-        .select(col("id_a"), col("vec_id").as("id_b"),
-          col("ea"), col("embedding").as("eb"))
-      coldPairs.unionAll(starPairs)
+      HotKeys.starPairs(bk, Seq("bucket"), "vec_id", Some("embedding"), cap)
     }
-    tables.reduce(_ unionAll _)
-      .dropDuplicates("id_a", "id_b")
+    scorePairs(tables.reduce(_ unionAll _), threshold)
+  }
+
+  /** The capped operators' shared tail: dedup the pairs found in several
+    * tables or levels, then the exact dot-product verify and the
+    * canonical output order. */
+  private def scorePairs(pairs: DataFrame, threshold: Double): DataFrame =
+    pairs.dropDuplicates("id_a", "id_b")
       .select(col("id_a"), col("id_b"),
-        VectorOps.dot(col("ea"), col("eb")).as("score"))
+        VectorOps.dot(col("embedding_a"), col("embedding_b")).as("score"))
       .filter(col("score") > threshold)
       .select(col("id_a"), col("id_b"), round(col("score"), 6).as("score"))
       .orderBy("id_a", "id_b")
-  }
 
   /** Oracled driver-gate form of the capped operator's non-adaptive core
     * (round-9 verdict ask #6): nPlanes fixed at 4 (profiled so both the
@@ -789,11 +767,12 @@ object Similarity {
     *    recover the recall that a single auto-sized table loses — a pair
     *    is found if it co-buckets in ANY table; dedup before scoring.
     *  - hot buckets surviving refinement (near-identical piles) emit
-    *    pairs against the bucket's min-id REPRESENTATIVE only: O(|b|)
-    *    rows instead of |b|²/2. Component-lossless for downstream
-    *    clustering: every member connects to the representative, so the
-    *    pile still collapses into one duplicate cluster — exactly the
-    *    role the pairs play in qDedupCluster.
+    *    pairs against the bucket's min-id REPRESENTATIVE only (the
+    *    [[graft.plans.HotKeys.starPairs]] device, keyed on (lvl,
+    *    bucket)): O(|b|) rows instead of |b|²/2. Component-lossless for
+    *    downstream clustering: every member connects to the
+    *    representative, so the pile still collapses into one duplicate
+    *    cluster — exactly the role the pairs play in qDedupCluster.
     *
     * The corpus count is one metadata-cheap aggregate action at plan
     * time (the one driver round-trip; it sizes the signature). Pair
@@ -807,39 +786,16 @@ object Similarity {
     val tables = (0 until nTables).map { t =>
       // cappedLshBuckets checkpoints internally (the signature scan once,
       // plus the refined composition only when refinement fired) — its
-      // output reads materialized blocks for all ~6 consumers below
+      // output reads materialized blocks for every consumer below
       val bk = cappedLshBuckets(emb, "vec_id", "embedding", nPlanes, dim, cap,
         planeOffset = t * 101)
-      val cold = bk.filter(!col("hot"))
-      val a = cold.select(col("lvl"), col("bucket"),
-        col("vec_id").as("id_a"), col("embedding").as("ea"))
-      val b = cold.select(col("lvl"), col("bucket"),
-        col("vec_id").as("id_b"), col("embedding").as("eb"))
-      val coldPairs = a.join(b, Seq("lvl", "bucket"))
-        .filter(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"), col("ea"), col("eb"))
-      val hotRows = bk.filter(col("hot"))
-      val reps = hotRows.groupBy(col("lvl"), col("bucket"))
-        .agg(min(col("vec_id")).as("id_a"))
-      val repVecs = reps.join(
-        hotRows.select(col("lvl"), col("bucket"),
-          col("vec_id").as("id_a"), col("embedding").as("ea")),
-        Seq("lvl", "bucket", "id_a"))
-      // min-id rep < every other member, so (rep, member) is already
-      // in canonical (id_a < id_b) order
-      val starPairs = hotRows.join(repVecs, Seq("lvl", "bucket"))
-        .filter(col("vec_id") =!= col("id_a"))
-        .select(col("id_a"), col("vec_id").as("id_b"),
-          col("ea"), col("embedding").as("eb"))
-      coldPairs.unionAll(starPairs)
+      // its `hot` flag is count > cap per (lvl, bucket), the very test
+      // the star device applies, so the device re-derives it from its
+      // own hot-rep aggregate
+      HotKeys.starPairs(bk.drop("hot"), Seq("lvl", "bucket"), "vec_id",
+        Some("embedding"), cap)
     }
-    tables.reduce(_ unionAll _)
-      .dropDuplicates("id_a", "id_b")
-      .select(col("id_a"), col("id_b"),
-        VectorOps.dot(col("ea"), col("eb")).as("score"))
-      .filter(col("score") > threshold)
-      .select(col("id_a"), col("id_b"), round(col("score"), 6).as("score"))
-      .orderBy("id_a", "id_b")
+    scorePairs(tables.reduce(_ unionAll _), threshold)
   }
 
   // ------------------------------------------------- int8 quantization

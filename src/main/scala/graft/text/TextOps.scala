@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
-import graft.plans.{Checkpointer, NgramStats, Shingles}
+import graft.plans.{Checkpointer, HotKeys, NgramStats, Shingles}
 
 /** Text-analysis + deduplication operators for LLM training-data
   * pipelines (SURVEY.md §2.C; beyond the reference surface, which has no
@@ -240,22 +240,6 @@ object TextOps {
           transform(slice(sig, b * r + 1, lit(r)), _.cast("string")))).as("bh")))
   }
 
-  /** MinHash/LSH near-duplicate candidate pairs with exact-Jaccard
-    * verification. Fully SQL-oracled (md5-derived permutations are
-    * engine-portable — see [[minhashSignature]]); planted-pair
-    * properties in TextOpsSpec cover the statistical behavior.
-    *
-    * Scale path: explode to (bandKey → doc) and self-join on the band
-    * key — a pure equi-shuffle join on uniform hash keys; candidate
-    * verification touches only colliding pairs, never the cross product.
-    */
-  /** Signature via explode + one hash aggregate: each (doc, shingle)
-    * row computes ONE md5-derived [[baseHash]], then feeds 32 codegen'd
-    * `min((a_j·h+b_j) mod p)` aggregates with map-side partial
-    * combine — the per-element work stays inside whole-stage codegen
-    * (long buffers → HashAggregate), and the shuffle carries one
-    * 32-long signature row per document. This is the 100 TB shape:
-    * explode → partial agg, never a per-row lambda fold. */
   /** [[minhashSignatures]] over a PREBUILT (doc_id, s) shingle stream —
     * the shared-stream form: q_dedup_eval computes truth AND candidates
     * from ONE tokenize→shingle pass instead of two (r14; halved that
@@ -270,6 +254,13 @@ object TextOps {
         array((0 until minhashPerms).map(j => col(s"m$j")): _*).as("sig"))
   }
 
+  /** Signature via explode + one hash aggregate: each (doc, shingle)
+    * row computes ONE md5-derived [[baseHash]], then feeds 32 codegen'd
+    * `min((a_j·h+b_j) mod p)` aggregates with map-side partial
+    * combine — the per-element work stays inside whole-stage codegen
+    * (long buffers → HashAggregate), and the shuffle carries one
+    * 32-long signature row per document. This is the 100 TB shape:
+    * explode → partial agg, never a per-row lambda fold. */
   def minhashSignatures(docs: DataFrame, w: Int,
                         maxDf: Long = shingleDfCap): DataFrame =
     minhashSignaturesFromShingles(shingleRows(docs, w, maxDf))
@@ -321,58 +312,29 @@ object TextOps {
   }
 
   /** Duplicate-pile budget for the UNCAPPED MinHash band join (r16
-    * verdict ask #2 — the [[graft.sim.Similarity.uncappedBucketGuard]]
-    * fail-fast device applied to the text family): a pile of `depth`
+    * verdict ask #2 — the [[graft.plans.HotKeys.guard]] fail-fast that
+    * the embedding join runs under [[graft.sim.Similarity.uncappedBucketGuard]],
+    * applied to the text family): a pile of `depth`
     * identical documents shares every band key, so the band self-join
     * owes C(depth, 2) pairs per pile — the ×100 rehearsal adjudicated
     * q_dedup_minhash output-bound at 27.5× against planted 100-deep
     * piles. Guarded runs abort in ONE cheap md5-multiplicity aggregate
-    * instead (see [[assertDupPileDepth]] for why the guard is
-    * text-level, not band-level). Sized from measured depths: sf0.1
+    * instead (see [[nearDupPairs]] for why the guard is text-level,
+    * not band-level). Sized from measured depths: sf0.1
     * max exact-dup pile = 2 (→ ~20 at ×10, ~200 at ×100), so 128
     * passes every test SF and the ×10 corpus, and trips the ×100
     * planted piles immediately. */
   val minhashBandGuard = 128L
 
-  /** Fail-fast EXACT-DUPLICATE-pile guard for the uncapped MinHash band
-    * join: one md5(text)-multiplicity aggregate over the corpus — no
-    * shingles, no signatures, and no materialization that would break
-    * the band join's single-shuffle plan. A pile of `depth` identical
-    * documents shares every band key, so the band self-join owes
-    * C(depth, 2) pairs per pile — exactly the ×100 rehearsal's
-    * demonstrated Ω(result) blow-up. (Near-identical-but-distinct
-    * floods are bounded separately by the shingle df-cap, which drops
-    * any shingle shared by >maxDf documents before it can band.) */
-  private def assertDupPileDepth(docs: DataFrame, guard: Long,
-                                 capped: String): Unit = {
-    val hot = docs.groupBy(md5(lower(col("text"))).as("h"))
-      .agg(count(lit(1)).as("n"))
-      .filter(col("n") > guard).orderBy(col("n").desc).limit(5)
-      .collect().map(r => s"pile ${r.getString(0).take(8)}…=${r.getLong(1)}")
-    require(hot.isEmpty,
-      s"exact-duplicate pile depth exceeds guard $guard (deepest: " +
-        s"${hot.mkString(", ")}); every copy shares every band key, so " +
-        "the band self-join owes C(depth, 2) pairs per pile — run exact " +
-        s"dedup first (q_dedup_exact / the q_llm_pipeline composition) " +
-        s"or use $capped at this duplicate density")
-  }
-
-  /** Fail-fast density check before an uncapped band self-join: one
-    * aggregate over the (already checkpointed) band-key frame; any
-    * bucket above `guard` aborts with the hot-bucket profile and the
-    * capped operator's name, BEFORE any quadratic pair work runs. */
-  private def assertBandDensity(keyed: DataFrame, guard: Long,
-                                capped: String): Unit = {
-    val hot = keyed.groupBy(col("k")).agg(count(lit(1)).as("n"))
-      .filter(col("n") > guard).orderBy(col("n").desc).limit(5)
-      .collect().map(r => s"bucket ${r.get(0)}=${r.getLong(1)}")
-    require(hot.isEmpty,
-      s"uncapped band-bucket density exceeds guard $guard (hot: " +
-        s"${hot.mkString(", ")}); the band self-join would be " +
-        s"~quadratic in the hot-bucket population — use $capped at " +
-        "this duplicate density")
-  }
-
+  /** MinHash/LSH near-duplicate candidate pairs with exact-Jaccard
+    * verification. Fully SQL-oracled (md5-derived permutations are
+    * engine-portable — see [[minhashSignature]]); planted-pair
+    * properties in TextOpsSpec cover the statistical behavior.
+    *
+    * Scale path: explode to (bandKey → doc) and self-join on the band
+    * key — a pure equi-shuffle join on uniform hash keys; candidate
+    * verification touches only colliding pairs, never the cross product.
+    */
   def nearDupPairs(docs: DataFrame, w: Int = 3, minJaccard: Double = 0.6,
                    guard: Long = minhashBandGuard): DataFrame = {
     // Band join ships only (bandKey, doc_id) — constant-width rows — and
@@ -386,8 +348,20 @@ object TextOps {
     // candidate stream — 3-3.5× slower (a localCheckpoint leaf reports
     // unknown partitioning, so AQE re-plans every downstream exchange).
     // The guard is therefore a TEXT-level aggregate, not a band-level
-    // one: one cheap md5-multiplicity pass, no signature recompute.
-    if (guard > 0) assertDupPileDepth(docs, guard, "q_dedup_minhash_capped")
+    // one: one cheap md5-multiplicity pass, no signature recompute. A
+    // pile of identical documents shares every band key, so the band
+    // self-join owes C(depth, 2) pairs per pile. (Near-identical-but-
+    // distinct floods are bounded by the shingle df-cap instead, which
+    // drops any shingle shared by >maxDf documents before it can band.)
+    if (guard > 0)
+      HotKeys.guard(docs, md5(lower(col("text"))), guard,
+          h => s"pile ${h.toString.take(8)}…") { hot =>
+        s"exact-duplicate pile depth exceeds guard $guard (deepest: " +
+          s"$hot); every copy shares every band key, so " +
+          "the band self-join owes C(depth, 2) pairs per pile — run exact " +
+          "dedup first (q_dedup_exact / the q_llm_pipeline composition) " +
+          "or use q_dedup_minhash_capped at this duplicate density"
+      }
     verifyJaccard(bandedCandidates(docs, w), docs, w, minJaccard)
   }
 
@@ -421,37 +395,14 @@ object TextOps {
     * ~nBands·|distinct docs| (≈4 B rows at 1 B docs — an executor OOM
     * as a forced broadcast). Every hot key owes >cap member rows, so
     * the hot subset is bounded by band-rows/cap regardless of corpus
-    * size; cold membership is recovered by left-join +
-    * coalesce(hot, false) — the [[graft.sim.Similarity.cappedLshBuckets]]
-    * device. Cold pairs are the bounded band equi-join; star pairs are
-    * O(corpus). */
+    * size. The star device is [[graft.plans.HotKeys.starPairs]]; the
+    * MinHash caller carries no payload and dedups (id_a, id_b), since a
+    * pair that shares several bands pairs once per band. */
   def bandedCandidatesCapped(sigs: DataFrame,
                              cap: Long = minhashBandBucketCap): DataFrame = {
     val keyed = sigs.select(col("doc_id"), explode(bandKeys(col("sig"))).as("k"))
       .select(col("doc_id"), col("k.band").as("band"), col("k.bh").as("bh"))
-    // r16 fuse: the hot-key frame carries each hot bucket's min-id
-    // REPRESENTATIVE out of the same aggregate that counts it — the
-    // star expansion then reads `rep` off the broadcast row instead of
-    // re-aggregating the hot membership and re-joining reps (one
-    // Exchange + one join removed from the plan; guide §2.4). Output
-    // unchanged: rep ≡ min(doc_id) per hot (band, bh) either way.
-    val hotKeys = keyed.groupBy(col("band"), col("bh"))
-      .agg(count(lit(1)).as("n"), min(col("doc_id")).as("rep"))
-      .filter(col("n") > cap)
-      .select(col("band"), col("bh"), col("rep"))
-    val tagged = keyed.join(broadcast(hotKeys), Seq("band", "bh"), "left")
-    val cold = tagged.filter(col("rep").isNull)
-    val coldPairs = cold
-      .select(col("band"), col("bh"), col("doc_id").as("id_a"))
-      .join(cold.select(col("band"), col("bh"), col("doc_id").as("id_b")),
-        Seq("band", "bh"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-    // min-id rep < every other member: (rep, member) already canonical
-    val starPairs = tagged.filter(col("rep").isNotNull)
-      .filter(col("doc_id") =!= col("rep"))
-      .select(col("rep").as("id_a"), col("doc_id").as("id_b"))
-    coldPairs.unionAll(starPairs).distinct()
+    HotKeys.starPairs(keyed, Seq("band", "bh"), "doc_id", None, cap).distinct()
   }
 
   /** [[nearDupPairs]] with the capped candidate generator. */
@@ -473,7 +424,8 @@ object TextOps {
     * doc hits at most one witness per pile (all an ingest DECISION
     * needs) and candidate emission stays O(new × bands) at any corpus
     * duplicate density. Hot keys only are broadcast (bounded by
-    * band-rows/cap — the [[bandedCandidatesCapped]] device).
+    * band-rows/cap — the [[graft.plans.HotKeys.reps]] frame that
+    * [[bandedCandidatesCapped]] broadcasts too).
     *
     * Production refreshes this table OUT-OF-BAND (the
     * [[graft.sim.Similarity.saveIvfIndex]] precedent): build + save on
@@ -487,18 +439,13 @@ object TextOps {
       .select(col("doc_id").as("corpus_id"),
         explode(bandKeys(col("sig"))).as("k"))
       .select(col("k.band").as("band"), col("k.bh").as("bh"), col("corpus_id"))
-    // r16 fuse (the bandedCandidatesCapped device): the hot-key
-    // aggregate carries each hot bucket's min-id representative, which
-    // IS the hot branch's entire output — no re-aggregation of the hot
-    // membership, the hot rows come straight off the (bounded,
-    // band-rows/cap) broadcast frame itself.
-    val hotKeys = allBands.groupBy(col("band"), col("bh"))
-      .agg(count(lit(1)).as("n"), min(col("corpus_id")).as("rep"))
-      .filter(col("n") > cap)
-      .select(col("band"), col("bh"), col("rep"))
-    allBands.join(broadcast(hotKeys), Seq("band", "bh"), "left")
+    // the hot keys' reps ARE the hot branch's entire output: the hot
+    // rows come straight off the (bounded, band-rows/cap) broadcast
+    // frame, with no second pass over the hot membership
+    val hot = HotKeys.reps(allBands, Seq("band", "bh"), "corpus_id", cap)
+    allBands.join(broadcast(hot), Seq("band", "bh"), "left")
       .filter(col("rep").isNull).drop("rep")
-      .unionAll(hotKeys.select(col("band"), col("bh"), col("rep").as("corpus_id")))
+      .unionAll(hot.select(col("band"), col("bh"), col("rep").as("corpus_id")))
   }
 
   /** Persist [[corpusBandTable]] — the out-of-band refresh step. */
@@ -527,27 +474,12 @@ object TextOps {
     }: _*)
   }
 
-  /** SimHash fingerprints for a whole corpus via the same explode +
-    * codegen-aggregate shape as [[minhashSignatures]]: one row per
-    * (doc, tokenHash) feeds 32 conditional-sum aggregates (±1 per bit),
-    * partial-merged map-side; sign → bit. Occurrence-weighted (tokens
-    * are NOT deduplicated, matching SimHash semantics). */
-  def simhashFingerprints(docs: DataFrame): DataFrame = {
-    val hashed = docs.select(col("doc_id"),
-      explode(transform(tokens(lower(col("text"))), t => baseHash60(t))).as("h"))
-    val bitSums = (0 until 32).map(bit =>
-      sum(when(shiftright(col("h"), bit).bitwiseAND(1L) === 1L, 1L).otherwise(-1L))
-        .as(s"b$bit"))
-    hashed.groupBy(col("doc_id"))
-      .agg(bitSums.head, bitSums.tail: _*)
-      .select(col("doc_id"),
-        concat_ws("", (0 until 32).map(bit =>
-          when(col(s"b$bit") > 0, "1").otherwise("0")): _*).as("sh"))
-  }
-
   /** 32-bit SimHash fingerprints as a long column (doc_id, fp) — the
-    * input shape for Hamming-band candidate joins. Same explode +
-    * codegen-aggregate pipeline as [[simhashFingerprints]]. */
+    * input shape for Hamming-band candidate joins — via the same
+    * explode + codegen-aggregate shape as [[minhashSignatures]]: one row
+    * per (doc, tokenHash) feeds 32 conditional-sum aggregates (±1 per
+    * bit), partial-merged map-side; sign → bit. Occurrence-weighted
+    * (tokens are NOT deduplicated, matching SimHash semantics). */
   def simhashFingerprintsLong(docs: DataFrame): DataFrame = {
     val hashed = docs.select(col("doc_id"),
       explode(transform(tokens(lower(col("text"))), t => baseHash60(t))).as("h"))
@@ -562,15 +494,14 @@ object TextOps {
           .reduce(_ + _).as("fp"))
   }
 
-  /** Hamming-band near-dup pairs over precomputed fingerprints: the
-    * 32-bit fingerprint splits into `nBands` bands of 32/nBands bits;
-    * by pigeonhole, two fingerprints within Hamming distance < nBands
-    * MUST agree exactly on at least one band, so candidates come from
-    * nBands equi-joins on (band, bits) keys — never an all-pairs
-    * comparison — and are verified with an exact popcount
-    * (`bit_count(xor)`). Guaranteed recall for distance ≤ nBands − 1;
-    * pairs at distance in (nBands−1, maxHamming] are caught only if
-    * their flips cluster outside one band. */
+  /** [[simhashFingerprintsLong]] as a 32-char bit string (doc_id, sh),
+    * bit 0 first — the [[simhash]] column's layout. */
+  def simhashFingerprints(docs: DataFrame): DataFrame =
+    simhashFingerprintsLong(docs).select(col("doc_id"),
+      concat_ws("", (0 until 32).map(bit =>
+        when(shiftright(col("fp"), bit).bitwiseAND(1L) === 1L, "1")
+          .otherwise("0")): _*).as("sh"))
+
   /** Hot-bucket density budget for the UNCAPPED SimHash band join (r16
     * verdict ask #2, twin of [[minhashBandGuard]]): a 32-bit
     * fingerprint space collides hard under exact-duplicate piles (every
@@ -582,22 +513,47 @@ object TextOps {
     * and trips the ×100 planted piles immediately. */
   val simhashBandGuard = 16384L
 
+  /** (doc_id, fp, band, bits): each fingerprint split into `nBands`
+    * bands of 32/nBands bits, materialized once because both self-join
+    * sides read it. `nBands` must be a positive divisor of 32. */
+  private def simhashBandKeys(fps: DataFrame, nBands: Int): DataFrame = {
+    require(nBands >= 1 && 32 % nBands == 0,
+      s"nBands must be a positive divisor of 32, got $nBands")
+    val width = 32 / nBands
+    val mask = (1L << width) - 1
+    Checkpointer(fps.select(col("doc_id"), col("fp"),
+        explode(array((0 until nBands).map(b =>
+          struct(lit(b).as("band"),
+            shiftright(col("fp"), b * width).bitwiseAND(lit(mask)).as("bits"))): _*))
+          .as("k"))
+      .select(col("doc_id"), col("fp"),
+        col("k.band").as("band"), col("k.bits").as("bits")))
+  }
+
+  /** Hamming-band near-dup pairs over precomputed fingerprints: the
+    * 32-bit fingerprint splits into `nBands` bands of 32/nBands bits;
+    * by pigeonhole, two fingerprints within Hamming distance < nBands
+    * MUST agree exactly on at least one band, so candidates come from
+    * nBands equi-joins on (band, bits) keys — never an all-pairs
+    * comparison — and are verified with an exact popcount
+    * (`bit_count(xor)`). Guaranteed recall for distance ≤ nBands − 1;
+    * pairs at distance in (nBands−1, maxHamming] are caught only if
+    * their flips cluster outside one band. */
   def simhashBandPairs(fps: DataFrame, maxHamming: Int = 3,
                        nBands: Int = 4,
                        guard: Long = simhashBandGuard): DataFrame = {
-    require(32 % nBands == 0, s"nBands must divide 32, got $nBands")
-    val width = 32 / nBands
-    val mask = (1L << width) - 1
-    // materialized once: both self-join sides reuse the banded keys
-    val keyed = Checkpointer(fps.select(col("doc_id"), col("fp"),
-      explode(array((0 until nBands).map(b =>
-        struct(lit(b).as("band"),
-          shiftright(col("fp"), b * width).bitwiseAND(lit(mask)).as("bits"))): _*))
-        .as("k")))
+    val keyed = simhashBandKeys(fps, nBands)
     if (guard > 0)
-      assertBandDensity(keyed, guard, "q_dedup_simhash_capped")
-    keyed.select(col("k"), col("doc_id").as("id_a"), col("fp").as("fp_a"))
-      .join(keyed.select(col("k"), col("doc_id").as("id_b"), col("fp").as("fp_b")), Seq("k"))
+      HotKeys.guard(keyed, struct(col("band"), col("bits")), guard,
+          k => s"bucket $k") { hot =>
+        s"uncapped band-bucket density exceeds guard $guard (hot: " +
+          s"$hot); the band self-join would be " +
+          "~quadratic in the hot-bucket population — use " +
+          "q_dedup_simhash_capped at this duplicate density"
+      }
+    keyed.select(col("band"), col("bits"), col("doc_id").as("id_a"), col("fp").as("fp_a"))
+      .join(keyed.select(col("band"), col("bits"),
+        col("doc_id").as("id_b"), col("fp").as("fp_b")), Seq("band", "bits"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"), col("fp_a"), col("fp_b"))
       .distinct()
@@ -626,59 +582,27 @@ object TextOps {
     * ~10⁴× pairs (its artifact note). Here a (band, bits) bucket whose
     * population exceeds `cap` STAR-EXPANDS against its min-id
     * representative instead of pairing all-vs-all — O(|bucket|) pairs,
-    * the [[graft.sim.Similarity.embeddingNearDupPairsCappedFixed]]
-    * device — while cold buckets keep the exact pairing. Members of a
-    * hot pile still reach each other transitively through the rep (the
-    * duplicate-CLUSTER step downstream closes the component, exactly
-    * as in the capped embedding-LSH family).
+    * the [[graft.plans.HotKeys.starPairs]] device, carrying the rep's
+    * fingerprint as its payload — while cold buckets keep the exact
+    * pairing. Members of a hot pile still reach each other transitively
+    * through the rep (the duplicate-CLUSTER step downstream closes the
+    * component, exactly as in the capped embedding-LSH family).
     *
-    * Scale: the hot map is a ≤nBands·2^(32/nBands)-row broadcast
-    * (1024 rows at the default 4×8-bit geometry); cold pairs are the
-    * bounded band equi-join; star pairs are O(corpus). Fully
+    * Scale: the broadcast hot map is at most the ≤nBands·2^(32/nBands)
+    * keyspace (1024 rows at the default 4×8-bit geometry); cold pairs
+    * are the bounded band equi-join; star pairs are O(corpus). Fully
     * SQL-expressible — counts, reps and the popcount verify all
     * mirror — so the key is DuckDB-oracled, unlike the capped
     * embedding key whose plane count is data-driven. */
   def simhashBandPairsCapped(fps: DataFrame, maxHamming: Int = 3,
-                             nBands: Int = 4, cap: Long = simhashBucketCap): DataFrame = {
-    require(32 % nBands == 0, s"nBands must divide 32, got $nBands")
-    val width = 32 / nBands
-    val mask = (1L << width) - 1
-    val keyed = Checkpointer(fps.select(col("doc_id"), col("fp"),
-        explode(array((0 until nBands).map(b =>
-          struct(lit(b).as("band"),
-            shiftright(col("fp"), b * width).bitwiseAND(lit(mask)).as("bits"))): _*))
-          .as("k"))
-      .select(col("doc_id"), col("fp"),
-        col("k.band").as("band"), col("k.bits").as("bits")))
-    // r16 fuse (the bandedCandidatesCapped device): the ≤1024-row count
-    // frame carries each hot bucket's min-id representative AND its
-    // fingerprint (`min_by(fp, doc_id)` — doc_id is unique per bucket,
-    // so the pick is deterministic), so the star expansion reads both
-    // off the broadcast row: the hot-membership re-aggregation and the
-    // two rep joins are gone from the plan (guide §2.4).
-    val counts = keyed.groupBy(col("band"), col("bits"))
-      .agg((count(lit(1)) > cap).as("hot"),
-        min(col("doc_id")).as("rep"), min_by(col("fp"), col("doc_id")).as("rep_fp"))
-    val tagged = keyed.join(broadcast(counts), Seq("band", "bits"))
-    val cold = tagged.filter(!col("hot"))
-    val coldPairs = cold
-      .select(col("band"), col("bits"), col("doc_id").as("id_a"), col("fp").as("fp_a"))
-      .join(cold.select(col("band"), col("bits"),
-        col("doc_id").as("id_b"), col("fp").as("fp_b")), Seq("band", "bits"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), col("fp_a"), col("fp_b"))
-    // min-id rep < every other member: (rep, member) already canonical
-    val starPairs = tagged.filter(col("hot"))
-      .filter(col("doc_id") =!= col("rep"))
-      .select(col("rep").as("id_a"), col("doc_id").as("id_b"),
-        col("rep_fp").as("fp_a"), col("fp").as("fp_b"))
-    coldPairs.unionAll(starPairs)
+                             nBands: Int = 4, cap: Long = simhashBucketCap): DataFrame =
+    HotKeys.starPairs(simhashBandKeys(fps, nBands), Seq("band", "bits"), "doc_id",
+        Some("fp"), cap)
       .dropDuplicates("id_a", "id_b")
       .select(col("id_a"), col("id_b"),
         bit_count(col("fp_a").bitwiseXOR(col("fp_b"))).as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .orderBy("id_a", "id_b")
-  }
 
   /** Driver gate for the capped SimHash band join. */
   def qDedupSimhashCapped(spark: SparkSession, dir: String): DataFrame =
@@ -706,20 +630,33 @@ object TextOps {
       .select(col("keep_id"), col("n_docs"), col("sh"))
       .orderBy("keep_id")
 
-  /** N-gram Jaccard near-dup over word trigram shingles — the oracled
-    * variant of near-dup detection, in the fully relational shape:
-    * explode shingles → equi-join probe×candidate on the shingle →
-    * count matches per pair → jaccard = |∩| / (|A|+|B|−|∩|).
-    *
-    * This never materializes the cross product: only pairs sharing ≥1
-    * shingle appear after the join (pairs with jaccard = 0 are excluded
-    * by the > 0.1 filter anyway, so the result set is identical to the
-    * nested-loop form the DuckDB oracle uses). At scale the join is a
-    * hash shuffle on shingle strings — skew-free for natural text. */
+  /** The shingle-overlap pair join every shingle-scored near-dup
+    * operator reads: (id_a, id_b, ni, na, nb) for each pair id_a < id_b
+    * sharing ≥1 row of `sh` (doc_id, s), with ni = |S(a) ∩ S(b)| and
+    * na, nb the two set sizes. Equi-join on the shingle → count matches
+    * per pair → rejoin the per-doc counts; never a cross product, and a
+    * hash shuffle on shingle strings at scale. `probeFilter` bounds the
+    * id_a side (None = the full self-join). */
+  private def shingleOverlap(sh: DataFrame, probeFilter: Option[Column]): DataFrame = {
+    val counts = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+    val probe = probeFilter.fold(sh)(sh.filter)
+    probe.select(col("doc_id").as("id_a"), col("s"))
+      .join(sh.select(col("doc_id").as("id_b"), col("s")), Seq("s"))
+      .filter(col("id_a") < col("id_b"))
+      .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("ni"))
+      .join(counts.select(col("doc_id").as("id_a"), col("n").as("na")), Seq("id_a"))
+      .join(counts.select(col("doc_id").as("id_b"), col("n").as("nb")), Seq("id_b"))
+      .select(col("id_a"), col("id_b"), col("ni"), col("na"), col("nb"))
+  }
+
+  /** 6-dp Jaccard |∩| / (|A|+|B|−|∩|) of a [[shingleOverlap]] row. */
+  private val overlapJaccard: Column =
+    round(col("ni").cast("double") / (col("na") + col("nb") - col("ni")), 6)
+
   /** Shared pair engine for [[qDedupNgram]] and [[qDedupCluster]]'s edge
-    * set: df-capped shingle rows → equi-join → per-pair intersection
-    * count → jaccard. `probeFilter` bounds the probe side (None = full
-    * corpus self-join, still shingle-keyed, never a cross product). */
+    * set: df-capped shingle rows → [[shingleOverlap]] → jaccard.
+    * `probeFilter` bounds the probe side (None = full corpus self-join,
+    * still shingle-keyed, never a cross product). */
   def ngramJaccardPairs(docs: DataFrame, w: Int, minJaccard: Double,
                         probeFilter: Option[Column],
                         maxDf: Long = shingleDfCap): DataFrame = {
@@ -731,21 +668,21 @@ object TextOps {
     // candidate side) and each would rebuild tokenize→shingle→explode.
     val shBase = shingleRows(docs, w, maxDf)
     val sh = if (probeFilter.isEmpty && maxDf <= 0) Checkpointer(shBase) else shBase
-    val counts = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val probe = probeFilter.fold(sh)(sh.filter)
-    val inter = probe.select(col("doc_id").as("id_a"), col("s"))
-      .join(sh.select(col("doc_id").as("id_b"), col("s")), Seq("s"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("ni"))
-    inter
-      .join(counts.select(col("doc_id").as("id_a"), col("n").as("na")), Seq("id_a"))
-      .join(counts.select(col("doc_id").as("id_b"), col("n").as("nb")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(col("ni").cast("double") / (col("na") + col("nb") - col("ni")), 6)
-          .as("jaccard"))
+    shingleOverlap(sh, probeFilter)
+      .select(col("id_a"), col("id_b"), overlapJaccard.as("jaccard"))
       .filter(col("jaccard") > minJaccard)
   }
 
+  /** N-gram Jaccard near-dup over word trigram shingles — the oracled
+    * variant of near-dup detection, in the fully relational shape:
+    * explode shingles → equi-join probe×candidate on the shingle →
+    * count matches per pair → jaccard = |∩| / (|A|+|B|−|∩|).
+    *
+    * This never materializes the cross product: only pairs sharing ≥1
+    * shingle appear after the join (pairs with jaccard = 0 are excluded
+    * by the > 0.1 filter anyway, so the result set is identical to the
+    * nested-loop form the DuckDB oracle uses). At scale the join is a
+    * hash shuffle on shingle strings — skew-free for natural text. */
   def qDedupNgram(spark: SparkSession, dir: String): DataFrame =
     ngramJaccardPairs(Tables.documents(spark, dir), 3, 0.1,
       Some(col("doc_id") < 50))
@@ -758,30 +695,20 @@ object TextOps {
     * the long side's union. Output keeps both scores so the gap is
     * visible per pair.
     *
-    * Scale: the SAME df-capped shingle equi-join as [[ngramJaccardPairs]]
-    * (never a cross product; hot boilerplate shingles dropped by the
-    * broadcast anti-join before fan-out); with the cap active the
-    * shingle stream is checkpointed once inside [[shingleRows]] and its
-    * three consumers re-read cheap blocks. */
+    * Scale: the SAME df-capped [[shingleOverlap]] join as
+    * [[ngramJaccardPairs]] (never a cross product; hot boilerplate
+    * shingles dropped by the broadcast anti-join before fan-out); with
+    * the cap active the shingle stream is checkpointed once inside
+    * [[shingleRows]] and its three consumers re-read cheap blocks. */
   def containmentPairs(docs: DataFrame, w: Int = 3,
                        minContainment: Double = 0.9,
-                       maxDf: Long = shingleDfCap): DataFrame = {
-    val sh = shingleRows(docs, w, maxDf)
-    val counts = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val inter = sh.select(col("doc_id").as("id_a"), col("s"))
-      .join(sh.select(col("doc_id").as("id_b"), col("s")), Seq("s"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("ni"))
-    inter
-      .join(counts.select(col("doc_id").as("id_a"), col("n").as("na")), Seq("id_a"))
-      .join(counts.select(col("doc_id").as("id_b"), col("n").as("nb")), Seq("id_b"))
+                       maxDf: Long = shingleDfCap): DataFrame =
+    shingleOverlap(shingleRows(docs, w, maxDf), None)
       .select(col("id_a"), col("id_b"),
         round(col("ni").cast("double") / least(col("na"), col("nb")), 6)
           .as("containment"),
-        round(col("ni").cast("double") / (col("na") + col("nb") - col("ni")), 6)
-          .as("jaccard"))
+        overlapJaccard.as("jaccard"))
       .filter(col("containment") >= minContainment)
-  }
 
   /** Twin-id offset for [[qDedupContainment]]'s planted excerpts. 2^40
     * so twin ids cannot collide with real doc_ids on any corpus this
@@ -1971,25 +1898,20 @@ object TextOps {
       .join(repOk, Seq("doc_id"), "left_semi")
       .join(deconOk, Seq("doc_id"), "left_semi"))
 
-    // exact dedup: min doc_id survives per content digest
-    val exactKeep = cleaned.groupBy(md5(col("text")).as("h"))
-      .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
-    val deduped = Checkpointer(cleaned.join(exactKeep, Seq("doc_id"), "left_semi"))
+    val deduped = exactDedup(cleaned)
 
     // near-dup cluster dedup over the surviving subset
     val edges = ngramJaccardPairs(deduped, 3, pipelineClusterJaccard, None)
       .select(col("id_a").as("src"), col("id_b").as("dst"))
-    val keepCluster = graft.graph.ConnectedComponents
-      .run(edges, deduped.select(col("doc_id").as("id")))
-      .filter(col("id") === col("lbl"))
-      .select(col("id").as("doc_id"))
-    val survivors = deduped.join(keepCluster, Seq("doc_id"), "left_semi")
+    clusterSplitPack(deduped, edges)
+  }
 
-    // split + pack: streams are (split, source) so each split's sources
-    // pack independently
-    val withSplit = survivors.select(col("doc_id"), col("source"), col("text"),
-      Sampling.splitAssign(col("doc_id"), pipelineSplits).as("split"))
-    packChunks(withSplit, concat_ws("/", col("split"), col("source")), col("doc_id"))
+  /** Pipeline exact dedup: the min doc_id survives per content digest;
+    * the survivors are checkpointed for the stages that read them. */
+  private def exactDedup(cleaned: DataFrame): DataFrame = {
+    val exactKeep = cleaned.groupBy(md5(col("text")).as("h"))
+      .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
+    Checkpointer(cleaned.join(exactKeep, Seq("doc_id"), "left_semi"))
   }
 
   def qLlmPipeline(spark: SparkSession, dir: String): DataFrame =
@@ -2080,10 +2002,7 @@ object TextOps {
       .join(repOk, Seq("doc_id"), "left_semi")
       .join(deconOk, Seq("doc_id"), "left_semi"))
 
-    // exact dedup: min doc_id survives per content digest
-    val exactKeep = cleaned.groupBy(md5(col("text")).as("h"))
-      .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
-    val deduped = Checkpointer(cleaned.join(exactKeep, Seq("doc_id"), "left_semi"))
+    val deduped = exactDedup(cleaned)
 
     // exact-substring dedup: any doc sharing a 20-token span with a
     // LOWER-id survivor drops (min-id-wins, the exact-dedup convention)
@@ -2092,8 +2011,9 @@ object TextOps {
     Checkpointer(deduped.join(subDropped, Seq("doc_id"), "left_anti"))
   }
 
-  /** Shared v2/v3 tail: keep one doc per near-dup component, then split
-    * assignment + packing over (split, source) streams. */
+  /** Shared v1/v2/v3 tail: keep one doc per near-dup component, then
+    * split assignment + packing over (split, source) streams, so each
+    * split's sources pack independently. */
   private def clusterSplitPack(subKept: DataFrame, edges: DataFrame): DataFrame = {
     val keepCluster = graft.graph.ConnectedComponents
       .run(edges, subKept.select(col("doc_id").as("id")))
@@ -2834,20 +2754,11 @@ object TextOps {
   def qDedupEval(spark: SparkSession, dir: String): DataFrame = {
     val docs = graft.Tables.documents(spark, dir)
     val sh = shingleRows(docs, 3) // df-capped; checkpointed internally
-    // truth: exact Jaccard over the shared stream (the
-    // ngramJaccardPairs body, probe-free)
-    val counts = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val inter = sh.select(col("doc_id").as("id_a"), col("s"))
-      .join(sh.select(col("doc_id").as("id_b"), col("s")), Seq("s"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("ni"))
-    val truth = (inter
-      .join(counts.select(col("doc_id").as("id_a"), col("n").as("na")), Seq("id_a"))
-      .join(counts.select(col("doc_id").as("id_b"), col("n").as("nb")), Seq("id_b"))
-      // EXACTLY ngramJaccardPairs' predicate: 6-dp-rounded, strict >
-      .filter(round(col("ni").cast("double") /
-        (col("na") + col("nb") - col("ni")), 6) > 0.6)
-      .select(col("id_a"), col("id_b")))
+    // truth: exact Jaccard over the shared stream, with EXACTLY
+    // ngramJaccardPairs' predicate: 6-dp-rounded, strict >
+    val truth = shingleOverlap(sh, None)
+      .filter(overlapJaccard > 0.6)
+      .select(col("id_a"), col("id_b"))
     // candidates: banding over the SAME stream
     val cand = (bandedCandidatesFromSignatures(minhashSignaturesFromShingles(sh)))
     // r16: ONE full-outer pair join + one aggregate computes all three
