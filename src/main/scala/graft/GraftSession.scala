@@ -18,6 +18,10 @@ import graft.plans.GraftExtensions
   *  - ns-as-long parquet reads: required for ns-precision timestamp
   *    columns (see [[Tables.events]]).
   *  - no web UI; set `spark.ui.enabled=true` on the builder to get one.
+  *  - a generated-class cache of 1000 entries instead of Spark's 100:
+  *    one v2 LLM-pipeline op alone needs about 170 classes, so with the
+  *    default every repeated op recompiled all of them (a static conf:
+  *    it only applies when the builder creates the JVM's first session).
   *  - [[GraftExtensions]] injected so `graft_dot` and `graft_scatter`
   *    resolve in SQL. Extensions only apply when the builder CREATES
   *    the session; `getOrCreate` against a live session keeps the
@@ -44,4 +48,5 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
 }

@@ -1,7 +1,12 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import scala.util.DynamicVariable
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.plans.Checkpointer
 
@@ -22,8 +27,17 @@ import graft.plans.Checkpointer
   * convergence probe. Per-round state is lineage-truncated through a
   * [[Checkpointer]] so plans don't grow with iterations (the standard
   * Spark iterative-algorithm shape; GraphX/GraphFrames do the same),
-  * reliable wherever the session has a checkpoint directory set. For
-  * adversarial graphs with large diameters, use [[runStar]]
+  * reliable wherever the session has a checkpoint directory set. The
+  * rounds only run on an edge set of B = 10⁴ undirected edges or more:
+  * below that, one bounded job collects the edges (one orientation) and
+  * union-find labels them on the driver (distributed rounds, then an
+  * in-memory finish once the graph is small — Łącki et al.,
+  * "Connected Components at Scale via Local Contractions", 2018). B is
+  * a fixed row count, the bound [[graft.CollectAudit]] holds every
+  * driver collect to, so the driver holds at most ~1 MB of edges
+  * whatever the session's settings. Over B, the decision costs one
+  * collect of 10⁴ rows before the rounds start.
+  * For adversarial graphs with large diameters, use [[runStar]]
   * (large-star/small-star, O(log n) rounds); for dedup graphs
   * min-propagation converges faster in practice.
   */
@@ -33,6 +47,9 @@ object ConnectedComponents {
     *                edge in either orientation
     * @param nodes   node universe as column (id); isolated nodes become
     *                singleton clusters
+    * @param maxIter bound on the distributed rounds; an edge set below
+    *                B gets its exact fixpoint from the driver-side
+    *                finisher whatever its diameter
     * @return (id, lbl) where lbl = min node id of the component
     *
     * Measured dead end (round 5, sf0.1, do not redo): chaining TWO
@@ -46,6 +63,13 @@ object ConnectedComponents {
   def run(edgesIn: DataFrame, nodes: DataFrame, maxIter: Int = 30): DataFrame = {
     val edges = Checkpointer(edgesIn.select(col("src"), col("dst"))
       .union(edgesIn.select(col("dst").as("src"), col("src").as("dst"))))
+    // min-label propagation never shrinks the edge set, so the one
+    // finisher decision is here: the rounds run only when it declines
+    finishLocally(edges, nodes).getOrElse(propagate(edges, nodes, maxIter))
+  }
+
+  /** [[run]]'s distributed rounds over the checkpointed doubled edges. */
+  private def propagate(edges: DataFrame, nodes: DataFrame, maxIter: Int): DataFrame = {
     // Only nodes that touch an edge need propagation; everything else is
     // a singleton cluster and bypasses the loop entirely. In a dedup
     // graph duplicates are a small fraction of the corpus, so the
@@ -137,26 +161,31 @@ object ConnectedComponents {
     *
     * Both steps preserve connectivity and strictly shrink long chains;
     * at the fixpoint every component is a star centered at its min id.
-    * Each round is two groupBy+join pairs keyed on node ids — same
-    * shuffle shape as [[run]], just O(log n) rounds instead of
-    * O(diameter). Fixpoint detection: (edge count, Σ xxhash64(src,dst))
-    * probe — two one-row aggregates; an undetected hash-sum collision
-    * would need two distinct edge sets with equal count AND equal 64-bit
-    * hash sum in adjacent rounds.
+    * Both steps also keep every node that touches an edge, so the last
+    * round's edges name the whole non-singleton node set.
+    *
+    * Scale: each round is two groupBy+join pairs keyed on node ids —
+    * same shuffle shape as [[run]], just O(log n) rounds instead of
+    * O(diameter). Fixpoint detection: one (edge count, Σ xxhash64(src,
+    * dst)) probe per round; an undetected hash-sum collision would need
+    * two distinct edge sets with equal count AND equal 64-bit hash sum
+    * in adjacent rounds. The probe's count also drives the finisher
+    * [[run]] uses: once it is below B = 10⁴ edges (at setup or after
+    * any round), the contracted edges are collected and labeled on the
+    * driver. So at 100 TB the rounds still contract the graph and only
+    * its tail runs locally, and an over-B graph never pays a wasted
+    * collect.
     *
     * Same signature and output contract as [[run]]: (id, lbl) with
     * lbl = min node id of the component, singletons included. */
   def runStar(edgesIn: DataFrame, nodes: DataFrame, maxIter: Int = 30): DataFrame =
     runStarRounds(edgesIn, nodes, maxIter)._1
 
-  /** [[runStar]] plus the number of rounds executed (exposed so the
-    * O(log n) convergence claim is testable, not asserted). */
+  /** [[runStar]] plus the number of distributed rounds executed (exposed
+    * so the O(log n) convergence claim is testable, not asserted). */
   def runStarRounds(edgesIn: DataFrame, nodes: DataFrame,
                     maxIter: Int = 30): (DataFrame, Int) = {
     val initial = Checkpointer(canon(edgesIn))
-    // active = nodes touching an edge (for singleton bypass, as in run())
-    val active = Checkpointer(initial.select(col("src").as("id"))
-      .union(initial.select(col("dst").as("id"))).distinct())
 
     def probe(df: DataFrame): (Long, java.math.BigDecimal) = {
       // hash sum in decimal: a long sum of 64-bit hashes overflows (ANSI)
@@ -165,14 +194,15 @@ object ConnectedComponents {
           lit(java.math.BigDecimal.ZERO))).head()
       (r.getLong(0), r.getDecimal(1))
     }
+    // canonical edges: the probe's count is the finisher's row count
+    def fits(p: (Long, java.math.BigDecimal)): Boolean = p._1 < finisherRows(initial)
 
     var edges = initial
     var iter = 0
     // one setup job, not two (r17): the probe's count answers isEmpty
-    val prev0 = probe(initial)
-    var done = prev0._1 == 0L
-    var prev: Option[(Long, java.math.BigDecimal)] = Some(prev0)
-    while (!done && iter < maxIter) {
+    var cur = probe(initial)
+    var done = cur._1 == 0L
+    while (!done && !fits(cur) && iter < maxIter) {
       // large-star over both orientations
       val both = edges.select(col("src").as("u"), col("dst").as("v"))
         .union(edges.select(col("dst").as("u"), col("src").as("v")))
@@ -192,23 +222,90 @@ object ConnectedComponents {
         .select(col("m").as("src"), col("v").as("dst"))
         .union(smins.select(col("m").as("src"), col("u").as("dst")))
       val nextEdges = Checkpointer(canon(small))
-      val cur = probe(nextEdges)
+      val next = probe(nextEdges)
       // superseded round state — free its blocks (see run())
       Checkpointer.release(edges)
       edges = nextEdges
-      done = prev.exists(p => p._1 == cur._1 && p._2.compareTo(cur._2) == 0)
-      prev = Some(cur)
+      done = next._1 == cur._1 && next._2.compareTo(cur._2) == 0
+      cur = next
       iter += 1
     }
-    // fixpoint is a star per component: every node's label is its min
-    // neighbor (or itself, for the center)
-    val labels = edges.select(col("src").as("id"), col("dst").as("lbl"))
+    val local = if (fits(cur)) finishLocally(edges, nodes) else None
+    (local.getOrElse(starLabels(edges, nodes)), iter)
+  }
+
+  /** Labels read off [[runStarRounds]]' last edge set: at the fixpoint
+    * a star per component, so every node's label is its min neighbor
+    * (or itself, for the center); nodes on no edge are singletons. */
+  private def starLabels(edges: DataFrame, nodes: DataFrame): DataFrame = {
+    val both = edges.select(col("src").as("id"), col("dst").as("lbl"))
       .union(edges.select(col("dst").as("id"), col("src").as("lbl")))
-      .groupBy(col("id")).agg(min(col("lbl")).as("nbr"))
+    val labels = both.groupBy(col("id")).agg(min(col("lbl")).as("nbr"))
       .select(col("id"), least(col("id"), col("nbr")).as("lbl"))
     val singletons = nodes
-      .join(active, Seq("id"), "left_anti")
+      .join(both.select(col("id")), Seq("id"), "left_anti")
       .select(col("id"), col("id").as("lbl"))
-    (labels.union(singletons), iter)
+    labels.union(singletons)
+  }
+
+  /** The most edge rows the driver-side finisher collects, B: it takes
+    * an edge set of fewer rows, and a full collect tells it the edge set
+    * is over. B = 10⁴ is the bound [[graft.CollectAudit]] holds every
+    * driver collect to. Tests narrow it with `withValue` (0: always the
+    * distributed rounds); no session setting reaches it. */
+  private[graft] val collectRows = new DynamicVariable[Int](10000)
+
+  /** [[collectRows]] for `edges`, 0 for ids the driver-side union-find
+    * does not label (non-integral). */
+  private def finisherRows(edges: DataFrame): Int = edges.schema("src").dataType match {
+    case LongType | IntegerType | ShortType | ByteType => collectRows.value
+    case _ => 0
+  }
+
+  /** The driver-side finisher shared by [[run]] and [[runStar]]: ONE
+    * bounded job collects at most [[collectRows]] edge rows from the
+    * materialized `edges`, one orientation each (src ≤ dst; coalesced to
+    * one partition, so the bounded take is a single task, never the
+    * incremental multi-job scan), and union-find labels every node with
+    * its component's min id — the exact fixpoint, whatever the
+    * diameter. None when the edge set has [[collectRows]] rows or more.
+    * On success `edges` is released: the returned local relation ∪
+    * `nodes` singletons no longer reads it. */
+  private def finishLocally(edges: DataFrame, nodes: DataFrame): Option[DataFrame] = {
+    val limit = finisherRows(edges)
+    // the src ≤ dst filter also drops edges with a null end
+    lazy val rows = edges.filter(col("src") <= col("dst"))
+      .select(col("src").cast(LongType), col("dst").cast(LongType))
+      .coalesce(1).limit(limit).collect()
+    if (limit <= 0 || rows.length >= limit) None
+    else {
+      val parent = mutable.LongMap.empty[Long]
+      def find(x: Long): Long = {
+        var root = x
+        while (parent(root) != root) root = parent(root)
+        var y = x
+        while (parent(y) != root) { val up = parent(y); parent(y) = root; y = up }
+        root
+      }
+      rows.foreach { r =>
+        val (a, b) = (r.getLong(0), r.getLong(1))
+        parent.getOrElseUpdate(a, a)
+        parent.getOrElseUpdate(b, b)
+        val (ra, rb) = (find(a), find(b))
+        // the larger root goes under the smaller: roots stay component mins
+        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      }
+      val idType = edges.schema("src").dataType
+      val labels = edges.sparkSession.createDataFrame(
+        parent.keys.toArray.map(id => Row(id, find(id))).toSeq.asJava,
+        StructType(Seq(StructField("id", LongType, nullable = false),
+          StructField("lbl", LongType, nullable = false))))
+        .select(col("id").cast(idType), col("lbl").cast(idType))
+      val singletons = nodes
+        .join(labels, Seq("id"), "left_anti")
+        .select(col("id"), col("id").as("lbl"))
+      Checkpointer.release(edges)
+      Some(labels.union(singletons))
+    }
   }
 }

@@ -675,13 +675,14 @@ object Similarity {
     *  2. DEGENERATE hot buckets (piles of near-identical vectors): no
     *     amount of extra planes splits them — every hyperplane puts
     *     near-identical vectors on the same side (the same failure mode
-    *     as salting identical rows, SkewJoin.salt). These stay flagged
-    *     `hot = true` after maxDepth, and pair generation handles them
-    *     by star-expansion instead (see [[embeddingNearDupPairsCapped]]).
+    *     as salting identical rows, SkewJoin.salt). These stay above
+    *     `cap` after maxDepth, and pair generation handles them by
+    *     star-expansion instead (see [[embeddingNearDupPairsCapped]]).
     *
-    * Output: (idCol, vecCol, lvl, bucket, hot) — bucket ids are only
+    * Output: (idCol, vecCol, lvl, bucket) — bucket ids are only
     * comparable WITHIN a level (the join key downstream is (lvl,
-    * bucket)), `hot` marks buckets still above cap after maxDepth.
+    * bucket)); a bucket still holding more than `cap` rows after
+    * maxDepth is degenerate, and only a level-`maxDepth` bucket can be.
     *
     * Scale: each round's hot-bucket id list is broadcast — bounded by
     * #buckets-above-cap ≤ N/cap, and in practice tiny because
@@ -737,24 +738,11 @@ object Similarity {
       }
       d += 1
     }
-    if (!refined) {
-      // no bucket was ever hot: the checkpointed base IS the answer —
-      // no degenerate-skew probe, no second checkpoint, just the flag
-      base.withColumn("hot", lit(false))
-    } else {
-      // whatever is still above cap after maxDepth refinements is
-      // degenerate skew — flag it for the caller's O(|b|) path
-      val counts = cur.groupBy(col("lvl"), col("bucket")).count()
-        .filter(col("count") > cap)
-        .select(col("lvl").as("h_lvl"), col("bucket").as("h_bucket"))
-      val last = cur.join(broadcast(counts),
-        col("lvl") === col("h_lvl") && col("bucket") === col("h_bucket"), "left")
-        .select(col(idCol), col(vecCol), col("lvl"), col("bucket"),
-          col("h_lvl").isNotNull.as("hot"))
-      // multiply-consumed downstream (~6 ways) — one materialization
-      Checkpointer(
-        settled.map(_.withColumn("hot", lit(false)).unionAll(last)).getOrElse(last))
-    }
+    // no bucket was ever hot: the checkpointed base IS the answer;
+    // otherwise the refined composition is multiply-consumed downstream
+    // (~6 ways) — one materialization
+    if (!refined) base
+    else Checkpointer(settled.map(_.unionAll(cur)).getOrElse(cur))
   }
 
   /** All-pairs embedding near-dup with auto-sized planes and the skew
@@ -789,10 +777,9 @@ object Similarity {
       // output reads materialized blocks for every consumer below
       val bk = cappedLshBuckets(emb, "vec_id", "embedding", nPlanes, dim, cap,
         planeOffset = t * 101)
-      // its `hot` flag is count > cap per (lvl, bucket), the very test
-      // the star device applies, so the device re-derives it from its
-      // own hot-rep aggregate
-      HotKeys.starPairs(bk.drop("hot"), Seq("lvl", "bucket"), "vec_id",
+      // the star device finds the degenerate buckets (count > cap per
+      // (lvl, bucket)) with its own hot-rep aggregate
+      HotKeys.starPairs(bk, Seq("lvl", "bucket"), "vec_id",
         Some("embedding"), cap)
     }
     scorePairs(tables.reduce(_ unionAll _), threshold)

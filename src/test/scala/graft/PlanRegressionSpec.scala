@@ -9,6 +9,8 @@ import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.graftbridge.ListenerBridge
 import org.apache.spark.sql.util.QueryExecutionListener
 
+import graft.graph.ConnectedComponents
+
 /** Pins shuffle-Exchange and Sort counts of the heaviest gate queries so
   * a plan regression fails tests instead of drifting silently in bench
   * (round-2 verdict item 8). Counts are from the FINAL adaptive physical
@@ -29,9 +31,6 @@ class PlanRegressionSpec extends SparkSpec {
   // (AQE may broadcast-convert joins at this size, so the pins reflect
   // the small-data plan; a pin breach still signals a structural change)
   private val pins = Seq(
-    ("q_dedup_cluster", 3, 1),
-    ("q_dedup_cluster_banded", 3, 1),
-    ("q_dedup_cluster_star", 5, 1),
     ("q_dedup_embedding_lsh_capped", 2, 3),
     // signature mins are LONGS (md5-derived numeric base hash) so the
     // 32 aggregates stay hash-based — a string-digest variant measured
@@ -221,13 +220,35 @@ class PlanRegressionSpec extends SparkSpec {
     // +final output sort — re-pin deliberately if a round's shape grows
     ("q_pagerank", 7, 1))
 
-  pins.foreach { case (name, maxExch, maxSort) =>
-    test(s"$name plan stays within $maxExch exchanges / $maxSort sorts") {
-      val (e, s) = counts(SparkEntry.queries(name)(spark, sfDir))
+  // the connected-components keys, pinned on both of their paths: with
+  // the driver-side finisher off, the distributed rounds' final plan;
+  // as shipped (these graphs are below the finisher's bound), the labels
+  // are a local relation and the one exchange left is the final ORDER
+  // BY's range partitioning
+  private val ccPins = Seq(
+    ("q_dedup_cluster", 3, 1),
+    ("q_dedup_cluster_banded", 3, 1),
+    ("q_dedup_cluster_star", 5, 1))
+  private val ccFinisherPins = Seq(
+    ("q_dedup_cluster", 1, 1),
+    ("q_dedup_cluster_banded", 1, 1),
+    ("q_dedup_cluster_star", 1, 1))
+
+  private def pinTest(name: String, maxExch: Int, maxSort: Int,
+                      path: String = "", rounds: Boolean = false): Unit =
+    test(s"$name plan stays within $maxExch exchanges / $maxSort sorts$path") {
+      def measure = counts(SparkEntry.queries(name)(spark, sfDir))
+      val (e, s) =
+        if (rounds) ConnectedComponents.collectRows.withValue(0)(measure) else measure
       assert(e <= maxExch && s <= maxSort,
-        s"$name plan drifted: exchanges=$e (pin $maxExch), sorts=$s (pin $maxSort)")
-      info(s"$name: exchanges=$e sorts=$s")
+        s"$name$path plan drifted: exchanges=$e (pin $maxExch), sorts=$s (pin $maxSort)")
+      info(s"$name$path: exchanges=$e sorts=$s")
     }
+
+  pins.foreach { case (name, maxExch, maxSort) => pinTest(name, maxExch, maxSort) }
+  ccPins.foreach { case (name, maxExch, maxSort) => pinTest(name, maxExch, maxSort, rounds = true) }
+  ccFinisherPins.foreach { case (name, maxExch, maxSort) =>
+    pinTest(name, maxExch, maxSort, " with the driver-side finisher")
   }
 
   /** Optimized plans of every query `run` executes (checkpoints

@@ -303,12 +303,15 @@ class SimilaritySpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sfDir).select($"vec_id", $"embedding")
     val bk = Similarity.cappedLshBuckets(emb, "vec_id", "embedding",
       nPlanes = 2, dim = 64, cap = 50L, subPlanes = 3, maxDepth = 3)
-    val coldCounts = bk.filter(!$"hot").groupBy($"lvl", $"bucket").count()
-      .select("count").as[Long].collect()
-    assert(coldCounts.nonEmpty && coldCounts.forall(_ <= 50L),
-      s"cold bucket above cap: max ${coldCounts.max}")
-    val hotRows = bk.filter($"hot").count()
-    assert(hotRows < 100, s"$hotRows diverse rows wrongly flagged degenerate")
+    val counts = bk.groupBy($"lvl", $"bucket").count()
+      .select("lvl", "count").as[(Int, Long)].collect()
+    // refinement only stops splitting at maxDepth: a bucket above cap at
+    // any shallower level was never refined
+    assert(counts.nonEmpty && counts.forall { case (lvl, n) => n <= 50L || lvl == 3 },
+      s"unrefined bucket above cap: ${counts.filter(_._2 > 50L).toSeq}")
+    // degenerate = still above cap after maxDepth
+    val hotRows = counts.collect { case (_, n) if n > 50L => n }.sum
+    assert(hotRows < 100, s"$hotRows diverse rows wrongly left degenerate")
   }
 
   test("capped LSH recalls planted high-similarity pairs") {

@@ -1,6 +1,10 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.ListenerBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites (single JVM-wide SparkSession — suite
@@ -38,4 +42,25 @@ object SparkSpec {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
   def sfDir: String = SparkSpec.sfDir
+
+  /** The jobs `body` submits from this thread, with their stages. */
+  def jobsOf(body: => Unit): Seq[SparkListenerJobStart] = {
+    val sc = spark.sparkContext
+    val key = "graft.test.jobsOf"
+    val id = java.util.UUID.randomUUID().toString
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(key) == id) seen.add(e)
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(key, id)
+    try body
+    finally {
+      sc.setLocalProperty(key, null)
+      assert(ListenerBridge.flushListenerBus(sc, 60000L), "listener bus did not drain")
+      sc.removeSparkListener(listener)
+    }
+    seen.asScala.toSeq
+  }
 }

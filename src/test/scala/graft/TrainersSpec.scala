@@ -1,9 +1,6 @@
 package graft
 
 import graft.ml._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.graftbridge.ListenerBridge
-import scala.jdk.CollectionConverters._
 
 /** Training semantics (SURVEY.md §5.2 item 4): convergence on a
   * linearly-separable fixture, determinism given a seed, and the
@@ -329,27 +326,6 @@ class TrainersSpec extends SparkSpec {
           s"numWorkers=$nw")
       } finally data.unpersist()
     }
-  }
-
-  /** The jobs `body` submits from this thread, with their stages. */
-  private def jobsOf(body: => Unit): Seq[SparkListenerJobStart] = {
-    val sc = spark.sparkContext
-    val key = "graft.test.jobsOf"
-    val id = java.util.UUID.randomUUID().toString
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty(key) == id) seen.add(e)
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(key, id)
-    try body
-    finally {
-      sc.setLocalProperty(key, null)
-      assert(ListenerBridge.flushListenerBus(sc, 60000L), "listener bus did not drain")
-      sc.removeSparkListener(listener)
-    }
-    seen.asScala.toSeq
   }
 
   test("E epochs with history run E+1 jobs; treeFold under mergeFanIn shuffles nothing") {
