@@ -1040,9 +1040,9 @@ object RelQueries {
     * MERGED entity (singleton names are not survivorship's business).
     *
     * Scale shape: the linkage part is [[joinFuzzy]]'s (vocab agg +
-    * blocked equi-join); clustering is the checkpointed min-label CC
-    * core (graph/ConnectedComponents.scala) over hash-derived 60-bit
-    * node ids — edges are variant pairs, so the iterated set is the
+    * blocked equi-join); clustering is
+    * [[graft.graph.ConnectedComponents.run]] over hash-derived 60-bit
+    * node ids — edges are variant pairs, so the clustered set is the
     * touched vocabulary, not the row stream; election is one keyed agg
     * + one bounded window over cluster members. Nothing here ever
     * rescans `part` after the vocab agg.
@@ -1053,7 +1053,10 @@ object RelQueries {
   def survivorship(spark: SparkSession, dir: String): DataFrame =
     survivorshipOf(Tables.part(spark, dir))
 
-  /** [[survivorship]] over any frame with a `p_name` column. */
+  /** [[survivorship]] over any frame with a `p_name` column. The CC
+    * node universe is the vocabulary frame both edge ends come from, so
+    * it holds every edge end, as [[graft.graph.ConnectedComponents.run]]
+    * requires. */
   def survivorshipOf(parts: DataFrame): DataFrame = {
     val nm = fuzzyVocabOf(parts)
       .withColumn("id", graft.text.TextOps.baseHash60(col("p_name")))

@@ -776,8 +776,9 @@ object TextOps {
     * and a keep flag (keep exactly the min-id survivor per cluster).
     * Edges here are the deterministic full-corpus ngram graph at
     * jaccard > 0.5, so the key is DuckDB-oracle-able (recursive CTE);
-    * the same [[graft.graph.ConnectedComponents.run]] consumes MinHash/
-    * SimHash pair output unchanged. */
+    * the same [[graft.graph.ConnectedComponents.run]] (driver-side
+    * finisher under 10⁴ edges, large-star/small-star rounds over it)
+    * consumes MinHash/SimHash pair output unchanged. */
   def qDedupCluster(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val edges = ngramJaccardPairs(docs, 3, 0.5, None)
@@ -794,9 +795,10 @@ object TextOps {
     * band equi-join, [[nearDupPairs]]) instead of token-linear (the
     * exact shingle self-join the oracled key uses, ~100× more shuffle at
     * scale), and [[graft.graph.ConnectedComponents.run]] consumes the
-    * pair output unchanged. Oracled (md5-derived minhash edges are
-    * engine-reproducible → recursive-CTE CC in DuckDB); planted-cluster
-    * property in TextOpsSpec. */
+    * pair output unchanged: O(log n) large-star/small-star rounds, so a
+    * chained cluster of any diameter converges. Oracled (md5-derived
+    * minhash edges are engine-reproducible → recursive-CTE CC in
+    * DuckDB); planted-cluster property in TextOpsSpec. */
   def qDedupClusterBanded(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val edges = nearDupPairs(docs, 3, 0.6)
@@ -808,23 +810,15 @@ object TextOps {
       .orderBy("doc_id")
   }
 
-  /** [[qDedupClusterBanded]] with the O(log n)-round large-star/
-    * small-star CC core instead of min-label propagation — the variant
-    * you'd pick when cluster diameters are unknown (chained near-dups,
-    * e.g. drifting boilerplate, can make diameter O(corpus)). Same edge
-    * generation, same output contract — and the same oracle as the
-    * banded key (both algorithms reach the identical min-label
-    * fixpoint). */
-  def qDedupClusterStar(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val edges = nearDupPairs(docs, 3, 0.6)
-      .select(col("id_a").as("src"), col("id_b").as("dst"))
-    val nodes = docs.select(col("doc_id").as("id"))
-    graft.graph.ConnectedComponents.runStar(edges, nodes)
-      .select(col("id").as("doc_id"), col("lbl").as("cluster_id"),
-        (col("id") === col("lbl")).as("keep"))
-      .orderBy("doc_id")
-  }
+  /** [[qDedupClusterBanded]] under the registry name of the O(log n)
+    * large-star/small-star CC core — the variant for unknown cluster
+    * diameters (chained near-dups, e.g. drifting boilerplate, can make
+    * diameter O(corpus)). [[graft.graph.ConnectedComponents.run]] is
+    * that one algorithm for every CC key, so this key is the banded key;
+    * it stays registered, with the banded key's oracle, because the
+    * registry keys are the contract. */
+  def qDedupClusterStar(spark: SparkSession, dir: String): DataFrame =
+    qDedupClusterBanded(spark, dir)
 
   // ----------------------------------------------------------- language ID
 

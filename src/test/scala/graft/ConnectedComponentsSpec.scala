@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan, Union}
 import org.apache.spark.sql.graftbridge.CheckpointDirs.withCheckpointDir
 
 import graft.graph.ConnectedComponents
@@ -77,7 +78,7 @@ class ConnectedComponentsSpec extends SparkSpec {
         .map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter(e => e._1 != e._2)
       val expected = unionFindMinLabels(n, edges)
-      val got = ConnectedComponents.runStar(
+      val got = ConnectedComponents.run(
         edges.toDF("src", "dst"),
         (0 until n).map(_.toLong).toDF("id"))
         .as[(Long, Long)].collect().toMap
@@ -91,7 +92,7 @@ class ConnectedComponentsSpec extends SparkSpec {
     // large-star/small-star must do it in O(log n)
     val edges = (0L until 100L).map(i => (i, i + 1))
     val (labels, rounds) = roundsOnly {
-      val (labelsDf, rounds) = ConnectedComponents.runStarRounds(
+      val (labelsDf, rounds) = ConnectedComponents.runRounds(
         edges.toDF("src", "dst"),
         (0L to 100L).toDF("id"))
       (labelsDf.as[(Long, Long)].collect().toMap, rounds)
@@ -102,7 +103,7 @@ class ConnectedComponentsSpec extends SparkSpec {
   }
 
   bothPaths("star variant: empty edges and singletons") {
-    val got = ConnectedComponents.runStar(
+    val got = ConnectedComponents.run(
       Seq.empty[(Long, Long)].toDF("src", "dst"),
       Seq(1L, 2L, 3L).toDF("id"))
       .as[(Long, Long)].collect().toMap
@@ -110,7 +111,7 @@ class ConnectedComponentsSpec extends SparkSpec {
   }
 
   bothPaths("star variant handles negative ids and duplicate/reversed edges") {
-    val got = ConnectedComponents.runStar(
+    val got = ConnectedComponents.run(
       Seq((-5L, 5L), (5L, -5L), (-5L, 5L), (7L, 8L)).toDF("src", "dst"),
       Seq(-5L, 5L, 7L, 8L, 9L).toDF("id"))
       .as[(Long, Long)].collect().toMap
@@ -130,7 +131,7 @@ class ConnectedComponentsSpec extends SparkSpec {
     val nodes = spark.range(0L, n).selectExpr("id")
     val t0 = System.nanoTime()
     val (wrong, total, rounds) = roundsOnly(withCheckpointDir(dir) {
-      val (labelsDf, rounds) = ConnectedComponents.runStarRounds(edges, nodes)
+      val (labelsDf, rounds) = ConnectedComponents.runRounds(edges, nodes)
       (labelsDf.filter($"lbl" =!= 0L).count(), labelsDf.count(), rounds)
     })
     val wallSec = (System.nanoTime() - t0) / 1e9
@@ -169,10 +170,10 @@ class ConnectedComponentsSpec extends SparkSpec {
       (0L until 99L).map(i => (i, i + 2))).toDF("src", "dst")
     val nodes = (0L to 105L).toDF("id")
     val (labels, rounds) = ConnectedComponents.collectRows.withValue(151) {
-      val (df, rounds) = ConnectedComponents.runStarRounds(edges, nodes)
+      val (df, rounds) = ConnectedComponents.runRounds(edges, nodes)
       (df.as[(Long, Long)].collect().toMap, rounds)
     }
-    val allRounds = roundsOnly(ConnectedComponents.runStarRounds(edges, nodes)._2)
+    val allRounds = roundsOnly(ConnectedComponents.runRounds(edges, nodes)._2)
     assert(labels == (0L to 105L).map(i => i -> (if (i <= 100L) 0L else i)).toMap,
       s"wrong labels: ${labels.filter { case (i, l) => l != (if (i <= 100L) 0L else i) }}")
     assert(rounds > 0 && rounds < allRounds,
@@ -180,15 +181,18 @@ class ConnectedComponentsSpec extends SparkSpec {
   }
 
   test("run labels a chain longer than maxIter exactly") {
-    // min-label propagation needs ~diameter rounds: 5 rounds leave most
-    // of a 21-node chain unlabeled, the finisher labels all of it
+    // the finisher labels a 21-node chain whatever maxIter is; the
+    // rounds alone cannot finish it in one round, and say so by name
+    // instead of returning labels that are not the fixpoint
     val edges = (0L until 20L).map(i => (i, i + 1)).toDF("src", "dst")
     val nodes = (0L to 20L).toDF("id")
-    def labels = ConnectedComponents.run(edges, nodes, maxIter = 5)
+    val labels = ConnectedComponents.run(edges, nodes, maxIter = 5)
       .as[(Long, Long)].collect().toMap
     assert(labels == (0L to 20L).map(_ -> 0L).toMap)
-    assert(roundsOnly(labels).count(_._2 != 0L) > 0,
-      "the chain fits in maxIter rounds; it no longer tests the finisher")
+    val e = intercept[IllegalStateException](
+      roundsOnly(ConnectedComponents.run(edges, nodes, maxIter = 1)))
+    assert(e.getMessage.contains("maxIter = 1") && e.getMessage.contains("1 rounds ran"),
+      e.getMessage)
   }
 
   private def jobSites(body: => Unit): Seq[String] =
@@ -202,15 +206,36 @@ class ConnectedComponentsSpec extends SparkSpec {
     val afterCheckpoint = sites.drop(sites.lastIndexWhere(isCheckpoint) + 1)
     assert(sites.count(isCheckpoint) == 1 &&
       afterCheckpoint.map(_.takeWhile(_ != ' ')) == Seq("collect"), s"jobs: $sites")
-    // the listener does see the rounds: active set plus one per round
+    // the listener does see the rounds: one checkpoint per round, and
+    // the first round is never the fixpoint
     val roundSites = roundsOnly(jobSites(cc()))
     assert(roundSites.count(isCheckpoint) > 2, s"rounds path jobs: $roundSites")
   }
 
+  test("run over the finisher's bound goes from the bounded collect straight to the first round") {
+    // 6 edges over a 3-row bound: a row-local edge checkpoint (no doubled
+    // union, no distinct), the collect declines, and the next action is
+    // the first star round's checkpoint — no setup probe and no second
+    // materialization of the input between them
+    val actions = ConnectedComponents.collectRows.withValue(3)(actionsOf {
+      ConnectedComponents.run((0L until 6L).map(i => (i, i + 1)).toDF("src", "dst"),
+        (0L to 6L).toDF("id"))
+    })
+    def has(p: LogicalPlan, node: Class[_]) = p.find(node.isInstance).isDefined
+    val checkpoint = Set("checkpoint", "localCheckpoint")
+    val shown = actions.map { case (f, p) => s"$f:\n$p" }.mkString("\n")
+    assert(actions.size > 3, shown)
+    val Seq((edgeAction, edgePlan), (collectAction, _), (roundAction, roundPlan)) = actions.take(3)
+    assert(checkpoint(edgeAction) && !has(edgePlan, classOf[Union]) &&
+      !has(edgePlan, classOf[Aggregate]), shown)
+    assert(collectAction == "collect", shown)
+    assert(checkpoint(roundAction) && has(roundPlan, classOf[Join]), shown)
+  }
+
   test("run's finisher counts each edge once: takes 5 edges under a 6-row bound, declines at 5") {
-    // the doubled edge set holds 10 rows; the finisher collects one
-    // orientation, so a 6-row bound takes the chain. At a 5-row bound it
-    // declines after its collect and the rounds label the chain instead
+    // the edge checkpoint holds one orientation per edge, 5 rows, so a
+    // 6-row bound takes the chain. At a 5-row bound it declines after
+    // its collect and the rounds label the chain instead
     val edges = (0L until 5L).map(i => (i, i + 1)).toDF("src", "dst")
     val nodes = (0L to 6L).toDF("id")
     val expected = (0L to 6L).map(i => i -> (if (i <= 5L) 0L else i)).toMap
@@ -232,7 +257,10 @@ class ConnectedComponentsSpec extends SparkSpec {
       .filter($"lbl" =!= 0L).count()
     assert(wrong == 0L, s"$wrong nodes of the 9999-edge chain mislabeled")
     audit.advanceTo("cc_declined")
-    ConnectedComponents.run(chain(10000L), spark.range(0L, 10001L).toDF(), maxIter = 1)
+    // one round leaves a connected 10⁴-edge chain at 10⁴ edges: neither
+    // under the bound nor at the fixpoint, so maxIter = 1 fails by name
+    intercept[IllegalStateException](
+      ConnectedComponents.run(chain(10000L), spark.range(0L, 10001L).toDF(), maxIter = 1))
     val snap = audit.snapshot()
     assert(snap.get("cc_taken").contains(9999L) && snap.get("cc_declined").contains(10000L),
       s"largest collects: $snap")

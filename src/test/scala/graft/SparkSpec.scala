@@ -4,7 +4,10 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.graftbridge.ListenerBridge
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites (single JVM-wide SparkSession — suite
@@ -60,6 +63,25 @@ trait SparkSpec extends AnyFunSuite {
       sc.setLocalProperty(key, null)
       assert(ListenerBridge.flushListenerBus(sc, 60000L), "listener bus did not drain")
       sc.removeSparkListener(listener)
+    }
+    seen.asScala.toSeq
+  }
+
+  /** (action, optimized plan) of every Dataset action `body` runs,
+    * checkpoints included, in the order they finished. */
+  def actionsOf(body: => Unit): Seq[(String, LogicalPlan)] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, LogicalPlan)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(f -> qe.optimizedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try body
+    finally {
+      assert(ListenerBridge.flushListenerBus(spark.sparkContext, 60000L),
+        "listener bus did not drain")
+      spark.listenerManager.unregister(listener)
     }
     seen.asScala.toSeq
   }
