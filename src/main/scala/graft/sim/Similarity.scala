@@ -12,8 +12,9 @@ import graft.vec.VectorOps
   *
   * Embeddings in the testdata are L2-normalized (‖v‖²=1, verified in
   * FIXTURES.md), so cosine similarity ≡ dot product — every scorer here
-  * uses the sequential zip_with/aggregate fold from [[VectorOps.dot]],
-  * which is bit-identical to DuckDB's list_aggregate fold.
+  * uses [[VectorOps.dot]], the native [[graft.plans.DotProduct]]
+  * expression: a sequential fold in array order, bit-identical to
+  * DuckDB's list_aggregate fold.
   *
   * Scale story: brute-force top-k broadcasts the (small) query side and
   * scans candidates once — linear, shuffle-free, the right baseline up to
@@ -21,30 +22,51 @@ import graft.vec.VectorOps
   * sub-linear path: random-hyperplane signatures bucket candidates so
   * each query probes only its own bucket (equi-join on the signature
   * instead of a cross join).
+  *
+  * Every ANN rung is candidate pruning followed by one ranking step, and
+  * the devices they share exist once: [[topN]] ranks, [[rankedTopK]]
+  * shapes the top-k output, [[probeCentroids]] probes a broadcast
+  * centroid frame, [[fixedSeedIvf]] builds the fixed-seed quantizer,
+  * [[probedOnly]] prunes a persisted index, and [[centroidMean]] is the
+  * decimal centroid mean.
   */
 object Similarity {
 
-  /** Brute-force cosine top-k: queries × candidates via broadcast
-    * cross-join, per-query window rank. Tie-break on candidate id. */
-  def cosineTopK(queries: DataFrame, candidates: DataFrame, k: Int): DataFrame = {
-    val scored = candidates.crossJoin(broadcast(queries))
-      .select(
-        col("qid"), col("cid"),
-        VectorOps.dot(col("qe"), col("ce")).as("score"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("cid"))
-    scored
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+  private val d9 = org.apache.spark.sql.types.DecimalType(18, 9)
+
+  /** The one ranking device: the first `n` rows per `keys` under
+    * `order`, numbered from 1 in column `rn`. row_number, so tied rows
+    * never share a rank; callers end `order` on a unique id. */
+  private def topN(df: DataFrame, keys: Seq[String], order: Seq[Column], n: Int): DataFrame =
+    df.withColumn("rn", row_number().over(
+        Window.partitionBy(keys.map(col): _*).orderBy(order: _*)))
+      .filter(col("rn") <= n)
+
+  /** The top-k keys' ranking and output: the `k` best-scoring `cid` per
+    * `qid` (score desc, then cid asc), scores rounded to 6 dp, ordered
+    * by (qid, rn). */
+  private def rankedTopK(scored: DataFrame, k: Int): DataFrame =
+    topN(scored, Seq("qid"), Seq(col("score").desc, col("cid")), k)
       .select(col("qid"), col("cid"), round(col("score"), 6).as("score"), col("rn"))
       .orderBy("qid", "rn")
-  }
+
+  /** The serving keys' split of the embeddings table: vec_id < 8 are the
+    * queries (qid, qe), the rest are the candidates (cid, ce). */
+  private[graft] def querySplit(emb: DataFrame): (DataFrame, DataFrame) = (
+    emb.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("qid"), col("embedding").as("qe")),
+    emb.filter(col("vec_id") >= 8)
+      .select(col("vec_id").as("cid"), col("embedding").as("ce")))
+
+  /** Brute-force cosine top-k: queries × candidates via broadcast
+    * cross-join, per-query window rank. Tie-break on candidate id. */
+  def cosineTopK(queries: DataFrame, candidates: DataFrame, k: Int): DataFrame =
+    rankedTopK(candidates.crossJoin(broadcast(queries))
+      .select(col("qid"), col("cid"),
+        VectorOps.dot(col("qe"), col("ce")).as("score")), k)
 
   def qCosineTopK(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val queries = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val cands = emb.filter(col("vec_id") >= 8)
-      .select(col("vec_id").as("cid"), col("embedding").as("ce"))
+    val (queries, cands) = querySplit(Tables.embeddings(spark, dir))
     cosineTopK(queries, cands, 3)
   }
 
@@ -66,20 +88,15 @@ object Similarity {
     val cands = emb.filter(col("vec_id") >= probeBound)
       .select(col("vec_id").as("cid"), col("embedding").as("ce"),
         col("label").as("clabel"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("cid"))
-    val nn = cands.crossJoin(broadcast(probes))
+    val nn = topN(cands.crossJoin(broadcast(probes))
       .select(col("qid"), col("qlabel"), col("cid"), col("clabel"),
-        VectorOps.dot(col("qe"), col("ce")).as("score"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+        VectorOps.dot(col("qe"), col("ce")).as("score")),
+      Seq("qid"), Seq(col("score").desc, col("cid")), k)
     val agree = nn.groupBy(col("qid"), col("qlabel"))
       .agg(sum(when(col("clabel") === col("qlabel"), 1).otherwise(0))
         .cast("int").as("n_agree"))
-    val wv = Window.partitionBy(col("qid")).orderBy(col("votes").desc, col("clabel"))
-    val maj = nn.groupBy(col("qid"), col("clabel"))
-      .agg(count(lit(1)).as("votes"))
-      .withColumn("vr", row_number().over(wv))
-      .filter(col("vr") === 1)
+    val maj = topN(nn.groupBy(col("qid"), col("clabel")).agg(count(lit(1)).as("votes")),
+        Seq("qid"), Seq(col("votes").desc, col("clabel")), 1)
       .select(col("qid"), col("clabel").as("majority_label"))
     agree.join(maj, Seq("qid"))
       .select(col("qid"), col("qlabel").as("label"), col("majority_label"),
@@ -251,9 +268,15 @@ object Similarity {
       s" SELECT id_a, id_b, ROUND(score, 6) AS score FROM sc WHERE score > $threshold ORDER BY id_a, id_b"
   }
 
+  /** One-bit-flip multi-probe: bucket `b` and its `nPlanes` one-bit-flip
+    * neighbours, exploded to one row each. [[annTopK]] and
+    * [[embeddingNearDupPairs]] probe with it; [[multiProbeSql]] is its
+    * DuckDB mirror. */
+  private def multiProbe(b: Column, nPlanes: Int): Column =
+    explode(array(b +: (0 until nPlanes).map(p => b.bitwiseXOR(lit(1 << p))): _*))
+
   /** One-bit-flip multi-probe bucket list as a DuckDB UNNEST literal,
-    * mirroring the explode(array(b0 +: flips)) in [[annTopK]] /
-    * [[embeddingNearDupPairs]]. */
+    * mirroring [[multiProbe]]. */
   def multiProbeSql(b0: String, nPlanes: Int): String =
     (Seq(b0) ++ (0 until nPlanes).map(p => s"xor($b0, ${1 << p})"))
       .mkString("UNNEST([", ", ", "])")
@@ -264,48 +287,63 @@ object Similarity {
     * query). Approximate: recall measured against brute force in
     * SimilaritySpec. Multi-probe (flip one bit) widens recall. */
   def annTopK(queries: DataFrame, candidates: DataFrame, k: Int,
-              nPlanes: Int = 4, dim: Int = 64, multiProbe: Boolean = true): DataFrame = {
+              nPlanes: Int = 4, dim: Int = 64): DataFrame = {
     val planes = hyperplanes(nPlanes, dim)
     val cands = candidates.withColumn("bucket", lshBuckets(col("ce"), planes))
-    val qb = queries.withColumn("bucket", lshBuckets(col("qe"), planes))
-    val probes =
-      if (!multiProbe) qb.select(col("qid"), col("qe"), col("bucket"))
-      else qb.select(col("qid"), col("qe"),
-        explode(array(
-          col("bucket") +: (0 until nPlanes).map(p =>
-            col("bucket").bitwiseXOR(lit(1 << p))): _*)).as("bucket"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("cid"))
-    cands.join(probes, Seq("bucket"))
+    val probes = queries.withColumn("bucket", lshBuckets(col("qe"), planes))
+      .select(col("qid"), col("qe"), multiProbe(col("bucket"), nPlanes).as("bucket"))
+    rankedTopK(cands.join(probes, Seq("bucket"))
       .select(col("qid"), col("cid"), VectorOps.dot(col("qe"), col("ce")).as("score"))
-      .dropDuplicates("qid", "cid")
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("qid"), col("cid"), round(col("score"), 6).as("score"), col("rn"))
-      .orderBy("qid", "rn")
+      .dropDuplicates("qid", "cid"), k)
   }
 
   // ------------------------------------------------------------- IVF
 
-  /** IVF (inverted-file) ANN: a coarse quantizer assigns every candidate
-    * to its nearest centroid once; queries score only the `nProbe`
-    * nearest centroid lists. Centroids here are a deterministic stride
-    * sample of the corpus refined by one Lloyd iteration (computed with
-    * [[graft.vec.VectorAverage]] — distributed, no collect of vectors
-    * beyond the K centroids themselves, which is the IVF contract).
-    *
-    * Scale: candidate assignment is a broadcast of K centroids + one
-    * scan; the probe join is an equi-join on centroid id. K ~ sqrt(N)
-    * keeps lists balanced; skewed lists would AQE-split. */
-  /** Per-row nearest centroid (broadcast K centroids, window keyed on
-    * the unique cid — deterministic under task retries, unlike
-    * monotonically_increasing_id). */
-  private def nearestCentroid(cents: DataFrame, df: DataFrame, vecCol: String): DataFrame = {
-    val wBest = Window.partitionBy(col("cid")).orderBy(col("__s").desc, col("centroid_id"))
-    df.crossJoin(broadcast(cents))
-      .withColumn("__s", VectorOps.dot(col(vecCol), col("centroid")))
-      .withColumn("__r", row_number().over(wBest))
-      .filter(col("__r") === 1)
-      .drop("__s", "__r", "centroid")
+  /** Score every row of `df` against the broadcast centroid frame
+    * (centroid_id, centroid) and keep, per `key`, its `n` nearest
+    * centroids: highest dot product first, ties to the lower
+    * centroid_id. The window is keyed on the row's unique id, so the
+    * pick is deterministic under task retries (unlike
+    * monotonically_increasing_id). Output: `df`'s columns plus
+    * centroid_id. */
+  private def probeCentroids(df: DataFrame, cents: DataFrame, key: String,
+                             vecCol: String, n: Int): DataFrame =
+    topN(df.crossJoin(broadcast(cents))
+        .withColumn("__s", VectorOps.dot(col(vecCol), col("centroid"))),
+      Seq(key), Seq(col("__s").desc, col("centroid_id")), n)
+      .drop("__s", "rn", "centroid")
+
+  /** The inverted lists (centroid_id, cid, ce): every candidate assigned
+    * to its nearest centroid. */
+  private def nearestCentroid(cents: DataFrame, candidates: DataFrame): DataFrame =
+    probeCentroids(candidates, cents, "cid", "ce", 1)
+      .select(col("centroid_id"), col("cid"), col("ce"))
+
+  /** The decimal centroid mean, per (keys, dim): each component of the
+    * array column `vec` is ROUND(x,9) → DECIMAL(18,9) and summed
+    * EXACTLY (order-independent — a float sum in partition order is not
+    * reproducible across runs or engines), mean = ROUND(CAST(sum AS
+    * DOUBLE)/n, 6). Output (keys..., dim, n_points, coord). The
+    * aggregate is map-side combined: the shuffle carries one narrow row
+    * per (keys, dim) per partition. */
+  private def centroidMean(rows: DataFrame, keys: Seq[String], vec: String): DataFrame = {
+    val keyCols = keys.map(col)
+    rows.select(keyCols :+ posexplode(col(vec)).as(Seq("dim", "x")): _*)
+      .groupBy(keyCols :+ col("dim"): _*)
+      .agg(count(lit(1)).as("n_points"),
+        sum(round(col("x").cast("double"), 9).cast(d9)).as("s"))
+      .select(keyCols ++ Seq(col("dim"), col("n_points"),
+        round(col("s").cast("double") / col("n_points"), 6).as("coord")): _*)
+  }
+
+  /** [[centroidMean]] gathered back into one vector per key, in dim
+    * order, as column `out`. */
+  private def centroidVectors(rows: DataFrame, keys: Seq[String], vec: String,
+                              out: String): DataFrame = {
+    val keyCols = keys.map(col)
+    centroidMean(rows, keys, vec).groupBy(keyCols: _*)
+      .agg(array_sort(collect_list(struct(col("dim"), col("coord")))).as("a"))
+      .select(keyCols :+ transform(col("a"), _.getField("coord")).as(out): _*)
   }
 
   /** Knuth-style multiplicative hash over candidate ids — the seed
@@ -327,19 +365,14 @@ object Similarity {
     * deterministic — so seeding needs no window at all; the whole plan
     * is free of empty-partition windows (asserted in SimilaritySpec).
     *
-    * One Lloyd refinement then re-centers cells via the DECIMAL device
+    * One Lloyd refinement then re-centers cells with [[centroidMean]]
     * (r15, the [[qLloydRound]] oracle pattern promoted into the
-    * production build): per-dimension components ROUND(x,9) →
-    * DECIMAL(18,9), summed EXACTLY (order-independent — a float sum in
-    * partition order is not reproducible across runs or engines), mean
-    * = ROUND(CAST(sum AS DOUBLE)/n, 6). The 1e-9/1e-6 quantization is
-    * noise for a coarse quantizer, and in exchange the whole
-    * build→assign→probe pipeline is bit-reproducible on ANY cluster
-    * layout and mirrors in SQL — deterministic distributed training as
-    * a feature, not just an oracle device. The per-(centroid,dim)
-    * aggregate is map-side combined; K·dim rows shuffle. */
+    * production build). The 1e-9/1e-6 quantization is noise for a
+    * coarse quantizer, and in exchange the whole build→assign→probe
+    * pipeline is bit-reproducible on ANY cluster layout and mirrors in
+    * SQL — deterministic distributed training as a feature, not just an
+    * oracle device. K·dim rows shuffle. */
   def buildIvfIndex(candidates: DataFrame, nCentroids: Int = 16): (DataFrame, DataFrame) = {
-    val d9 = org.apache.spark.sql.types.DecimalType(18, 9)
     // reduce BEFORE multiplying (r15 advice): (mod−1)·mul ≈ 2.65e18
     // fits BIGINT, but a raw cid·mul wraps silently in Spark Long
     // arithmetic past cid ≈ 3.4e9 while DuckDB's BIGINT multiply RAISES
@@ -349,57 +382,69 @@ object Similarity {
       .orderBy(((col("cid") % seedHashMod) * seedHashMul) % seedHashMod, col("cid"))
       .limit(nCentroids)
       .select(col("cid").as("centroid_id"), col("ce").as("centroid"))
-    val assigned0 = nearestCentroid(seeds, candidates, "ce")
-    val refined = assigned0
-      .select(col("centroid_id"), posexplode(col("ce")).as(Seq("dim", "x")))
-      .select(col("centroid_id"), col("dim"),
-        round(col("x").cast("double"), 9).cast(d9).as("xd"))
-      .groupBy(col("centroid_id"), col("dim"))
-      .agg(round(sum(col("xd")).cast("double") / count(lit(1)), 6).as("coord"))
-      .groupBy(col("centroid_id"))
-      .agg(array_sort(collect_list(struct(col("dim"), col("coord")))).as("a"))
-      .select(col("centroid_id"),
-        transform(col("a"), s => s.getField("coord")).as("centroid"))
-    val lists = nearestCentroid(refined, candidates, "ce").select("centroid_id", "cid", "ce")
-    (refined, lists)
+    val refined = centroidVectors(nearestCentroid(seeds, candidates),
+      Seq("centroid_id"), "ce", "centroid")
+    (refined, nearestCentroid(refined, candidates))
   }
 
-  /** Probe a (built or loaded) IVF index: each query scores only its
-    * `nProbe` nearest centroids' lists — an equi-join on centroid_id,
-    * never a corpus scan per query. `staticPrune` (used on the persisted
-    * path, where lists are PARTITIONED BY centroid_id on disk) collects
-    * the bounded probed-id set and pushes it as a partition filter so
-    * the probe job reads only the probed directories — the same device
-    * as [[ivfPqProbe]]; off by default because the inline build gains
-    * nothing from an extra driver action. */
+  /** The fixed-seed coarse quantizer: the first `nCentroids` candidate
+    * ids seed it directly — no hash-ordered sample, no Lloyd
+    * re-centering — so assignment is a dot-product fold over stored
+    * vectors, bit-reproducible in SQL. (seeds, lists) in the
+    * [[buildIvfIndex]] shapes. */
+  private def fixedSeedIvf(candidates: DataFrame, nCentroids: Int): (DataFrame, DataFrame) = {
+    val seeds = candidates.orderBy(col("cid")).limit(nCentroids)
+      .select(col("cid").as("centroid_id"), col("ce").as("centroid"))
+    (seeds, nearestCentroid(seeds, candidates))
+  }
+
+  /** Static pruning for a persisted index, whose lists (or codes) are
+    * PARTITIONED BY centroid_id on disk: collect the probed centroid ids
+    * (bounded by |Q|·nProbe ≤ K — the hot-bucket-ids device, a driver
+    * collect of ids only, never data) and push them as an `isin` filter,
+    * which becomes a partition filter — the probe job lists and reads
+    * only the probed `centroid_id=` directories and the rest of the
+    * on-disk corpus is never opened (join-side pruning alone would need
+    * DPP to fire). It costs one driver action, so only the loaded-index
+    * entries [[ivfProbe]] and [[ivfPqProbe]] pay it. */
+  private def probedOnly(lists: DataFrame, probes: DataFrame): DataFrame = {
+    val ids = probes.select(col("centroid_id")).distinct()
+      .collect().map(_.getLong(0)).sorted
+    lists.filter(col("centroid_id").isin(ids: _*))
+  }
+
+  /** IVF serving: each query scores only its `nProbe` nearest
+    * centroids' lists — an equi-join on centroid_id, never a corpus scan
+    * per query. `prune` adds [[probedOnly]] for a persisted index. */
+  private def ivfServe(queries: DataFrame, centroids: DataFrame, lists: DataFrame,
+                       k: Int, nProbe: Int, prune: Boolean): DataFrame = {
+    val probes = probeCentroids(queries, centroids, "qid", "qe", nProbe)
+    val probed = if (prune) probedOnly(lists, probes) else lists
+    rankedTopK(probed.join(probes, Seq("centroid_id"))
+      .select(col("qid"), col("cid"), VectorOps.dot(col("qe"), col("ce")).as("score")), k)
+  }
+
+  /** Probe a persisted IVF index ([[loadIvfIndex]]): [[ivfServe]] with
+    * the probed ids pushed into the lists scan ([[probedOnly]]). */
   def ivfProbe(queries: DataFrame, centroids: DataFrame, lists: DataFrame,
-               k: Int, nProbe: Int = 4, staticPrune: Boolean = false): DataFrame = {
-    val wProbe = Window.partitionBy(col("qid")).orderBy(col("__s").desc, col("centroid_id"))
-    val probes = queries.crossJoin(broadcast(centroids))
-      .withColumn("__s", VectorOps.dot(col("qe"), col("centroid")))
-      .withColumn("__r", row_number().over(wProbe))
-      .filter(col("__r") <= nProbe)
-      .select(col("qid"), col("qe"), col("centroid_id"))
-    val probedLists =
-      if (!staticPrune) lists
-      else {
-        val ids = probes.select(col("centroid_id")).distinct()
-          .collect().map(_.getLong(0)).sorted
-        lists.filter(col("centroid_id").isin(ids: _*))
-      }
-    val wTop = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("cid"))
-    probedLists.join(probes, Seq("centroid_id"))
-      .select(col("qid"), col("cid"), VectorOps.dot(col("qe"), col("ce")).as("score"))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= k)
-      .select(col("qid"), col("cid"), round(col("score"), 6).as("score"), col("rn"))
-      .orderBy("qid", "rn")
-  }
+               k: Int, nProbe: Int = 4): DataFrame =
+    ivfServe(queries, centroids, lists, k, nProbe, prune = true)
 
+  /** IVF (inverted-file) ANN: a coarse quantizer assigns every candidate
+    * to its nearest centroid once; queries score only the `nProbe`
+    * nearest centroid lists. Centroids are the [[buildIvfIndex]]
+    * hash-sampled seeds refined by one Lloyd iteration (the decimal
+    * [[centroidMean]] — distributed, no collect of vectors beyond the K
+    * centroids themselves, which is the IVF contract). The inline build
+    * is not partitioned, so it skips [[ivfProbe]]'s prune collect.
+    *
+    * Scale: candidate assignment is a broadcast of K centroids + one
+    * scan; the probe join is an equi-join on centroid id. K ~ sqrt(N)
+    * keeps lists balanced; skewed lists would AQE-split. */
   def ivfTopK(queries: DataFrame, candidates: DataFrame, k: Int,
               nCentroids: Int = 16, nProbe: Int = 4): DataFrame = {
     val (centroids, lists) = buildIvfIndex(candidates, nCentroids)
-    ivfProbe(queries, centroids, lists, k, nProbe)
+    ivfServe(queries, centroids, lists, k, nProbe, prune = false)
   }
 
   /** Persist the IVF index: build once, probe many — at 100 TB the
@@ -426,11 +471,7 @@ object Similarity {
     * SQL mirror (bucket assignment + probe join reproduced literally in
     * DuckDB); recall-vs-brute-force properties in SimilaritySpec. */
   def qAnnTopK(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val queries = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val cands = emb.filter(col("vec_id") >= 8)
-      .select(col("vec_id").as("cid"), col("embedding").as("ce"))
+    val (queries, cands) = querySplit(Tables.embeddings(spark, dir))
     annTopK(queries, cands, 3)
   }
 
@@ -441,11 +482,7 @@ object Similarity {
     * query/candidate split as q_cosine_topk; recall + no-global-window
     * plan assertion in SimilaritySpec. */
   def qIvfTopK(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val queries = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val cands = emb.filter(col("vec_id") >= 8)
-      .select(col("vec_id").as("cid"), col("embedding").as("ce"))
+    val (queries, cands) = querySplit(Tables.embeddings(spark, dir))
     ivfTopK(queries, cands, 3)
   }
 
@@ -491,8 +528,7 @@ object Similarity {
         "(q_dedup_embedding_lsh_capped) at this duplicate density"
     }
     val a = withBucket.select(col("vec_id").as("id_a"), col("embedding").as("ea"),
-      explode(array(col("b0") +: (0 until nPlanes).map(p =>
-        col("b0").bitwiseXOR(lit(1 << p))): _*)).as("bucket"))
+      multiProbe(col("b0"), nPlanes).as("bucket"))
     val b = withBucket.select(col("vec_id").as("id_b"), col("embedding").as("eb"),
       col("b0").as("bucket"))
     a.join(b, Seq("bucket"))
@@ -636,29 +672,20 @@ object Similarity {
       nPlanes = 4, subPlanes = 3, cap = 64L)
 
   /** IVF probe with SQL-expressible seeding (round-9 verdict ask #7):
-    * the first `nCentroids` candidate ids seed the coarse quantizer
-    * directly — no hash-ordered sample, no Lloyd re-centering — so
-    * assignment, probe selection and final ranking are all dot-product
-    * folds over stored vectors, bit-reproducible in DuckDB via
-    * [[dotSqlExpr]]. The production path ([[qIvfTopK]]) keeps the
-    * hash-seeded + Lloyd-refined build; this fixed-seed form pins the
-    * probe/assignment machinery under the oracle. */
+    * the [[fixedSeedIvf]] quantizer, so assignment, probe selection and
+    * final ranking are all dot-product folds over stored vectors,
+    * bit-reproducible in DuckDB via [[dotSqlExpr]]. The production path
+    * ([[qIvfTopK]]) keeps the hash-seeded + Lloyd-refined build; this
+    * fixed-seed form pins the probe/assignment machinery under the
+    * oracle. */
   def ivfTopKFixedSeeds(queries: DataFrame, candidates: DataFrame, k: Int,
                         nCentroids: Int = 16, nProbe: Int = 4): DataFrame = {
-    val seeds = candidates
-      .orderBy(col("cid")).limit(nCentroids)
-      .select(col("cid").as("centroid_id"), col("ce").as("centroid"))
-    val lists = nearestCentroid(seeds, candidates, "ce")
-      .select(col("centroid_id"), col("cid"), col("ce"))
-    ivfProbe(queries, seeds, lists, k, nProbe)
+    val (seeds, lists) = fixedSeedIvf(candidates, nCentroids)
+    ivfServe(queries, seeds, lists, k, nProbe, prune = false)
   }
 
   def qIvfTopKFixed(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val queries = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val cands = emb.filter(col("vec_id") >= 8)
-      .select(col("vec_id").as("cid"), col("embedding").as("ce"))
+    val (queries, cands) = querySplit(Tables.embeddings(spark, dir))
     ivfTopKFixedSeeds(queries, cands, 3)
   }
 
@@ -825,23 +852,27 @@ object Similarity {
   private def pqSubvec(e: Column, m: Int): Column =
     transform(slice(e, m * pqD + 1, pqD), _.cast("double"))
 
-  /** Deterministic PQ codebook: the first [[pqK]] candidates' subvectors
-    * (relational rather than k-means-trained — SQL-reproducible; the
-    * Lloyd-trained variant [[pqCodebookTrained]] joins the same plans).
-    * Schema (m, k, cv: array<double>). */
-  private def pqCodebook(emb: DataFrame): DataFrame =
-    emb.filter(col("vec_id") >= 8 && col("vec_id") < 8 + pqK)
+  /** Deterministic PQ codebook: the subvectors of the first [[pqK]]
+    * candidates (cid 8 .. 8+pqK-1) of a (cid, ce) table (relational
+    * rather than k-means-trained — SQL-reproducible; the Lloyd-trained
+    * variant [[pqCodebookTrained]] joins the same plans). Schema
+    * (m, k, cv: array<double>). */
+  private def pqCodebook(cands: DataFrame): DataFrame =
+    cands.filter(col("cid") >= 8 && col("cid") < 8 + pqK)
       .select(explode(array((0 until pqM).map(m =>
-        struct(lit(m).as("m"), (col("vec_id") - 8).cast("int").as("k"),
-          pqSubvec(col("embedding"), m).as("cv"))): _*)).as("e"))
+        struct(lit(m).as("m"), (col("cid") - 8).cast("int").as("k"),
+          pqSubvec(col("ce"), m).as("cv"))): _*)).as("e"))
       .select(col("e.m").as("m"), col("e.k").as("k"), col("e.cv").as("cv"))
 
-  /** PQ-encode candidates against a codebook: each (cid, subspace m) maps
-    * to its nearest codeword k (squared-L2 argmin, ties to min k via a
-    * struct-min agg — no corpus window). `carry` columns (e.g. the IVF
-    * centroid_id) ride along through the explode and the keyed agg.
-    * Corpus-linear: one explode (×[[pqM]]) + a broadcast-codebook join +
-    * a (cid, m)-keyed aggregate. */
+  /** Squared L2 distance of two vector columns: the sequential (x−y)²
+    * fold in array order, elements widened to double — the PQ encode and
+    * silhouette device, mirrored by the oracle's list fold. */
+  private def sqL2(a: Column, b: Column): Column =
+    aggregate(
+      zip_with(a, b, (x, y) =>
+        (x.cast("double") - y.cast("double")) * (x.cast("double") - y.cast("double"))),
+      lit(0.0), (acc, v) => acc + v)
+
   /** (carry..., cid, m, sv): the per-subspace exploded form of a
     * candidate table — the one corpus-linear explode every PQ pass
     * shares. Callers that encode repeatedly (Lloyd training) checkpoint
@@ -861,13 +892,18 @@ object Similarity {
     val carryCols = carry.map(col)
     sub.join(broadcast(codebook), Seq("m"))
       .select(carryCols :+ col("cid") :+ col("m") :+ col("k") :+
-        aggregate(zip_with(col("sv"), col("cv"), (x, y) => (x - y) * (x - y)),
-          lit(0.0), (a, x) => a + x).as("dist"): _*)
+        sqL2(col("sv"), col("cv")).as("dist"): _*)
       .groupBy(carryCols :+ col("cid") :+ col("m"): _*)
       .agg(min(struct(col("dist"), col("k"))).as("best"))
       .select(carryCols :+ col("cid") :+ col("m") :+ col("best.k").as("k"): _*)
   }
 
+  /** PQ-encode candidates against a codebook: each (cid, subspace m) maps
+    * to its nearest codeword k (squared-L2 argmin, ties to min k via a
+    * struct-min agg — no corpus window). `carry` columns (e.g. the IVF
+    * centroid_id) ride along through the explode and the keyed agg.
+    * Corpus-linear: one explode (×[[pqM]]) + a broadcast-codebook join +
+    * a (cid, m)-keyed aggregate. */
   private def pqEncode(cands: DataFrame, codebook: DataFrame,
                        carry: Seq[String] = Nil): DataFrame =
     pqEncodeSub(pqSubvecs(cands, carry), codebook, carry)
@@ -883,8 +919,7 @@ object Similarity {
       .select(col("qid"), col("e.m").as("m"), col("e.qv").as("qv"))
       .join(broadcast(codebook), Seq("m"))
       .select(col("qid"), col("m"), col("k"),
-        round(aggregate(zip_with(col("qv"), col("cv"), (x, y) => x * y),
-          lit(0.0), (a, x) => a + x), 6)
+        round(VectorOps.dot(col("qv"), col("cv")), 6)
           .cast(org.apache.spark.sql.types.DecimalType(18, 6)).as("pdot"))
 
   /** ADC-score encoded candidates against per-query LUT rows and rank:
@@ -892,17 +927,10 @@ object Similarity {
     * back. `codes` must carry (cid, m, k) and — when pre-pruned — a qid
     * column restricting which queries score which candidates. */
   private def pqScoreTopK(codes: DataFrame, lut: DataFrame, k: Int,
-                          joinKeys: Seq[String]): DataFrame = {
-    val scored = codes.join(broadcast(lut), joinKeys)
+                          joinKeys: Seq[String]): DataFrame =
+    rankedTopK(codes.join(broadcast(lut), joinKeys)
       .groupBy(col("qid"), col("cid"))
-      .agg(sum(col("pdot")).cast("double").as("score"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("cid"))
-    scored
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("qid"), col("cid"), round(col("score"), 6).as("score"), col("rn"))
-      .orderBy("qid", "rn")
-  }
+      .agg(sum(col("pdot")).cast("double").as("score")), k)
 
   /** PQ-compressed ANN with asymmetric-distance scoring (r11) — the
     * third rung of the compression ladder after float
@@ -928,79 +956,78 @@ object Similarity {
     * broadcast join + (qid,cid)-keyed sum. No corpus-sized window, no
     * cross join. */
   def qPqTopK(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val queries = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val cands = emb.filter(col("vec_id") >= 8)
-      .select(col("vec_id").as("cid"), col("embedding").as("ce"))
-    val codebook = pqCodebook(emb)
+    val (queries, cands) = querySplit(Tables.embeddings(spark, dir))
+    val codebook = pqCodebook(cands)
     val codes = pqEncode(cands, codebook)
     val lut = pqLut(queries, codebook)
     // un-pruned: every candidate scores against every query's LUT rows
     pqScoreTopK(codes, lut, 3, Seq("m", "k"))
   }
 
+  /** The IVF side of the composed key, exposed for the spec's pruning
+    * proof: (inverted lists with centroid assignment, per-query probe
+    * set), from the same [[fixedSeedIvf]] and [[probeCentroids]] devices
+    * [[ivfPqTopK]] serves with. */
+  private[graft] def ivfPqParts(queries: DataFrame, candidates: DataFrame,
+                                nCentroids: Int, nProbe: Int): (DataFrame, DataFrame) = {
+    val (seeds, lists) = fixedSeedIvf(candidates, nCentroids)
+    (lists, probeCentroids(queries, seeds, "qid", "qe", nProbe)
+      .select(col("qid"), col("centroid_id")))
+  }
+
+  /** The IVF+PQ index (centroids, codebook, codes): the [[fixedSeedIvf]]
+    * lists PQ-encoded IN PLACE, the centroid id carried on the code
+    * rows. */
+  private def ivfPqIndex(candidates: DataFrame,
+                         nCentroids: Int): (DataFrame, DataFrame, DataFrame) = {
+    val (seeds, lists) = fixedSeedIvf(candidates, nCentroids)
+    val codebook = pqCodebook(candidates)
+    (seeds, codebook, pqEncode(lists, codebook, carry = Seq("centroid_id")))
+  }
+
+  /** IVF+PQ serving: each query picks its `nProbe` nearest centroids,
+    * the probe frame (|Q|·nProbe rows) broadcasts into an equi-join on
+    * centroid_id against the code rows, and ADC scoring joins the
+    * per-query LUT on (qid, m, k) — pruned first, so LUT rows only meet
+    * candidates their own query probed. `prune` adds [[probedOnly]] for
+    * a persisted index. */
+  private def ivfPqServe(queries: DataFrame, centroids: DataFrame, codebook: DataFrame,
+                         codes: DataFrame, k: Int, nProbe: Int,
+                         prune: Boolean): DataFrame = {
+    val probes = probeCentroids(queries, centroids, "qid", "qe", nProbe)
+      .select(col("qid"), col("centroid_id"))
+    val probed = if (prune) probedOnly(codes, probes) else codes
+    val pruned = probed.join(broadcast(probes), Seq("centroid_id"))
+      .select(col("qid"), col("cid"), col("m"), col("k"))
+    pqScoreTopK(pruned, pqLut(queries, codebook), k, Seq("qid", "m", "k"))
+  }
+
   /** The composed ANN SERVING key (r12, verdict ask #1): IVF coarse
     * pruning feeding PQ asymmetric-distance rescoring — the production
     * 100 TB serving pipeline the ladder keys individually gesture at.
     *
-    * Index-build side (once per corpus): fixed-seed coarse quantizer
-    * (the [[ivfTopKFixedSeeds]] shape — SQL-expressible, which is what
-    * keeps the whole key under the DuckDB oracle), every candidate
-    * assigned to its nearest centroid, then PQ-encoded IN PLACE with the
-    * centroid id carried on the code rows — on disk this is the lists
-    * layout of [[saveIvfIndex]] with 8 four-bit codes per row instead of
-    * 64 floats (a 64× scan-IO cut on the probe path).
+    * Index-build side (once per corpus, [[ivfPqIndex]]): fixed-seed
+    * coarse quantizer (the [[ivfTopKFixedSeeds]] shape — SQL-expressible,
+    * which is what keeps the whole key under the DuckDB oracle), every
+    * candidate assigned to its nearest centroid, then PQ-encoded IN PLACE
+    * with the centroid id carried on the code rows — on disk this is the
+    * lists layout of [[saveIvfIndex]] with 8 four-bit codes per row
+    * instead of 64 floats (a 64× scan-IO cut on the probe path).
     *
-    * Serving side (per query batch): each query picks its `nProbe`
-    * nearest centroids (broadcast of K centroid rows), and the scored
-    * candidate set comes ONLY from the probed lists — the probe frame
-    * (|Q|·nProbe rows) broadcasts into an equi-join on centroid_id
-    * against the code rows, so no stage after the probe join touches the
-    * full corpus (asserted structurally and by candidate-set equality in
-    * SimilaritySpec). ADC scoring then joins the per-query LUT on
-    * (qid, m, k) — pruned first, so LUT rows only meet candidates their
-    * own query probed. Determinism devices inherited from [[qPqTopK]]
-    * (DECIMAL ADC sums) and [[ivfTopKFixedSeeds]] (min-id tie-breaks). */
-  /** The IVF side of the composed key, exposed for the spec's pruning
-    * proof: (inverted lists with centroid assignment, per-query probe
-    * set). Fixed seeds = first `nCentroids` candidate ids. */
-  private[graft] def ivfPqParts(queries: DataFrame, candidates: DataFrame,
-                                nCentroids: Int, nProbe: Int): (DataFrame, DataFrame) = {
-    val seeds = candidates
-      .orderBy(col("cid")).limit(nCentroids)
-      .select(col("cid").as("centroid_id"), col("ce").as("centroid"))
-    val lists = nearestCentroid(seeds, candidates, "ce")
-      .select(col("centroid_id"), col("cid"), col("ce"))
-    val wProbe = Window.partitionBy(col("qid")).orderBy(col("__s").desc, col("centroid_id"))
-    val probes = queries.crossJoin(broadcast(seeds))
-      .withColumn("__s", VectorOps.dot(col("qe"), col("centroid")))
-      .withColumn("__r", row_number().over(wProbe))
-      .filter(col("__r") <= nProbe)
-      .select(col("qid"), col("centroid_id"))
-    (lists, probes)
-  }
-
+    * Serving side (per query batch, [[ivfPqServe]]): the scored candidate
+    * set comes ONLY from the probed lists, so no stage after the probe
+    * join touches the full corpus (asserted structurally and by
+    * candidate-set equality in SimilaritySpec). Determinism devices
+    * inherited from [[qPqTopK]] (DECIMAL ADC sums) and
+    * [[ivfTopKFixedSeeds]] (min-id tie-breaks). */
   def ivfPqTopK(queries: DataFrame, candidates: DataFrame, k: Int,
                 nCentroids: Int = 16, nProbe: Int = 4): DataFrame = {
-    val (lists, probes) = ivfPqParts(queries, candidates, nCentroids, nProbe)
-    val codebook = pqCodebook(
-      candidates.select(col("cid").as("vec_id"), col("ce").as("embedding")))
-    val codes = pqEncode(lists, codebook, carry = Seq("centroid_id"))
-    // the pruning join: code rows survive only when their centroid is
-    // probed by some query — |Q|·nProbe rows broadcast, equi-keyed
-    val pruned = codes.join(broadcast(probes), Seq("centroid_id"))
-      .select(col("qid"), col("cid"), col("m"), col("k"))
-    val lut = pqLut(queries, codebook)
-    pqScoreTopK(pruned, lut, k, Seq("qid", "m", "k"))
+    val (centroids, codebook, codes) = ivfPqIndex(candidates, nCentroids)
+    ivfPqServe(queries, centroids, codebook, codes, k, nProbe, prune = false)
   }
 
   def qIvfPqTopK(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val queries = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val cands = emb.filter(col("vec_id") >= 8)
-      .select(col("vec_id").as("cid"), col("embedding").as("ce"))
+    val (queries, cands) = querySplit(Tables.embeddings(spark, dir))
     ivfPqTopK(queries, cands, 3)
   }
 
@@ -1013,15 +1040,8 @@ object Similarity {
     * once at ingest; every query batch after pays only the probe. */
   def saveIvfPqIndex(candidates: DataFrame, dir: String,
                      nCentroids: Int = 16): Unit = {
-    val seeds = candidates
-      .orderBy(col("cid")).limit(nCentroids)
-      .select(col("cid").as("centroid_id"), col("ce").as("centroid"))
-    val lists = nearestCentroid(seeds, candidates, "ce")
-      .select(col("centroid_id"), col("cid"), col("ce"))
-    val codebook = pqCodebook(
-      candidates.select(col("cid").as("vec_id"), col("ce").as("embedding")))
-    val codes = pqEncode(lists, codebook, carry = Seq("centroid_id"))
-    seeds.write.mode("overwrite").parquet(s"$dir/centroids")
+    val (centroids, codebook, codes) = ivfPqIndex(candidates, nCentroids)
+    centroids.write.mode("overwrite").parquet(s"$dir/centroids")
     codebook.write.mode("overwrite").parquet(s"$dir/codebook")
     codes.write.mode("overwrite").partitionBy("centroid_id").parquet(s"$dir/codes")
   }
@@ -1035,39 +1055,20 @@ object Similarity {
     (centroids, codebook, codes)
   }
 
-  /** Probe a persisted IVF+PQ index: identical serving plan to the
-    * inline [[ivfPqTopK]] — probe selection over broadcast centroids,
-    * probes broadcast into the code scan, ADC scoring over the per-query
-    * LUT — plus the reason the index is partitioned at all: the probed
-    * centroid ids (bounded by |Q|·nProbe ≤ K — the hot-bucket-ids
-    * device, a driver collect of ids only, never data) are pushed as a
-    * STATIC partition filter on the code scan, so the probe job lists
-    * and reads only the probed `centroid_id=` directories and the rest
-    * of the on-disk corpus is never opened (PartitionFilters asserted in
-    * SimilaritySpec — join-side pruning alone would need DPP to fire). */
+  /** Probe a persisted IVF+PQ index: the serving plan of the inline
+    * [[ivfPqTopK]] plus the reason the index is partitioned at all — the
+    * probed centroid ids are pushed as a STATIC partition filter on the
+    * code scan ([[probedOnly]]; PartitionFilters asserted in
+    * SimilaritySpec). */
   def ivfPqProbe(queries: DataFrame, centroids: DataFrame, codebook: DataFrame,
-                 codes: DataFrame, k: Int, nProbe: Int = 4): DataFrame = {
-    val wProbe = Window.partitionBy(col("qid")).orderBy(col("__s").desc, col("centroid_id"))
-    val probes = queries.crossJoin(broadcast(centroids))
-      .withColumn("__s", VectorOps.dot(col("qe"), col("centroid")))
-      .withColumn("__r", row_number().over(wProbe))
-      .filter(col("__r") <= nProbe)
-      .select(col("qid"), col("centroid_id"))
-    val probedIds = probes.select(col("centroid_id")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    val pruned = codes
-      .filter(col("centroid_id").isin(probedIds: _*))
-      .join(broadcast(probes), Seq("centroid_id"))
-      .select(col("qid"), col("cid"), col("m"), col("k"))
-    val lut = pqLut(queries, codebook)
-    pqScoreTopK(pruned, lut, k, Seq("qid", "m", "k"))
-  }
+                 codes: DataFrame, k: Int, nProbe: Int = 4): DataFrame =
+    ivfPqServe(queries, centroids, codebook, codes, k, nProbe, prune = true)
 
   /** Lloyd-trained PQ codebook (r12, verdict ask #5): per-subspace
     * k-means — seeds are the deterministic [[pqCodebook]] codewords,
     * refined by `iters` Lloyd rounds (assign every candidate subvector to
-    * its nearest codeword, re-center each codeword as the distributed
-    * [[graft.vec.VectorAverage]] mean — the exact machinery
+    * its nearest codeword, re-center each codeword as the decimal
+    * [[centroidMean]] of its subvectors — the exact machinery
     * [[buildIvfIndex]] uses one level down). Emptied codewords keep
     * their seed (left join + coalesce), so k never collapses.
     *
@@ -1076,8 +1077,7 @@ object Similarity {
     * subvectors — no window over the corpus, no collect. */
   def pqCodebookTrained(cands: DataFrame, iters: Int = 2,
                         trainFraction: Double = 1.0): DataFrame = {
-    val seeds = pqCodebook(
-      cands.select(col("cid").as("vec_id"), col("ce").as("embedding")))
+    val seeds = pqCodebook(cands)
     // trainFraction is the 100 TB knob: production PQ fits the codebook
     // on a bounded deterministic content-hash SAMPLE (training cost
     // decouples from corpus size — train on ~10⁵ vectors, encode
@@ -1092,25 +1092,15 @@ object Similarity {
       if (trainFraction >= 1.0) cands
       else cands.filter(graft.text.Sampling.inSample(col("cid"), trainFraction))
     val sub = Checkpointer(pqSubvecs(train))
-    // re-centering uses the DECIMAL device (r15, the qPqLloydRound
-    // oracle pattern promoted into the production trainer): components
-    // ROUND(x,9) → DECIMAL(18,9), summed exactly (addition-order-proof
-    // across cluster layouts AND engines), mean = ROUND(sum/n, 6). The
-    // quantization is noise against codeword distances; in exchange the
-    // trained codebook — and therefore the whole trained-PQ serving key
-    // — is bit-reproducible and DuckDB-oracled.
-    val d9 = org.apache.spark.sql.types.DecimalType(18, 9)
+    // re-centering uses the decimal [[centroidMean]] (r15, the
+    // qPqLloydRound oracle pattern promoted into the production
+    // trainer): exact sums, addition-order-proof across cluster layouts
+    // AND engines. The quantization is noise against codeword distances;
+    // in exchange the trained codebook — and therefore the whole
+    // trained-PQ serving key — is bit-reproducible and DuckDB-oracled.
     (1 to iters).foldLeft(seeds) { case (book, _) =>
-      val assigned = pqEncodeSub(sub, book)
-      val means = assigned.join(sub, Seq("cid", "m"))
-        .select(col("m"), col("k"), posexplode(col("sv")).as(Seq("dim", "x")))
-        .select(col("m"), col("k"), col("dim"), round(col("x"), 9).cast(d9).as("xd"))
-        .groupBy(col("m"), col("k"), col("dim"))
-        .agg(round(sum(col("xd")).cast("double") / count(lit(1)), 6).as("coord"))
-        .groupBy(col("m"), col("k"))
-        .agg(array_sort(collect_list(struct(col("dim"), col("coord")))).as("a"))
-        .select(col("m"), col("k"),
-          transform(col("a"), s => s.getField("coord")).as("cv_new"))
+      val means = centroidVectors(pqEncodeSub(sub, book).join(sub, Seq("cid", "m")),
+        Seq("m", "k"), "sv", "cv_new")
       // LAZY checkpoint of each round's book (M·K = 128 tiny rows):
       // round N's plan references `book` TWICE (the encode's broadcast
       // AND the empty-codeword left join), so the unrolled lazy fold
@@ -1135,11 +1125,7 @@ object Similarity {
     * SimilaritySpec pins recall ≥ the deterministic-codebook key on the
     * fixture corpus. */
   def qPqTopKTrained(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val queries = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val cands = emb.filter(col("vec_id") >= 8)
-      .select(col("vec_id").as("cid"), col("embedding").as("ce"))
+    val (queries, cands) = querySplit(Tables.embeddings(spark, dir))
     // train once, reuse for encode + LUT: the codebook is M·K = 128 tiny
     // rows consumed by two broadcasts — the checkpoint cuts the 2×
     // re-execution of the iterative training subtree, the same device as
@@ -1159,24 +1145,17 @@ object Similarity {
     * the spec pins top-1 agreement with the float path. */
   def qAnnTopKInt8(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val queries = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+    val (queries, _) = querySplit(emb)
     val cands = quantized(emb.filter(col("vec_id") >= 8))
       .select(col("vec_id").as("cid"), col("scale"), col("q"))
-    val scored = cands.crossJoin(broadcast(queries))
+    rankedTopK(cands.crossJoin(broadcast(queries))
       .select(col("qid"), col("cid"),
         // int→double cast is exact, so the fused codegen fold applies;
         // dividing by scale AFTER the fold keeps the sum over exact
         // small integers × query doubles (sequential, oracle-mirrored)
         when(col("scale") > 0,
           VectorOps.dot(col("qe"), col("q").cast("array<double>")) / col("scale"))
-          .otherwise(lit(0.0)).as("score"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("cid"))
-    scored
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-      .select(col("qid"), col("cid"), round(col("score"), 6).as("score"), col("rn"))
-      .orderBy("qid", "rn")
+          .otherwise(lit(0.0)).as("score")), 3)
   }
 
   // -------------------------------------- sign random projection (JL)
@@ -1261,16 +1240,10 @@ object Similarity {
     val pts = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val ctr = pts.orderBy(col("vec_id")).limit(silhouetteK)
       .select(col("vec_id").as("centroid_id"), col("embedding").as("centroid"))
-    val d = aggregate(
-      zip_with(col("embedding"), col("centroid"),
-        (x, y) => (x.cast("double") - y.cast("double")) *
-          (x.cast("double") - y.cast("double"))),
-      lit(0.0), (acc, v) => acc + v)
-    val w = Window.partitionBy(col("vec_id")).orderBy(col("d"), col("centroid_id"))
-    val ranked = pts.crossJoin(broadcast(ctr))
-      .select(col("vec_id"), col("centroid_id"), d.as("d"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 2)
+    val ranked = topN(pts.crossJoin(broadcast(ctr))
+        .select(col("vec_id"), col("centroid_id"),
+          sqL2(col("embedding"), col("centroid")).as("d")),
+      Seq("vec_id"), Seq(col("d"), col("centroid_id")), 2)
     val ab = ranked.groupBy(col("vec_id")).agg(
       max(when(col("rn") === 1, col("centroid_id"))).as("cluster"),
       max(when(col("rn") === 1, col("d"))).as("a"),
@@ -1278,7 +1251,7 @@ object Similarity {
     val s = when(greatest(col("a"), col("b")) === 0.0, lit(0.0))
       .otherwise((col("b") - col("a")) / greatest(col("a"), col("b")))
     ab.select(col("cluster").as("centroid_id"),
-        round(s, 9).cast(org.apache.spark.sql.types.DecimalType(18, 9)).as("s"))
+        round(s, 9).cast(d9).as("s"))
       .groupBy(col("centroid_id"))
       .agg(count(lit(1)).as("n_points"),
         round(sum(col("s")).cast("double") / count(lit(1)).cast("double"), 6)
@@ -1286,16 +1259,28 @@ object Similarity {
       .orderBy("centroid_id")
   }
 
+  /** The Lloyd round keys' output, from a per-(keys, dim) frame with
+    * the new `coord`, its `n_points` and the old coord `o`: adds the
+    * squared centroid shift summed over the key's dims (each term
+    * ROUND(,9) → DECIMAL(18,9), so the sum is order-proof), ordered by
+    * (keys, dim). */
+  private def withMovement(nc: DataFrame, keys: Seq[String]): DataFrame = {
+    val out = (keys ++ Seq("dim", "n_points", "coord")).map(col)
+    nc.select(out :+ round((col("coord") - col("o")) * (col("coord") - col("o")), 9)
+        .cast(d9).as("mv"): _*)
+      .select(out :+ round(sum(col("mv")).over(Window.partitionBy(keys.map(col): _*))
+        .cast("double"), 6).as("movement"): _*)
+      .orderBy((keys :+ "dim").map(col): _*)
+  }
+
   /** q_lloyd_round — ONE Lloyd k-means iteration under the oracle:
-    * assignment (the [[ivfTopKFixedSeeds]] max-dot device over the
+    * assignment (the [[fixedSeedIvf]] max-dot device over the
     * first-[[silhouetteK]] seeds) followed by the centroid UPDATE —
     * per-dimension means of the assigned vectors — plus the squared
     * movement per centroid (the convergence number a k-means loop
-    * watches). This puts the TRAINING step the rows-only keys declare
+    * watches). This puts the TRAINING step the production keys run
     * (`q_ivf_topk`'s Lloyd refinement, `q_pq_topk_trained`'s codebook)
-    * under the DuckDB gate: the production loop is THIS plan iterated,
-    * with [[graft.vec.VectorAverage]] replacing the decimal device
-    * once bit-parity with an external oracle is no longer the goal.
+    * under the DuckDB gate: both iterate THIS plan's [[centroidMean]].
     *
     * Scale shape: assignment = points × K-row broadcast (the IVF
     * contract); the update is ONE map-side-combined (centroid, dim)
@@ -1303,38 +1288,16 @@ object Similarity {
     * carries ≤ K·64 narrow rows; movement is a window over that tiny
     * frame. Determinism: per-dim terms ROUND(,9) → DECIMAL(18,9) so
     * the mean's numerator is addition-order-proof (float sums in
-    * arbitrary partition order are NOT — the reason VectorAverage
-    * itself can't be oracled); all divisions and the movement chain
-    * run once per (centroid, dim) in fixed order. */
+    * arbitrary partition order are NOT); all divisions and the movement
+    * chain run once per (centroid, dim) in fixed order. */
   def qLloydRound(spark: SparkSession, dir: String): DataFrame = {
-    val d9 = org.apache.spark.sql.types.DecimalType(18, 9)
     val pts = Tables.embeddings(spark, dir)
       .select(col("vec_id").as("cid"), col("embedding").as("ce"))
-    val seeds = pts.orderBy(col("cid")).limit(silhouetteK)
-      .select(col("cid").as("centroid_id"), col("ce").as("centroid"))
-    val asg = nearestCentroid(seeds, pts, "ce")
-    def dims(vec: Column) = explode(zip_with(
-      sequence(lit(0), lit(63)), vec,
-      (i, x) => struct(i.cast("int").as("dim"), x.as("v"))))
-    val terms = asg.select(col("centroid_id"), dims(col("ce")).as("p"))
-      .select(col("centroid_id"), col("p.dim").as("dim"),
-        round(col("p.v").cast("double"), 9).cast(d9).as("t"))
-    val sums = terms.groupBy(col("centroid_id"), col("dim"))
-      .agg(sum(col("t")).as("s"), count(lit(1)).as("n"))
-    val nc = sums.select(col("centroid_id"), col("dim"),
-      col("n").as("n_points"),
-      round(col("s").cast("double") / col("n").cast("double"), 6).as("coord"))
-    val old = seeds.select(col("centroid_id"), dims(col("centroid")).as("p"))
-      .select(col("centroid_id"), col("p.dim").as("dim"),
-        col("p.v").cast("double").as("o"))
-    val mt = nc.join(old, Seq("centroid_id", "dim"))
-      .select(col("centroid_id"), col("dim"), col("n_points"), col("coord"),
-        round((col("coord") - col("o")) * (col("coord") - col("o")), 9)
-          .cast(d9).as("m"))
-    val wc = Window.partitionBy(col("centroid_id"))
-    mt.select(col("centroid_id"), col("dim"), col("n_points"), col("coord"),
-        round(sum(col("m")).over(wc).cast("double"), 6).as("movement"))
-      .orderBy("centroid_id", "dim")
+    val (seeds, asg) = fixedSeedIvf(pts, silhouetteK)
+    val old = seeds.select(col("centroid_id"), posexplode(col("centroid")).as(Seq("dim", "o")))
+      .select(col("centroid_id"), col("dim"), col("o").cast("double").as("o"))
+    withMovement(centroidMean(asg, Seq("centroid_id"), "ce")
+      .join(old, Seq("centroid_id", "dim")), Seq("centroid_id"))
   }
 
   /** q_pq_lloyd_round — ONE Lloyd round of the PQ CODEBOOK training,
@@ -1353,39 +1316,19 @@ object Similarity {
     * codebook join + a (cid, m)-keyed argmin, then ONE map-side-combined
     * (m, k, dim) aggregate whose shuffle carries ≤ M·K·D narrow rows;
     * the movement window runs over that tiny frame. Determinism: the
-    * [[qLloydRound]] ROUND(,9) → DECIMAL device for the mean numerator. */
+    * [[centroidMean]] ROUND(,9) → DECIMAL device for the mean numerator. */
   def qPqLloydRound(spark: SparkSession, dir: String): DataFrame = {
-    val d9 = org.apache.spark.sql.types.DecimalType(18, 9)
-    val emb = Tables.embeddings(spark, dir)
-    val cands = emb.filter(col("vec_id") >= 8)
-      .select(col("vec_id").as("cid"), col("embedding").as("ce"))
-    val seeds = pqCodebook(emb)
+    val (_, cands) = querySplit(Tables.embeddings(spark, dir))
+    val seeds = pqCodebook(cands)
     val sub = pqSubvecs(cands)
-    val asg = pqEncodeSub(sub, seeds)
-    def dims(vec: Column) = explode(zip_with(
-      sequence(lit(0), lit(pqD - 1)), vec,
-      (i, x) => struct(i.cast("int").as("dim"), x.as("v"))))
-    val terms = asg.join(sub, Seq("cid", "m"))
-      .select(col("m"), col("k"), dims(col("sv")).as("p"))
-      .select(col("m"), col("k"), col("p.dim").as("dim"),
-        round(col("p.v"), 9).cast(d9).as("t"))
-    val sums = terms.groupBy(col("m"), col("k"), col("dim"))
-      .agg(sum(col("t")).as("s"), count(lit(1)).as("n"))
-    val old = seeds.select(col("m"), col("k"), dims(col("cv")).as("p"))
-      .select(col("m"), col("k"), col("p.dim").as("dim"), col("p.v").as("o"))
-    val nc = old.join(sums, Seq("m", "k", "dim"), "left")
+    val means = centroidMean(pqEncodeSub(sub, seeds).join(sub, Seq("cid", "m")),
+      Seq("m", "k"), "sv")
+    val old = seeds.select(col("m"), col("k"), posexplode(col("cv")).as(Seq("dim", "o")))
+    withMovement(old.join(means, Seq("m", "k", "dim"), "left")
       .select(col("m"), col("k"), col("dim"),
-        coalesce(col("n"), lit(0L)).as("n_points"),
-        coalesce(round(col("s").cast("double") / col("n").cast("double"), 6),
-          round(col("o"), 6)).as("coord"),
-        col("o"))
-    val wmk = Window.partitionBy(col("m"), col("k"))
-    nc.select(col("m"), col("k"), col("dim"), col("n_points"), col("coord"),
-        round((col("coord") - col("o")) * (col("coord") - col("o")), 9)
-          .cast(d9).as("mv"))
-      .select(col("m"), col("k"), col("dim"), col("n_points"), col("coord"),
-        round(sum(col("mv")).over(wmk).cast("double"), 6).as("movement"))
-      .orderBy("m", "k", "dim")
+        coalesce(col("n_points"), lit(0L)).as("n_points"),
+        coalesce(col("coord"), round(col("o"), 6)).as("coord"),
+        col("o")), Seq("m", "k"))
   }
 
   /** q_pca_power — one power-method iteration toward the corpus's
@@ -1406,7 +1349,6 @@ object Similarity {
     * float sums in partition order are not order-proof); the norm
     * chain runs once per dim in fixed order. */
   def qPcaPower(spark: SparkSession, dir: String): DataFrame = {
-    val d9 = org.apache.spark.sql.types.DecimalType(18, 9)
     val emb = Tables.embeddings(spark, dir)
     // v0 = ones: x·v0 is just the coordinate sum (a sequential fold)
     val s = aggregate(col("embedding"), lit(0.0), (acc, x) => acc + x.cast("double"))

@@ -1314,6 +1314,16 @@ object TextOps {
   val emailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+[.][A-Za-z]{2,}"
   val urlRe = "https?://[A-Za-z0-9./_%+#?=&-]+"
 
+  /** The synthetic corpus holds no PII, so every 7th document gets a
+    * deterministic doc_id-derived email+URL prepended to its text; the
+    * oracle SQL injects the identical string. */
+  private val piiInjected: Column =
+    when(col("doc_id") % 7 === 0,
+      concat(lit("contact user"), col("doc_id").cast("string"),
+        lit("@example.com via https://example.org/u/"),
+        col("doc_id").cast("string"), lit(" "), col("text")))
+      .otherwise(col("text"))
+
   /** PII scrubbing — the redaction pass an LLM training pipeline runs
     * before anything else ships: emails and URLs replaced by typed
     * placeholders, with per-document redaction counts for audit. The
@@ -1336,14 +1346,8 @@ object TextOps {
       md5(cleaned).as("clean_md5"))
   }
 
-  def qScrubPii(spark: SparkSession, dir: String): DataFrame = {
-    val injected = when(col("doc_id") % 7 === 0,
-      concat(lit("contact user"), col("doc_id").cast("string"),
-        lit("@example.com via https://example.org/u/"),
-        col("doc_id").cast("string"), lit(" "), col("text")))
-      .otherwise(col("text"))
-    scrubPii(Tables.documents(spark, dir), injected).orderBy("doc_id")
-  }
+  def qScrubPii(spark: SparkSession, dir: String): DataFrame =
+    scrubPii(Tables.documents(spark, dir), piiInjected).orderBy("doc_id")
 
   // ------------------------------------------------------ decontamination
 
@@ -1939,13 +1943,8 @@ object TextOps {
     * cluster-dedup variants cannot drift. */
   private def pipelineGatedDeduped(docs: DataFrame): DataFrame = {
     // stage 0: PII inject (the q_scrub_pii device) + scrub
-    val injected = when(col("doc_id") % 7 === 0,
-      concat(lit("contact user"), col("doc_id").cast("string"),
-        lit("@example.com via https://example.org/u/"),
-        col("doc_id").cast("string"), lit(" "), col("text")))
-      .otherwise(col("text"))
     val cleanedText = regexp_replace(
-      regexp_replace(injected, emailRe, "<EMAIL>"), urlRe, "<URL>")
+      regexp_replace(piiInjected, emailRe, "<EMAIL>"), urlRe, "<URL>")
     // checkpoint: every gate below re-reads the scrubbed corpus; without
     // this each would recompute the two regex passes over the raw scan
     val scrubbed = Checkpointer(docs.select(col("doc_id"), col("source"),

@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The contracts that need no Spark: one session factory, one training
-  * epoch loop, and the bench regression gate's choice of baseline. */
+  * epoch loop, one similarity ranking device, and the bench regression
+  * gate's choice of baseline. */
 class HarnessSpec extends AnyFunSuite {
 
   test("GraftSession is the only place src builds a session") {
@@ -25,6 +26,12 @@ class HarnessSpec extends AnyFunSuite {
     val src = Files.readString(Paths.get("src/main/scala/graft/ml/Trainers.scala"))
     val calls = "(?<!def )\\bepochRound\\(".r.findAllIn(src).size
     assert(calls == 1, s"epochRound has $calls call sites; route epochs through trainLoop")
+  }
+
+  test("Similarity ranks every top-n through one row_number device") {
+    val src = Files.readString(Paths.get("src/main/scala/graft/sim/Similarity.scala"))
+    val calls = "\\brow_number\\(\\)".r.findAllIn(src).size
+    assert(calls == 1, s"Similarity has $calls row_number() sites; rank through topN")
   }
 
   test("bench regression gate reads only a baseline with this run's cpus and sf") {

@@ -59,11 +59,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("IVF ANN recalls most brute-force neighbors") {
-    val emb = Tables.embeddings(spark, sfDir)
-    val queries = emb.filter($"vec_id" < 8)
-      .select($"vec_id".as("qid"), $"embedding".as("qe"))
-    val cands = emb.filter($"vec_id" >= 8)
-      .select($"vec_id".as("cid"), $"embedding".as("ce"))
+    val (queries, cands) = Similarity.querySplit(Tables.embeddings(spark, sfDir))
     val exact = Similarity.cosineTopK(queries, cands, 3)
       .select("qid", "cid").as[(Long, Long)].collect().toSet
     val ivf = Similarity.ivfTopK(queries, cands, 3, nCentroids = 8, nProbe = 3)
@@ -73,20 +69,26 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("IVF index persists: save/load/probe == inline build, lists partitioned by centroid") {
-    val emb = Tables.embeddings(spark, sfDir)
-    val queries = emb.filter($"vec_id" < 8)
-      .select($"vec_id".as("qid"), $"embedding".as("qe"))
-    val cands = emb.filter($"vec_id" >= 8)
-      .select($"vec_id".as("cid"), $"embedding".as("ce"))
+    val (queries, cands) = Similarity.querySplit(Tables.embeddings(spark, sfDir))
     val dir = java.nio.file.Files.createTempDirectory("ivf_idx").toString
     Similarity.saveIvfIndex(cands, dir, nCentroids = 8)
     val (centroids, lists) = Similarity.loadIvfIndex(spark, dir)
-    val probe = Similarity.ivfProbe(queries, centroids, lists, 3, nProbe = 3,
-      staticPrune = true)
+    val probe = Similarity.ivfProbe(queries, centroids, lists, 3, nProbe = 3)
     val fromDisk = probe.collect()
-    val inline = Similarity.ivfTopK(queries, cands, 3, nCentroids = 8, nProbe = 3).collect()
+    val inlineDf = Similarity.ivfTopK(queries, cands, 3, nCentroids = 8, nProbe = 3)
+    val inline = inlineDf.collect()
     assert(fromDisk.sameElements(inline),
       "probing the persisted index must equal the inline build")
+    // the inline build has no partitioned lists to prune, so it never
+    // pays the probed-ids collect: no centroid_id IN filter in its plan
+    val inlineIn = inlineDf.queryExecution.optimizedPlan.collect {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
+    }.flatMap(_.collect {
+      case p @ (_: org.apache.spark.sql.catalyst.expressions.In |
+                _: org.apache.spark.sql.catalyst.expressions.InSet)
+        if p.references.exists(_.name == "centroid_id") => p
+    })
+    assert(inlineIn.isEmpty, s"inline ivfTopK prunes its lists: $inlineIn")
     // the probed-ids partition filter reaches the lists scan (static
     // pruning — the probe reads only the probed centroid directories)
     val listScans = PlanAudit.nodes(PlanAudit.executedPlan(probe)).collect {
@@ -112,17 +114,6 @@ class SimilaritySpec extends SparkSpec {
       .select($"vec_id".as("cid"), $"embedding".as("ce"))
     val ivf = Similarity.ivfTopK(queries, cands, 3, nCentroids = 16, nProbe = 16)
     assert(ivf.count() == 4 * 3, "IVF dropped results on a small corpus")
-  }
-
-  test("VectorAverage aggregator averages element-wise, distributed") {
-    val df = Seq(
-      (0, Seq(1.0, 2.0, 3.0)), (0, Seq(3.0, 4.0, 5.0)),
-      (1, Seq(10.0, 0.0, 0.0))).toDF("g", "v").repartition(4)
-    val got = df.groupBy($"g")
-      .agg(graft.vec.VectorAverage.avgVec($"v").as("avg"))
-      .as[(Int, Seq[Double])].collect().toMap
-    assert(got(0) == Seq(2.0, 3.0, 4.0))
-    assert(got(1) == Seq(10.0, 0.0, 0.0))
   }
 
   test("embedding near-dup pairs are symmetric-free (a<b) and thresholded") {
@@ -467,11 +458,7 @@ class SimilaritySpec extends SparkSpec {
     // the full corpus — every (qid, cid) in the output must lie in
     // probes ⋈ lists (the candidate set the IVF pruning admits), which
     // is an execution-level proof, not a plan-shape heuristic
-    val emb = graft.Tables.embeddings(spark, sfDir)
-    val queries = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val cands = emb.filter(col("vec_id") >= 8)
-      .select(col("vec_id").as("cid"), col("embedding").as("ce"))
+    val (queries, cands) = Similarity.querySplit(graft.Tables.embeddings(spark, sfDir))
     val (lists, probes) = Similarity.ivfPqParts(queries, cands, 16, 4)
     val admitted = probes.join(lists, Seq("centroid_id"))
       .select("qid", "cid").collect()
@@ -503,11 +490,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("IVF+PQ index persists: save/load/probe == inline serving, codes partitioned by centroid") {
-    val emb = graft.Tables.embeddings(spark, sfDir)
-    val queries = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val cands = emb.filter(col("vec_id") >= 8)
-      .select(col("vec_id").as("cid"), col("embedding").as("ce"))
+    val (queries, cands) = Similarity.querySplit(graft.Tables.embeddings(spark, sfDir))
     val dir = java.nio.file.Files.createTempDirectory("ivfpq_idx").toString
     Similarity.saveIvfPqIndex(cands, dir)
     // the inverted-file layout is real: one directory per centroid list
